@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 object Bench {
   /** Materialize EVERY column through the noop v2 sink. A bare `count()`
     * lets Catalyst prune the projection — a pure project+sort query
@@ -18,36 +18,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Same sweep knobs as Verify (SPARK_GRAFT_ANSI / SPARK_GRAFT_CONF):
-    // the correctness matrix runs axes the perf harness previously
-    // could not measure — e.g. what forced-SMJ (no auto-broadcast) or
-    // spill mode actually COSTS. Defaults unchanged: the driver's bench
-    // sets neither, so the committed artifact is always the plain axis.
-    // SPARK_GRAFT_SHUFFLE_PARTITIONS decouples the shuffle fan-out from
-    // the core count for the CORE-SCALING probe (r18 verdict #2): with
-    // partitions tied to cpus, an 8-core run also schedules 4x fewer
-    // partitions and wall time barely moves, so the 8-vs-32 pair reads
-    // flat on every query. Pinning partitions (e.g. 32) across both runs
-    // makes the ratio measure parallelism, not partition-count noise.
-    // Unset (the driver's default), behavior is unchanged: partitions =
-    // cpus.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // bounded replays at bench scale: 4 state partitions beats the
-      // default 8 (state-store commit overhead dominates; see
-      // EventStream.ReplayPartitionsKey scaladoc for cluster sizing)
-      .config(graft.streaming.EventStream.ReplayPartitionsKey, "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", sys.env.getOrElse("SPARK_GRAFT_ANSI", "true"))
-      .config("spark.ui.enabled", "false")
-    val spark = Verify.parseConf(sys.env.get("SPARK_GRAFT_CONF"))
-      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     // Steady-state measurement: one untimed warm pass of every query AT
     // THE TARGET SF, then THREE timed passes reported as the per-query
     // and total MEDIAN. The warm pass absorbs plan analysis, codegen/JIT,
@@ -60,7 +31,7 @@ object Bench {
     // oracle-bearing surface + the steady-state operator twins
     // (BenchOps: index prebuilt outside the timed region) so operator
     // regressions aren't masked by in-query verification cost
-    val all = (SparkEntry.queries ++ graft.queries.BenchOps.ops).toSeq.sortBy(_._1)
+    val all = Harness.registry.toSeq.sortBy(_._1)
     // SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the surface for iteration
     // (mirrors Verify's SPARK_GRAFT_ONLY); full runs leave it unset
     val queries = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.io.Sinks
 import graft.llm.Curation
@@ -29,12 +28,7 @@ object RunCurate {
     val minQ = if (args.length > 2) args(2).toDouble else 0.4
     val budget = if (args.length > 3) args(3).toInt else 512
     val tokensPerSource = if (args.length > 4) args(4).toLong else 0L
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     val t0 = System.nanoTime()
 
     val raw = spark.read.parquet(in)

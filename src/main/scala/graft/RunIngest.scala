@@ -32,56 +32,34 @@ object RunIngest {
       "usage: RunIngest <batch.parquet> <stateDir> [minJaccard] [w] [k] [bands] | " +
         "RunIngest --embed <batch.parquet> <stateDir> [minCos] [dim] [planes] [bands] | " +
         "RunIngest --compact <stateDir> <deleted.parquet>")
-    if (args(0) == "--embed") {
+    if (args(0) == "--embed")
       require(args.length >= 3, "usage: RunIngest --embed <batch.parquet> <stateDir> ...")
-      val spark = SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-        .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      println(ingestEmbedOnce(spark, args(1), args(2),
-        minCos = if (args.length > 3) args(3).toDouble else 0.45,
-        dim = if (args.length > 4) args(4).toInt else 64,
-        nPlanes = if (args.length > 5) args(5).toInt else 16,
-        nBands = if (args.length > 6) args(6).toInt else 8))
-      return
-    }
-    if (args(0) == "--compact") {
+    if (args(0) == "--compact")
       require(args.length >= 3, "usage: RunIngest --compact <stateDir> <deleted.parquet>")
-      val spark = SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-        .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      println(compactOnce(spark, args(1), spark.read.parquet(args(2))))
-      return
+    val spark = Session.build()
+    args(0) match {
+      case "--embed" =>
+        println(ingestEmbedOnce(spark, args(1), args(2),
+          minCos = if (args.length > 3) args(3).toDouble else 0.45,
+          dim = if (args.length > 4) args(4).toInt else 64,
+          nPlanes = if (args.length > 5) args(5).toInt else 16,
+          nBands = if (args.length > 6) args(6).toInt else 8))
+      case "--compact" =>
+        println(compactOnce(spark, args(1), spark.read.parquet(args(2))))
+      case in =>
+        val state = args(1)
+        val minJ = if (args.length > 2) args(2).toDouble else 0.5
+        val w = if (args.length > 3) args(3).toInt else 5
+        val k = if (args.length > 4) args(4).toInt else 64
+        val bands = if (args.length > 5) args(5).toInt else 32
+        println(ingestOnce(spark, in, state, minJ, w, k, bands))
     }
-    val (in, state) = (args(0), args(1))
-    val minJ = if (args.length > 2) args(2).toDouble else 0.5
-    val w = if (args.length > 3) args(3).toInt else 5
-    val k = if (args.length > 4) args(4).toInt else 64
-    val bands = if (args.length > 5) args(5).toInt else 32
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val summary = ingestOnce(spark, in, state, minJ, w, k, bands)
-    println(summary)
   }
 
   /** The ingest step, spark-session-injected for specs. Returns the
-    * one-line JSON summary it also prints. `summarize = false` skips the
-    * O(at-rest-state) total recounts (production ingest keeps running
-    * totals in a manifest instead of rescanning the state per batch;
-    * DevScale's per-batch timings use this so the measured cost is the
-    * probe + roll, not the reporting). */
+    * one-line JSON summary it also prints. */
   def ingestOnce(spark: SparkSession, in: String, state: String,
-      minJ: Double = 0.5, w: Int = 5, k: Int = 64, bands: Int = 32,
-      summarize: Boolean = true): String = {
+      minJ: Double = 0.5, w: Int = 5, k: Int = 64, bands: Int = 32): String = {
     val indexPath = s"$state/index"
     val docsPath = s"$state/docs"
     val pairsPath = s"$state/pairs"
@@ -109,8 +87,6 @@ object RunIngest {
     batch.write.mode("append").parquet(docsPath)
     val nBatch = batch.count()
     val nNew = pairs.count()
-    if (!summarize)
-      return s"""{"batch_docs":$nBatch,"new_pairs":$nNew}"""
     val nTotal = spark.read.parquet(pairsPath).count()
     val nIndex = spark.read.parquet(indexPath).count()
     s"""{"batch_docs":$nBatch,"new_pairs":$nNew,"total_pairs":$nTotal,"index_rows":$nIndex}"""
@@ -143,8 +119,7 @@ object RunIngest {
     * (measured OOM at 200k vectors; DevScale ingest12 builds the at-rest
     * state via [[Dedup.cosineIndex]] instead and ingests deltas). */
   def ingestEmbedOnce(spark: SparkSession, in: String, state: String,
-      minCos: Double = 0.45, dim: Int = 64, nPlanes: Int = 16, nBands: Int = 8,
-      summarize: Boolean = true): String = {
+      minCos: Double = 0.45, dim: Int = 64, nPlanes: Int = 16, nBands: Int = 8): String = {
     val indexPath = s"$state/index"
     val vecsPath = s"$state/vecs"
     val pairsPath = s"$state/pairs"
@@ -166,8 +141,6 @@ object RunIngest {
     batch.write.mode("append").parquet(vecsPath)
     val nBatch = batch.count()
     val nNew = pairs.count()
-    if (!summarize)
-      return s"""{"batch_vecs":$nBatch,"new_pairs":$nNew}"""
     val nTotal = spark.read.parquet(pairsPath).count()
     val nIndex = spark.read.parquet(indexPath).count()
     s"""{"batch_vecs":$nBatch,"new_pairs":$nNew,"total_pairs":$nTotal,"index_rows":$nIndex}"""

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.fixtures.RefFixture
 import graft.pipeline.EdaPipeline
 
@@ -13,13 +12,7 @@ import graft.pipeline.EdaPipeline
   */
 object RunPipeline {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     val (inputDir, outDir) = args match {
       case Array("--fixture", out) =>
         val fx = java.nio.file.Files.createTempDirectory("graft_fixture").toString

@@ -31,12 +31,7 @@ object RunQuality {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: RunQuality <current.parquet> <outDir> [referenceParquet] [groupCol] [psiAction]")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     gateOnce(spark, args(0), args(1),
       refPath = if (args.length > 2 && args(2).nonEmpty) Some(args(2)) else None,
       groupCol = if (args.length > 3 && args(3).nonEmpty) Some(args(3)) else None,

@@ -1,15 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Local smoke: runs SparkEntry.entry (the driver's t1 gate) and prints
   * the rows — run with `sbt "runMain graft.Smoke"`. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     val df = SparkEntry.entry(spark)
     val rows = df.collect()
     rows.foreach(r => println(s"[smoke] $r"))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. A query that
@@ -25,54 +24,26 @@ object Verify {
   private[graft] def jsonObj(kv: Iterable[(String, String)]): String =
     kv.map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
 
-  /** Parse the `SPARK_GRAFT_CONF` sweep knob ("k1=v1;k2=v2"). Entries
-    * are ';'-split unconditionally, so VALUES MAY NOT CONTAIN ';'
-    * (documented in the verify skill); an entry without '=' used to die
-    * with an opaque MatchError — fail with a message naming the bad
-    * token instead, so a typo'd sweep axis is a one-glance fix. Shared
-    * by Verify and Bench so a sweep axis can be both gated and timed. */
-  private[graft] def parseConf(env: Option[String]): Seq[(String, String)] =
-    env.toSeq.flatMap(_.split(";")).map(_.trim).filter(_.nonEmpty)
-      .map { kv =>
-        val i = kv.indexOf('=')
-        require(i > 0,
-          s"SPARK_GRAFT_CONF entry '$kv' is not key=value (format: k1=v1;k2=v2; " +
-            "values may not contain ';')")
-        (kv.substring(0, i).trim, kv.substring(i + 1).trim)
-      }
-
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // ANSI-mode sweep axis: Spark 4's DEFAULT is ansi.enabled=true, so
-    // the gate has ALWAYS run ANSI-on (r15's t23 sf0.001 crash was a
-    // live ANSI DIVIDE_BY_ZERO — proof the mode is active). The knob
-    // exists for the OPPOSITE sweep: SPARK_GRAFT_ANSI=false re-runs the
-    // surface under legacy silent-null arithmetic, catching any query
-    // whose RESULT (not just error behavior) depends on the mode.
-    val ansi = sys.env.getOrElse("SPARK_GRAFT_ANSI", "true")
-    // Generic sweep-axis knob: SPARK_GRAFT_CONF="k1=v1;k2=v2" lets a
-    // sweep pin ANY session conf without code churn — used for the
-    // interpreted-vs-codegen parity axis (codegen.wholeStage=false +
-    // codegen.factoryMode=NO_CODEGEN exercises the custom expressions'
-    // nullSafeEval paths against the same oracle) and the AQE-off axis.
-    val extraConf = parseConf(sys.env.get("SPARK_GRAFT_CONF"))
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", ansi)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = extraConf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=q1,q2 restricts the dump — iteration aid; the
-    // driver never sets it, so the gate always runs the full surface
+    // SPARK_GRAFT_ONLY=q1,q2 restricts the dump AND oracle_sql.json to
+    // the named queries, so compare_oracle.py checks just those — an
+    // iteration aid; the driver never sets it, so the gate always runs
+    // (and writes the oracle for) the full surface
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    only.foreach { names =>
+      val unknown = names.filterNot(SparkEntry.queries.contains)
+      require(unknown.isEmpty, s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.mkString(", ")}")
+    }
     val selected = SparkEntry.queries.filter {
       case (name, _) => only.forall(_.contains(name))
+    }
+    val oracle = only match {
+      case Some(names) => SparkEntry.oracleSql.filter { case (name, _) => names.contains(name) }
+      case None => SparkEntry.oracleSql
     }
     val failed = scala.collection.mutable.LinkedHashMap[String, String]()
     selected.foreach { case (name, fn) =>
@@ -84,7 +55,7 @@ object Verify {
         System.err.println(s"[verify] $name FAILED: $msg")
       }
     }
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), jsonObj(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), jsonObj(oracle))
     Files.writeString(Paths.get(s"$outDir/failed.json"), jsonObj(failed))
     if (failed.nonEmpty)
       System.err.println(s"[verify] ${failed.size} queries failed: ${failed.keys.mkString(", ")}")

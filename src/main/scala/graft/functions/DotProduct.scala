@@ -68,39 +68,6 @@ case class DotProduct(left: Expression, right: Expression)
   override def prettyName: String = "dot_product"
 }
 
-/** SparkSessionExtensions hook: enable with
-  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")` —
-  * injects `dot_product` into every session's function registry at
-  * build time (the extension-point route for custom expressions). */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (children: Seq[Expression]) => DotProduct(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (children: Seq[Expression]) => NfcNormalize(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("strip_accents"),
-      new ExpressionInfo(classOf[StripAccents].getName, "strip_accents"),
-      (children: Seq[Expression]) => StripAccents(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("ngram_run_stats"),
-      new ExpressionInfo(classOf[NGramRunStats].getName, "ngram_run_stats"),
-      (children: Seq[Expression]) => NGramRunStats(children(0),
-        children(1).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction((
-      FunctionIdentifier("distinct_shingles"),
-      new ExpressionInfo(classOf[DistinctShingles].getName, "distinct_shingles"),
-      (children: Seq[Expression]) => DistinctShingles(children(0),
-        children(1).eval().asInstanceOf[Number].intValue())))
-    // bound full-DP levenshtein evaluations that feed a distance filter
-    ext.injectOptimizerRule(_ => graft.plans.ThresholdedLevenshtein)
-  }
-}
-
 object GraftFunctions {
 
   /** Column-API entry: `dot_product(a, b)`. */

@@ -307,8 +307,8 @@ object Similarity {
       }.toDF(idName, vecName)
   }
 
-  /** The pre-window stage of [[bruteForceTopK]], exposed so DevScale can
-    * count the rows that actually enter the per-query window. Query set
+  /** The pre-window stage of [[bruteForceTopK]] and [[mipsBruteTopK]]:
+    * the rows that actually enter the per-query window. Query set
     * broadcast as primitive arrays; the corpus streams through a
     * mapPartitions dense kernel (a query⨯corpus non-equi join would be
     * an interpreted BroadcastNestedLoopJoin — ~30× slower measured).
@@ -316,7 +316,7 @@ object Similarity {
     * and emits only its local top-k, so the per-query window merges
     * ≤ partitions×k rows instead of sorting the whole corpus's scores
     * in one reducer per query. */
-  private[graft] def bruteScoredLocalTopK(
+  private def bruteScoredLocalTopK(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       maxQueries: Int = DefaultMaxQueries, dotScore: Boolean = false): DataFrame = {

@@ -13,16 +13,6 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Test-only visibility shims: `SparkSessionExtensions`' build methods
-    * are `private[sql]`, so the spec that proves `GraftExtensions`
-    * actually injects its functions and optimizer rule goes through
-    * here. */
-  def builtOptimizerRules(ext: org.apache.spark.sql.SparkSessionExtensions,
-      session: org.apache.spark.sql.SparkSession)
-      : Seq[org.apache.spark.sql.catalyst.rules.Rule[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
-    ext.buildOptimizerRules(session)
-
   /** Plan a (resolved) logical plan to a physical plan — test-only, for
     * the plan-shape guards: at the `sparkPlan` stage a subquery
     * expression still wraps its LOGICAL plan (physical subquery planning
@@ -36,20 +26,11 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.executePlan(plan).sparkPlan
 
-  /** Block until the listener bus has delivered every queued event —
-    * profiling tools attribute job/stage/task counts to the query that
+  /** Block until the listener bus has delivered every queued event, or
+    * throw `java.util.concurrent.TimeoutException` after `timeoutMillis`
+    * — profiling tools attribute job/stage/task counts to the query that
     * just ran, and the bus is asynchronous (`listenerBus` is
     * `private[spark]`, reachable from this package). */
-  def waitListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sparkContext.listenerBus.waitUntilEmpty()
-
-  def injectedFunctionNames(
-      ext: org.apache.spark.sql.SparkSessionExtensions): Seq[String] = {
-    // registerFunctions folds the injected entries into a registry; use a
-    // throwaway clone of the session's registry to observe what lands
-    val reg = org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin.clone()
-    val before = reg.listFunction().map(_.unquotedString).toSet
-    ext.registerFunctions(reg)
-    reg.listFunction().map(_.unquotedString).filterNot(before).sorted
-  }
+  def waitListenerBus(spark: org.apache.spark.sql.SparkSession, timeoutMillis: Long): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMillis)
 }

@@ -54,7 +54,7 @@ class DotProductSpec extends SparkSpec {
     assert(reg.functionExists(FunctionIdentifier("dot_product")))
     reg.dropFunction(FunctionIdentifier("dot_product"))
     assert(!reg.functionExists(FunctionIdentifier("dot_product")))
-    GraftFunctions.register(spark) // what GraftExtensions does at session build
+    GraftFunctions.register(spark)
     assert(spark.sql("SELECT dot_product(array(3.0d), array(5.0d))").collect()(0)
       .getDouble(0) === 15.0)
   }

@@ -85,72 +85,6 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftSemi"), p)
   }
 
-  test("ThresholdedLevenshtein rule: rewrites to the banded form, preserves results, idempotent") {
-    import spark.implicits._
-    // reference distances computed in Scala; strings include equal-length,
-    // wildly-different-length, and null cases
-    def lev(a: String, b: String): Int = {
-      val d = Array.tabulate(a.length + 1, b.length + 1)((i, j) => if (j == 0) i else if (i == 0) j else 0)
-      for (i <- 1 to a.length; j <- 1 to b.length)
-        d(i)(j) = math.min(math.min(d(i - 1)(j) + 1, d(i)(j - 1) + 1),
-          d(i - 1)(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
-      d(a.length)(b.length)
-    }
-    val rnd = new scala.util.Random(11)
-    def rs(): String = Seq.fill(rnd.nextInt(7))("ab" (rnd.nextInt(2))).mkString
-    val pairs = (1 to 120).map(i => (i.toLong, rs(), rs())) :+ ((121L, null, "ab")): Seq[(Long, String, String)]
-    // go through parquet so ConvertToLocalRelation can't pre-evaluate the filter
-    val dir = java.nio.file.Files.createTempDirectory("graft_lev").toString
-    pairs.toDF("id", "a", "b").write.mode("overwrite").parquet(dir)
-    val src = spark.read.parquet(dir)
-    val expected = pairs.filter(p => p._2 != null && p._3 != null && lev(p._2, p._3) <= 2)
-      .map(_._1).toSet
-    val plain = src.where(levenshtein(col("a"), col("b")) <= 2)
-    assert(plain.collect().map(_.getLong(0)).toSet === expected)
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ graft.plans.ThresholdedLevenshtein
-    try {
-      val ruled = src.where(levenshtein(col("a"), col("b")) <= 2)
-      val opt = ruled.queryExecution.optimizedPlan
-      assert(opt.toString.contains("Some(2)) >= 0"), opt)        // thresholded form present
-      assert(opt.toString.contains("abs((length(a"), opt)        // length guard injected
-      assert(ruled.collect().map(_.getLong(0)).toSet === expected)
-      // strict bound too (< 3 ≡ <= 2)
-      val strict = src.where(levenshtein(col("a"), col("b")) < 3)
-      assert(strict.collect().map(_.getLong(0)).toSet === expected)
-      // idempotent: reapplying rewrites nothing
-      val once = graft.plans.ThresholdedLevenshtein(opt)
-      assert(once fastEquals graft.plans.ThresholdedLevenshtein(once))
-    } finally spark.experimental.extraOptimizations = prev
-    // a NULL threshold literal must NOT rewrite: `lev <= NULL` is
-    // always null (drops every row) while the banded form with the
-    // unboxed-0 threshold would keep equal strings. NullPropagation
-    // usually folds the null form first, but that ordering is not
-    // contractual under extraOptimizations, so the rule itself refuses.
-    locally {
-      import org.apache.spark.sql.catalyst.expressions.{
-        LessThanOrEqual, Levenshtein => CatLev, Literal => CatLit}
-      import org.apache.spark.sql.catalyst.plans.logical.{Filter => CatFilter}
-      import org.apache.spark.sql.types.IntegerType
-      val base = src.queryExecution.analyzed
-      val a = base.output.find(_.name == "a").get
-      val b = base.output.find(_.name == "b").get
-      val plan = CatFilter(
-        LessThanOrEqual(CatLev(a, b, None), CatLit(null, IntegerType)), base)
-      assert(graft.plans.ThresholdedLevenshtein(plan) fastEquals plan)
-    }
-  }
-
-  test("GraftExtensions injects all functions and the optimizer rule") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.functions.GraftExtensions().apply(ext)
-    val fns = org.apache.spark.sql.graftbridge.Bridge.injectedFunctionNames(ext)
-    assert(fns === Seq("distinct_shingles", "dot_product", "ngram_run_stats",
-      "nfc_normalize", "strip_accents").sorted, fns)
-    val rules = org.apache.spark.sql.graftbridge.Bridge.builtOptimizerRules(ext, spark)
-    assert(rules.contains(graft.plans.ThresholdedLevenshtein), rules)
-  }
-
   test("x26: bm25 broadcasts the query dictionary; top-k is WindowGroupLimit") {
     val p = plan("x26_bm25")
     // the term-dictionary prune and the df/stats/query reattach joins
