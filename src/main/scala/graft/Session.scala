@@ -14,9 +14,10 @@ import org.apache.spark.sql.SparkSession
   *     Spark 4 already defaults to ANSI, so the plain run is strict mode;
   *     the knob exists for the opposite sweep, `SPARK_GRAFT_ANSI=false`,
   *     which re-runs a surface under legacy silent-null arithmetic
-  *   - bounded stream replays at 4 state partitions (state-store commit
-  *     overhead dominates at bench scale; see
-  *     [[graft.streaming.EventStream.ReplayPartitionsKey]])
+  *   - bounded stream replays at
+  *     [[graft.streaming.EventStream.DefaultReplayPartitions]] (4) state
+  *     partitions (state-store commit overhead dominates at bench scale;
+  *     see [[graft.streaming.EventStream.ReplayPartitionsKey]])
   *   - no UI
   *   - `SPARK_GRAFT_CONF="k1=v1;k2=v2"` pins any other session conf,
   *     applied last so it overrides everything above (codegen-off,
@@ -38,7 +39,8 @@ object Session {
       .config("spark.sql.shuffle.partitions", n.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.ansi.enabled", sys.env.getOrElse("SPARK_GRAFT_ANSI", "true"))
-      .config(graft.streaming.EventStream.ReplayPartitionsKey, "4")
+      .config(graft.streaming.EventStream.ReplayPartitionsKey,
+        graft.streaming.EventStream.DefaultReplayPartitions.toString)
       .config("spark.ui.enabled", "false")
     parseConf(sys.env.get("SPARK_GRAFT_CONF"))
       .foldLeft(base) { case (b, (k, v)) => b.config(k, v) }

@@ -14,8 +14,7 @@ object StreamQueries {
   val all: Seq[Q] = Seq(
     Q("st1_stream_window",
       (s, d) => {
-        val sink = s"st1_sink_${System.nanoTime()}"
-        EventStream.runWindowedOnce(s, s"$d/events.parquet", sink, window = "1 day")
+        EventStream.runWindowedOnce(s, s"$d/events.parquet", window = "1 day")
           .select(
             date_format(col("window_start"), "yyyy-MM-dd").as("day"),
             col("event_type"), col("n"), col("sum_value"))
@@ -30,8 +29,7 @@ object StreamQueries {
     // table has a pure-SQL twin.
     Q("st3_stream_enriched",
       (s, d) => {
-        val sink = s"st3_sink_${System.nanoTime()}"
-        EventStream.runEnrichedOnce(s, s"$d/events.parquet", sink, window = "1 day")
+        EventStream.runEnrichedOnce(s, s"$d/events.parquet", window = "1 day")
           .select(
             date_format(col("window_start"), "yyyy-MM-dd").as("day"),
             col("category"), col("n"), col("sum_value"))
@@ -54,8 +52,7 @@ object StreamQueries {
     // (h2/h6's maintenance caveat applies to both flags).
     Q("st13_stream_hll_window",
       (s, d) => {
-        val sink = s"st13_sink_${System.nanoTime()}"
-        val streamed = EventStream.runHllWindowOnce(s, s"$d/events.parquet", sink)
+        val streamed = EventStream.runHllWindowOnce(s, s"$d/events.parquet")
           .select(date_format(col("window_start"), "yyyy-MM-dd").as("day"),
             col("event_type"), col("n_est"))
         val batch = graft.core.Tables.readEvents(s, d)
@@ -98,14 +95,6 @@ object StreamQueries {
               |MIN(value) AS min_value, MAX(value) AS max_value
               |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)),
 
-    // NATIVE session_window sessionization (state-store session merge +
-    // watermark eviction) — the third sessionization path next to the
-    // batch lag+cumsum (st2) and the custom flatMapGroupsWithState
-    // (st4), preferred in production when per-session logic is pure
-    // aggregation. Per-user rollup of the emitted sessions; the oracle
-    // replays the INCLUSIVE merge boundary (break strictly > gap) in
-    // micros — durations included, so merge semantics are value-checked,
-    // not just counts.
     // Streaming DRIFT MONITOR (dq13 served incrementally): the current
     // slice's per-category counts are maintained as a streaming k-row
     // count MV (EventStream.runCountMvOnce — integer partials fold per
@@ -156,10 +145,17 @@ object StreamQueries {
              |  SQRT(chi2 / (n_ref + n_cur)) > 0.1 AS drifted
              |FROM agg""".stripMargin)),
 
+    // NATIVE session_window sessionization (state-store session merge +
+    // watermark eviction) — the third sessionization path next to the
+    // batch lag+cumsum (st2) and the custom flatMapGroupsWithState
+    // (st4), preferred in production when per-session logic is pure
+    // aggregation. Per-user rollup of the emitted sessions; the oracle
+    // replays the INCLUSIVE merge boundary (break strictly > gap) in
+    // micros — durations included, so merge semantics are value-checked,
+    // not just counts.
     Q("st14_session_window",
       (s, d) => {
-        val sink = s"st14_sink_${System.nanoTime()}"
-        EventStream.runSessionWindowOnce(s, s"$d/events.parquet", sink)
+        EventStream.runSessionWindowOnce(s, s"$d/events.parquet")
           .groupBy(col("user_id"))
           .agg(count(lit(1)).as("n_sessions"),
             sumLong(col("n_events")).as("n_events"),
@@ -194,8 +190,7 @@ object StreamQueries {
     // histograms differ where a gap sits between 1800.000s and 1800.999s.
     Q("st4_stream_sessions",
       (s, d) => {
-        val sink = s"st4_sink_${System.nanoTime()}"
-        EventStream.runSessionizeOnce(s, s"$d/events.parquet", sink)
+        EventStream.runSessionizeOnce(s, s"$d/events.parquet")
           .groupBy(col("nEvents").cast("long").as("n_events"))
           .agg(count(lit(1)).as("n_sessions"))
           .orderBy(col("n_events"))
@@ -224,8 +219,7 @@ object StreamQueries {
     // interval join in batch SQL on epoch micros.
     Q("st5_stream_interval_join",
       (s, d) => {
-        val sink = s"st5_sink_${System.nanoTime()}"
-        EventStream.runIntervalJoinOnce(s, s"$d/events.parquet", sink, windowHours = 24)
+        EventStream.runIntervalJoinOnce(s, s"$d/events.parquet", windowHours = 24)
           .groupBy(col("user_id"))
           .agg(count(lit(1)).as("n_pairs"), sumExact(col("value")).as("sum_purchase"))
           .orderBy(col("user_id"))
@@ -247,8 +241,7 @@ object StreamQueries {
     // null-extended rows, proving the outer semantics actually fired.
     Q("st7_stream_left_outer_join",
       (s, d) => {
-        val sink = s"st7_sink_${System.nanoTime()}"
-        EventStream.runIntervalJoinLeftOuterOnce(s, s"$d/events.parquet", sink, windowHours = 24)
+        EventStream.runIntervalJoinLeftOuterOnce(s, s"$d/events.parquet", windowHours = 24)
           .groupBy(col("user_id"))
           .agg(
             count(lit(1)).as("n_rows"),
@@ -274,8 +267,7 @@ object StreamQueries {
     // original table — the full-oracle contract for dedupStream.
     Q("st6_stream_dedup",
       (s, d) => {
-        val sink = s"st6_sink_${System.nanoTime()}"
-        EventStream.runDedupOnce(s, s"$d/events.parquet", sink)
+        EventStream.runDedupOnce(s, s"$d/events.parquet")
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"), sumExact(col("value")).as("sum_value"))
           .orderBy(col("event_type"))
@@ -283,12 +275,6 @@ object StreamQueries {
       Some(s"""SELECT event_type, COUNT(*) AS n, ${sumExactSql("value")} AS sum_value
               |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)),
 
-    // Arbitrary-state streaming (Spark 4 transformWithState, RocksDB
-    // state store): per-user running profile — ValueState totals (count +
-    // long-micro value sum, accumulation-order-proof) and a ListState of
-    // the 5 most recent event ids by (ts, id). The replayed cumulative
-    // profile equals the batch answer; sums stay in integer micros so the
-    // hash compare is exact.
     // Continuous-ingest merge: the changelog streamed in 4 micro-batches
     // upserts a key-latest state table (foreachBatch + latestWins, the
     // lakehouse MERGE loop). Final state ≡ batch latest-per-key — the
@@ -378,10 +364,15 @@ object StreamQueries {
              |WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
              |  CAST(b.embedding AS DOUBLE[])) >= 0.45""".stripMargin)),
 
+    // Arbitrary-state streaming (Spark 4 transformWithState, RocksDB
+    // state store): per-user running profile — ValueState totals (count +
+    // long-micro value sum, accumulation-order-proof) and a ListState of
+    // the 5 most recent event ids by (ts, id). The replayed cumulative
+    // profile equals the batch answer; sums stay in integer micros so the
+    // hash compare is exact.
     Q("st8_stream_profile",
       (s, d) => {
-        val sink = s"st8_sink_${System.nanoTime()}"
-        EventStream.runProfileOnce(s, s"$d/events.parquet", sink)
+        EventStream.runProfileOnce(s, s"$d/events.parquet")
           .select(col("userId").as("user_id"), col("nEvents").as("n_events"),
             col("sumMicros").as("sum_micros"), col("recent5"))
           .orderBy(col("user_id"))
@@ -408,8 +399,7 @@ object StreamQueries {
     // is specced (2-vs-4 chunk invariance, StreamingSpec).
     Q("st12_stream_anomaly",
       (s, d) => {
-        val sink = s"st12_sink_${System.nanoTime()}"
-        EventStream.runAnomalyOnce(s, s"$d/events.parquet", sink)
+        EventStream.runAnomalyOnce(s, s"$d/events.parquet")
           .groupBy(col("userId"))
           .agg(
             count(lit(1)).as("n_events"),

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -32,14 +33,19 @@ object EventStream {
   }
 
   /** Session conf knob for the bounded-replay state-partition cap (see
-    * [[withReplayPartitions]]). Default 8 suits local bounded replays;
-    * a cluster deployment streaming at rate should RAISE it toward its
+    * [[withReplayPartitions]]). Unset, the cap is
+    * [[DefaultReplayPartitions]], which suits local bounded replays; a
+    * cluster deployment streaming at rate should RAISE it toward its
     * executor-core count (state partitions are the parallelism unit of
     * every stateful operator) — e.g. 200–400 on a 100-executor job —
     * since the cap only pays off when per-partition state-store commit
     * overhead dominates, which is a bounded-replay trait, not a
     * production-stream one. */
   val ReplayPartitionsKey = "spark.graft.streaming.replayPartitions"
+
+  /** The replay cap every [[graft.Session]] sets, and the one an unset
+    * [[ReplayPartitionsKey]] falls back to. */
+  private[graft] val DefaultReplayPartitions = 4
 
   /** Test-only micro-batch PLAN probe (StreamingPlanShapeSpec): when
     * non-null, every `foreachBatch` runner offers its per-batch derived
@@ -68,47 +74,123 @@ object EventStream {
     * other (previously a literal 1000 in four places). */
   private[graft] val SliceWidth = 1000L
 
-  /** Session conf knob re-enabling AQE inside bounded replays (see
-    * [[withReplayPartitions]]). Default off DURING A REPLAY: the
-    * per-micro-batch fold is the same fixed plan over an explicitly
-    * capped partition count every trigger, so adaptive re-optimization
-    * has nothing to adapt — it only adds per-batch re-planning latency
-    * and one scheduler job per materialized shuffle stage (censused:
-    * ~20–30 single-task jobs per MV replay, the family's dominant
-    * cost). A deployment folding large skewed batches can flip this
-    * back on. */
-  val ReplayAqeKey = "spark.graft.streaming.replayAqe"
-
   /** Bounded-replay sizing: each stateful operator commits one state
     * store per shuffle partition per micro-batch, so a replay over ~1e5
     * rows pays pure per-partition overhead at 32 partitions (measured 2×
     * on the stream-stream join: 5.6 s → 3.1 s steady at 8). Production
     * streams size `spark.sql.shuffle.partitions` to their rate; replays
-    * cap it at `spark.graft.streaming.replayPartitions` (default 8) and
-    * restore the session value afterwards. AQE is scoped off for the
-    * replay window unless [[ReplayAqeKey]] says otherwise — both confs
-    * are set BEFORE the stream starts, so the streaming query's cloned
-    * session inherits them, and restored after it terminates. */
+    * cap it at [[ReplayPartitionsKey]] (default [[DefaultReplayPartitions]])
+    * and restore the session value afterwards. AQE is off for the replay
+    * window: the per-micro-batch plan is the same fixed plan over an
+    * explicitly capped partition count every trigger, so adaptive
+    * re-optimization has nothing to adapt — it only adds per-batch
+    * re-planning latency and one scheduler job per materialized shuffle
+    * stage (censused: ~20–30 single-task jobs per MV replay, the family's
+    * dominant cost). Both confs are set BEFORE the stream starts, so the
+    * streaming query's cloned session inherits them, and restored after
+    * it terminates. */
   private[streaming] def withReplayPartitions[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val aqeKey = "spark.sql.adaptive.enabled"
     val prev = spark.conf.get(key)
     val prevAqe = spark.conf.get(aqeKey)
-    val cap = spark.conf.getOption(ReplayPartitionsKey).map(_.toInt).getOrElse(8)
+    val cap = spark.conf.getOption(ReplayPartitionsKey).map(_.toInt)
+      .getOrElse(DefaultReplayPartitions)
     require(cap >= 1, s"$ReplayPartitionsKey must be >= 1, got $cap")
-    val replayAqe = spark.conf.getOption(ReplayAqeKey).map(_.toBoolean).getOrElse(false)
     spark.conf.set(key, math.min(prev.toInt, cap).toString)
-    if (!replayAqe) spark.conf.set(aqeKey, "false")
+    spark.conf.set(aqeKey, "false")
     try body finally {
       spark.conf.set(key, prev)
       spark.conf.set(aqeKey, prevAqe)
     }
   }
 
-  private def rmTree(dir: java.nio.file.Path): Unit = {
+  /** Deletes `dir` and its contents; a missing dir is a no-op, since
+    * [[foldMvReplay]] removes its work dir itself before the enclosing
+    * [[withTempDir]] gets to it. */
+  private def rmTree(dir: Path): Unit = if (Files.exists(dir)) {
     import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverseIterator
-      .foreach(p => java.nio.file.Files.deleteIfExists(p))
+    Files.walk(dir).iterator().asScala.toSeq.reverseIterator
+      .foreach(p => Files.deleteIfExists(p))
+  }
+
+  /** Runs `body` on a fresh temp dir `prefix…` and deletes the dir when
+    * `body` returns OR throws, so a failed replay leaves nothing
+    * behind. Every frame a replay returns is already materialized (a
+    * memory sink's rows, or a `localCheckpoint`), so nothing reads the
+    * dir afterwards. */
+  private[streaming] def withTempDir[T](prefix: String)(body: Path => T): T = {
+    val dir = Files.createTempDirectory(prefix)
+    try body(dir) finally rmTree(dir)
+  }
+
+  /** Replay directory: the events input as a directory a file stream can
+    * read, for the length of `body`. FileStreamSource wants a directory
+    * and the corpus ships single files, so a file is exposed through a
+    * symlink in a temp dir (no data copied; a directory passes through
+    * as is). `rewrite` instead writes a fresh copy into the temp dir —
+    * the sentinel-carrying replays, whose sentinel rows must carry the
+    * same ts encoding as the data. The temp dir is deleted as in
+    * [[withTempDir]]. */
+  private def withReplayDir[T](path: String, rewrite: Option[String => Unit] = None)(
+      body: String => T): T = {
+    val src = Paths.get(path)
+    if (rewrite.isEmpty && Files.isDirectory(src)) body(path)
+    else withTempDir("graft_stream") { d =>
+      rewrite match {
+        case Some(write) => write(d.toString)
+        case None => Files.createSymbolicLink(d.resolve(src.getFileName), src)
+      }
+      body(d.toString)
+    }
+  }
+
+  private val replaySeq = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Memory-sink replay: runs `frame` to completion (Trigger.AvailableNow)
+    * into a memory sink of its own name under [[withReplayPartitions]] and
+    * returns the sink's table. `rocksDb` scopes the state store provider
+    * to RocksDB for the replay and restores the session's afterwards.
+    * transformWithState requires RocksDB. A session-window replay holds
+    * EVERY session of the file in one micro-batch's state, which the
+    * default in-memory provider cannot spill (it OOMs at the ×100 gate);
+    * RocksDB is also the cluster-correct provider for session state at
+    * any real rate. */
+  private def replayToMemory(spark: SparkSession, frame: Dataset[_], mode: OutputMode,
+      rocksDb: Boolean = false): DataFrame = {
+    val name = s"graft_replay_${replaySeq.incrementAndGet()}"
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val prevProvider = spark.conf.getOption(providerKey)
+    if (rocksDb) spark.conf.set(providerKey,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try withReplayPartitions(spark) {
+      frame.writeStream
+        .queryName(name)
+        .outputMode(mode)
+        .format("memory")
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    } finally if (rocksDb) prevProvider match {
+      case Some(p) => spark.conf.set(providerKey, p)
+      case None => spark.conf.unset(providerKey)
+    }
+    spark.table(name)
+  }
+
+  /** Chunked source: writes `frame` range-chunked on `idCol` into
+    * `nChunks` files under `work/src` and returns the stream that reads
+    * them back one file per micro-batch — the multi-batch replay of the
+    * MV folds and the ingest loops. The stream's schema is the written
+    * frame's own, so no footer read is added. */
+  private[streaming] def chunkedSource(work: Path, frame: DataFrame, idCol: String,
+      nChunks: Int): DataFrame = {
+    val srcDir = work.resolve("src").toString
+    frame.repartitionByRange(nChunks, col(idCol)).write.mode("overwrite").parquet(srcDir)
+    frame.sparkSession.readStream
+      .schema(frame.schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(srcDir)
   }
 
   /** Shared replay loop for the MV-maintenance runners (merge/agg/
@@ -164,6 +246,16 @@ object EventStream {
     state
   }
 
+  /** The MV runners' replay: `cols` of the events at `path`, as a
+    * [[chunkedSource]] range-chunked on event_id into a fresh work dir
+    * (deleted afterwards, also on failure), folded by [[foldMvReplay]]. */
+  private def foldEventsMv(spark: SparkSession, path: String, nChunks: Int, cols: String*)(
+      fold: (Option[DataFrame], DataFrame) => DataFrame): DataFrame =
+    withTempDir("graft_stream_mv") { work =>
+      val events = graft.core.Tables.readEventsPath(spark, path).select(cols.map(col): _*)
+      foldMvReplay(spark, work, chunkedSource(work, events, "event_id", nChunks))(fold)
+    }
+
   /** Footer-derived raw schema of an events parquet path — `readStream`
     * requires an explicit schema, and hardcoding one breaks the moment the
     * producer changes `ts` encoding (INT64 TIMESTAMP(NANOS) surfaces as
@@ -202,33 +294,10 @@ object EventStream {
   /** Replay a bounded parquet events dir as a stream (Trigger.AvailableNow,
     * complete mode into a memory sink) and return the final window table —
     * the stream/batch parity surface. */
-  def runWindowedOnce(spark: SparkSession, path: String, sinkName: String,
-      window: String = "1 day"): DataFrame = {
-    val schema = rawEventSchema(spark, path)
-    // FileStreamSource wants a directory; the corpus ships single files —
-    // expose one via a symlink in a temp dir (no data copied).
-    val src = java.nio.file.Paths.get(path)
-    val dir =
-      if (java.nio.file.Files.isDirectory(src)) path
-      else {
-        val d = java.nio.file.Files.createTempDirectory("graft_stream")
-        java.nio.file.Files.createSymbolicLink(d.resolve(src.getFileName), src)
-        d.toString
-      }
-    val stream = normTs(spark.readStream.schema(schema).parquet(dir))
-    withReplayPartitions(spark) {
-      val q = windowedAgg(stream, window)
-        .writeStream
-        .queryName(sinkName)
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    // memory sink holds the rows on the driver; the symlink dir is done
-    if (dir != path) rmTree(java.nio.file.Paths.get(dir))
-    spark.table(sinkName)
+  def runWindowedOnce(spark: SparkSession, path: String,
+      window: String = "1 day"): DataFrame = withReplayDir(path) { dir =>
+    val stream = normTs(spark.readStream.schema(rawEventSchema(spark, path)).parquet(dir))
+    replayToMemory(spark, windowedAgg(stream, window), OutputMode.Complete())
   }
 
   /** Bounded replay of the stream-static ENRICHMENT shape (same
@@ -238,39 +307,21 @@ object EventStream {
     * (distinct event_type → its upper-cased 3-char prefix), so the result
     * is DuckDB-oracle-checkable while still driving a real per-batch
     * stream-static join. */
-  def runEnrichedOnce(spark: SparkSession, path: String, sinkName: String,
-      window: String = "1 day"): DataFrame = {
+  def runEnrichedOnce(spark: SparkSession, path: String,
+      window: String = "1 day"): DataFrame = withReplayDir(path) { dir =>
     val schema = rawEventSchema(spark, path)
-    val src = java.nio.file.Paths.get(path)
-    val dir =
-      if (java.nio.file.Files.isDirectory(src)) path
-      else {
-        val d = java.nio.file.Files.createTempDirectory("graft_stream")
-        java.nio.file.Files.createSymbolicLink(d.resolve(src.getFileName), src)
-        d.toString
-      }
     val dim = spark.read.schema(schema).parquet(dir)
       .select(col("event_type")).distinct()
       .withColumn("category", upper(substring(col("event_type"), 1, 3)))
     val stream = normTs(spark.readStream.schema(schema).parquet(dir))
-    withReplayPartitions(spark) {
-      val q = stream
-        .withWatermark("ts", "1 hour")
-        .join(org.apache.spark.sql.functions.broadcast(dim), Seq("event_type"))
-        .groupBy(org.apache.spark.sql.functions.window(col("ts"), window), col("category"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(DecimalType(27, 6))).cast(DoubleType).as("sum_value"))
-        .select(col("window.start").as("window_start"), col("category"), col("n"), col("sum_value"))
-        .writeStream
-        .queryName(sinkName)
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    if (dir != path) rmTree(java.nio.file.Paths.get(dir))
-    spark.table(sinkName)
+    replayToMemory(spark, stream
+      .withWatermark("ts", "1 hour")
+      .join(org.apache.spark.sql.functions.broadcast(dim), Seq("event_type"))
+      .groupBy(org.apache.spark.sql.functions.window(col("ts"), window), col("category"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast(DecimalType(27, 6))).cast(DoubleType).as("sum_value"))
+      .select(col("window.start").as("window_start"), col("category"), col("n"), col("sum_value")),
+      OutputMode.Complete())
   }
 
   /** Bounded replay of the streaming DISTINCT-COUNT shape: exact
@@ -283,36 +334,17 @@ object EventStream {
     * estimate equals the one-shot batch build's bit-for-bit. Same
     * scaffolding as [[runWindowedOnce]]; returns
     * (window_start, event_type, n_est). */
-  def runHllWindowOnce(spark: SparkSession, path: String, sinkName: String,
-      window: String = "1 day", lgK: Int = 12): DataFrame = {
-    val schema = rawEventSchema(spark, path)
-    val src = java.nio.file.Paths.get(path)
-    val dir =
-      if (java.nio.file.Files.isDirectory(src)) path
-      else {
-        val d = java.nio.file.Files.createTempDirectory("graft_stream")
-        java.nio.file.Files.createSymbolicLink(d.resolve(src.getFileName), src)
-        d.toString
-      }
-    val stream = normTs(spark.readStream.schema(schema).parquet(dir))
-    withReplayPartitions(spark) {
-      val q = stream
-        .withWatermark("ts", "1 hour")
-        .groupBy(org.apache.spark.sql.functions.window(col("ts"), window),
-          col("event_type"))
-        .agg(hll_sketch_agg(col("user_id"), lgK).as("sk"))
-        .select(col("window.start").as("window_start"), col("event_type"),
-          hll_sketch_estimate(col("sk")).as("n_est"))
-        .writeStream
-        .queryName(sinkName)
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    if (dir != path) rmTree(java.nio.file.Paths.get(dir))
-    spark.table(sinkName)
+  def runHllWindowOnce(spark: SparkSession, path: String,
+      window: String = "1 day", lgK: Int = 12): DataFrame = withReplayDir(path) { dir =>
+    val stream = normTs(spark.readStream.schema(rawEventSchema(spark, path)).parquet(dir))
+    replayToMemory(spark, stream
+      .withWatermark("ts", "1 hour")
+      .groupBy(org.apache.spark.sql.functions.window(col("ts"), window),
+        col("event_type"))
+      .agg(hll_sketch_agg(col("user_id"), lgK).as("sk"))
+      .select(col("window.start").as("window_start"), col("event_type"),
+        hll_sketch_estimate(col("sk")).as("n_est")),
+      OutputMode.Complete())
   }
 
   /** Stream-static enrichment: join the event stream with a static
@@ -336,17 +368,9 @@ object EventStream {
     * which Spark can evict join state on an unbounded stream (state per
     * side ≈ one watermark-window of rows, not the whole history). Inner
     * join: pairs emit as soon as both rows arrive; no sentinel needed. */
-  def runIntervalJoinOnce(spark: SparkSession, path: String, sinkName: String,
-      windowHours: Int = 24): DataFrame = {
+  def runIntervalJoinOnce(spark: SparkSession, path: String,
+      windowHours: Int = 24): DataFrame = withReplayDir(path) { dir =>
     val schema = rawEventSchema(spark, path)
-    val src = java.nio.file.Paths.get(path)
-    val dir =
-      if (java.nio.file.Files.isDirectory(src)) path
-      else {
-        val d = java.nio.file.Files.createTempDirectory("graft_stream")
-        java.nio.file.Files.createSymbolicLink(d.resolve(src.getFileName), src)
-        d.toString
-      }
     def stream = normTs(spark.readStream.schema(schema).parquet(dir))
     val clicks = stream.where(col("event_type") === "click")
       .select(col("user_id"), col("ts").as("click_ts"))
@@ -354,22 +378,12 @@ object EventStream {
     val purchases = stream.where(col("event_type") === "purchase")
       .select(col("user_id").as("p_user_id"), col("ts").as("purchase_ts"), col("value"))
       .withWatermark("purchase_ts", "1 hour")
-    withReplayPartitions(spark) {
-      val q = clicks.join(purchases,
-          col("user_id") === col("p_user_id") &&
-            col("purchase_ts") >= col("click_ts") &&
-            col("purchase_ts") <= col("click_ts") + expr(s"INTERVAL $windowHours HOURS"))
-        .select(col("user_id"), col("click_ts"), col("purchase_ts"), col("value"))
-        .writeStream
-        .queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    if (dir != path) rmTree(java.nio.file.Paths.get(dir))
-    spark.table(sinkName)
+    replayToMemory(spark, clicks.join(purchases,
+        col("user_id") === col("p_user_id") &&
+          col("purchase_ts") >= col("click_ts") &&
+          col("purchase_ts") <= col("click_ts") + expr(s"INTERVAL $windowHours HOURS"))
+      .select(col("user_id"), col("click_ts"), col("purchase_ts"), col("value")),
+      OutputMode.Append())
   }
 
   /** Bounded replay of the stream-stream LEFT OUTER interval join — the
@@ -382,7 +396,7 @@ object EventStream {
     * enough out that every real click's join window is provably closed,
     * then filters the sentinel pair back out. Same technique as
     * [[runSessionizeOnce]]'s session flush. */
-  def runIntervalJoinLeftOuterOnce(spark: SparkSession, path: String, sinkName: String,
+  def runIntervalJoinLeftOuterOnce(spark: SparkSession, path: String,
       windowHours: Int = 24, watermark: String = "1 hour"): DataFrame = {
     import spark.implicits._
     // normalize ts in batch first (type-adaptive), so the rewritten temp
@@ -400,34 +414,23 @@ object EventStream {
       (-1L, sentinelMicros, -1L, "purchase", 0.0, ""))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .withColumn("ts", timestamp_micros(col("ts")))
-    val d = java.nio.file.Files.createTempDirectory("graft_stream")
-    raw.unionByName(sentinels).write.mode("overwrite").parquet(d.toString)
-    def stream = normTs(spark.readStream
-      .schema(rawEventSchema(spark, d.toString))
-      .parquet(d.toString))
-    val clicks = stream.where(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("click_ts"))
-      .withWatermark("click_ts", watermark)
-    val purchases = stream.where(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user_id"), col("ts").as("purchase_ts"), col("value"))
-      .withWatermark("purchase_ts", watermark)
-    withReplayPartitions(spark) {
-      val q = clicks.join(purchases,
+    withReplayDir(path,
+        Some(d => raw.unionByName(sentinels).write.mode("overwrite").parquet(d))) { dir =>
+      def stream = normTs(spark.readStream.schema(rawEventSchema(spark, dir)).parquet(dir))
+      val clicks = stream.where(col("event_type") === "click")
+        .select(col("user_id"), col("ts").as("click_ts"))
+        .withWatermark("click_ts", watermark)
+      val purchases = stream.where(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user_id"), col("ts").as("purchase_ts"), col("value"))
+        .withWatermark("purchase_ts", watermark)
+      replayToMemory(spark, clicks.join(purchases,
           col("user_id") === col("p_user_id") &&
             col("purchase_ts") >= col("click_ts") &&
             col("purchase_ts") <= col("click_ts") + expr(s"INTERVAL $windowHours HOURS"),
           "left_outer")
-        .select(col("user_id"), col("click_ts"), col("purchase_ts"), col("value"))
-        .writeStream
-        .queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    rmTree(d)
-    spark.table(sinkName).where(col("user_id") =!= -1L)
+        .select(col("user_id"), col("click_ts"), col("purchase_ts"), col("value")),
+        OutputMode.Append())
+    }.where(col("user_id") =!= -1L)
   }
 
   /** Bounded replay of [[dedupStream]] with PLANTED duplicates: every
@@ -436,27 +439,14 @@ object EventStream {
     * the original table exactly (planted dupes carry identical
     * timestamps, so they always fall inside the watermark horizon —
     * the one case streaming dedup guarantees). */
-  def runDedupOnce(spark: SparkSession, path: String, sinkName: String,
+  def runDedupOnce(spark: SparkSession, path: String,
       watermark: String = "1 hour"): DataFrame = {
     val raw = graft.core.Tables.readEventsPath(spark, path)
-    val d = java.nio.file.Files.createTempDirectory("graft_stream")
-    raw.union(raw.where(pmod(col("event_id"), lit(3)) === 0))
-      .write.mode("overwrite").parquet(d.toString)
-    val stream = normTs(spark.readStream
-      .schema(rawEventSchema(spark, d.toString))
-      .parquet(d.toString))
-    withReplayPartitions(spark) {
-      val q = dedupStream(stream, watermark, Seq("event_id"))
-        .writeStream
-        .queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    withReplayDir(path, Some(d => raw.union(raw.where(pmod(col("event_id"), lit(3)) === 0))
+        .write.mode("overwrite").parquet(d))) { dir =>
+      val stream = normTs(spark.readStream.schema(rawEventSchema(spark, dir)).parquet(dir))
+      replayToMemory(spark, dedupStream(stream, watermark, Seq("event_id")), OutputMode.Append())
     }
-    rmTree(d)
-    spark.table(sinkName)
   }
 
   /** Bounded replay of the continuous-ingest MERGE maintenance loop:
@@ -482,27 +472,13 @@ object EventStream {
     * WITHOUT a driver collect — state rows scale with |distinct users|,
     * which at 100× would OOM a collect-and-reparallelize return path;
     * the production result IS the final parquet generation. */
-  def runMergeOnce(spark: SparkSession, path: String, nChunks: Int = 4): DataFrame = {
-    import org.apache.spark.sql.types._
-    val work = java.nio.file.Files.createTempDirectory("graft_stream_merge")
-    val srcDir = work.resolve("src").toString
-    val stateSchema = StructType(Seq(
-      StructField("user_id", LongType), StructField("event_id", LongType),
-      StructField("event_type", StringType), StructField("value", DoubleType)))
-    graft.core.Tables.readEventsPath(spark, path)
-      .select(col("user_id"), col("event_id"), col("event_type"), col("value"))
-      .repartitionByRange(nChunks, col("event_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream
-      .schema(stateSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    foldMvReplay(spark, work, stream) { (prev, batch) =>
-      val state = prev.getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema))
-      graft.core.Merge.latestWins(state, batch, "user_id", "event_id")
+  def runMergeOnce(spark: SparkSession, path: String, nChunks: Int = 4): DataFrame =
+    foldEventsMv(spark, path, nChunks, "user_id", "event_id", "event_type", "value") {
+      (prev, batch) =>
+        val state = prev.getOrElse(spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema))
+        graft.core.Merge.latestWins(state, batch, "user_id", "event_id")
     }
-  }
 
   /** Bounded replay of the streaming MATERIALIZED-VIEW maintenance loop
     * — [[runMergeOnce]]'s shape with AGGREGATE state instead of
@@ -515,28 +491,13 @@ object EventStream {
     * O(history). Same alternating parquet generations; returns the
     * final state (localCheckpoint'ed — state rows scale with |keys|). */
   def runAggMergeOnce(spark: SparkSession, path: String,
-      nChunks: Int = 4): DataFrame = {
-    import org.apache.spark.sql.types._
-    val work = java.nio.file.Files.createTempDirectory("graft_stream_aggmv")
-    val srcDir = work.resolve("src").toString
-    val srcSchema = StructType(Seq(
-      StructField("event_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    graft.core.Tables.readEventsPath(spark, path)
-      .select(col("event_id"), col("event_type"), col("value"))
-      .repartitionByRange(nChunks, col("event_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream
-      .schema(srcSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    foldMvReplay(spark, work, stream) { (prev, batch) =>
+      nChunks: Int = 4): DataFrame =
+    foldEventsMv(spark, path, nChunks, "event_id", "event_type", "value") { (prev, batch) =>
       val partials = graft.core.Merge.aggPartials(
         batch, Seq("event_type"), "value")
       prev.fold(partials)(state =>
         graft.core.Merge.mergeAggState(state, partials, Seq("event_type")))
     }
-  }
 
   /** Bounded replay of a streaming CATEGORY-COUNT materialized view —
     * the state a continuously-served drift monitor keeps at rest: each
@@ -549,29 +510,14 @@ object EventStream {
     * O(batch + k); same alternating parquet generations as
     * [[runAggMergeOnce]]. Returns the final (cat, o_cur) state. */
   def runCountMvOnce(spark: SparkSession, path: String,
-      filter: org.apache.spark.sql.Column, nChunks: Int = 4): DataFrame = {
-    import org.apache.spark.sql.types._
-    val work = java.nio.file.Files.createTempDirectory("graft_stream_countmv")
-    val srcDir = work.resolve("src").toString
-    val srcSchema = StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType),
-      StructField("event_type", StringType)))
-    graft.core.Tables.readEventsPath(spark, path)
-      .select(col("event_id"), col("user_id"), col("event_type"))
-      .repartitionByRange(nChunks, col("event_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream
-      .schema(srcSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    foldMvReplay(spark, work, stream) { (prev, batch) =>
+      filter: org.apache.spark.sql.Column, nChunks: Int = 4): DataFrame =
+    foldEventsMv(spark, path, nChunks, "event_id", "user_id", "event_type") { (prev, batch) =>
       val partials = batch.where(filter)
         .groupBy(col("event_type").as("cat"))
         .agg(count(lit(1)).as("o_cur"))
       prev.fold(partials)(state => state.unionByName(partials)
         .groupBy(col("cat")).agg(sum(col("o_cur")).as("o_cur")))
     }
-  }
 
   /** Streaming EXACT-DISTINCT maintenance (st20 — u6's streaming twin):
     * per micro-batch, [[graft.core.Merge.firstSeenNew]] anti-joins the
@@ -585,21 +531,8 @@ object EventStream {
     * probe); returns the final distinct-pair state. */
   def runFirstSeenMvOnce(spark: SparkSession, path: String,
       nChunks: Int = 4): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_stream_fsmv")
-    val srcDir = work.resolve("src").toString
-    val srcSchema = StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType),
-      StructField("event_type", StringType)))
-    graft.core.Tables.readEventsPath(spark, path)
-      .select(col("event_id"), col("user_id"), col("event_type"))
-      .repartitionByRange(nChunks, col("event_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream
-      .schema(srcSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
     val cols = Seq("event_type", "user_id")
-    foldMvReplay(spark, work, stream) { (prev, batch) =>
+    foldEventsMv(spark, path, nChunks, "event_id", "user_id", "event_type") { (prev, batch) =>
       prev.fold(batch.select(cols.map(col): _*).distinct())(state =>
         state.unionByName(graft.core.Merge.firstSeenNew(state, batch, cols)))
     }
@@ -620,20 +553,7 @@ object EventStream {
   def runBloomMvOnce(spark: SparkSession, path: String,
       nChunks: Int = 4): DataFrame = {
     val B = graft.llm.Frequency.Bloom
-    val work = java.nio.file.Files.createTempDirectory("graft_stream_bloommv")
-    val srcDir = work.resolve("src").toString
-    val srcSchema = StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType),
-      StructField("event_type", StringType)))
-    graft.core.Tables.readEventsPath(spark, path)
-      .select(col("event_id"), col("user_id"), col("event_type"))
-      .repartitionByRange(nChunks, col("event_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream
-      .schema(srcSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    foldMvReplay(spark, work, stream) { (prev, batch) =>
+    foldEventsMv(spark, path, nChunks, "event_id", "user_id", "event_type") { (prev, batch) =>
       val partial = B.build(batch.where(col("event_type") === "signup")
         .select(col("user_id").as("u")).distinct(), "u")
       prev.fold(partial)(st => B.merge(st, partial))
@@ -651,22 +571,10 @@ object EventStream {
     * the final (bucket, mn, mx) map. */
   def runZoneMapMvOnce(spark: SparkSession, path: String,
       nChunks: Int = 4): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_stream_zmmv")
-    val srcDir = work.resolve("src").toString
-    val srcSchema = StructType(Seq(
-      StructField("event_id", LongType), StructField("value", DoubleType)))
-    graft.core.Tables.readEventsPath(spark, path)
-      .select(col("event_id"), col("value"))
-      .repartitionByRange(nChunks, col("event_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream
-      .schema(srcSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
     def zm(df: DataFrame) = df
       .groupBy(expr("event_id div 1000").as("bucket"))
       .agg(min(col("value")).as("mn"), max(col("value")).as("mx"))
-    foldMvReplay(spark, work, stream) { (prev, batch) =>
+    foldEventsMv(spark, path, nChunks, "event_id", "value") { (prev, batch) =>
       prev.fold(zm(batch))(st => st.unionByName(zm(batch))
         .groupBy(col("bucket"))
         .agg(min(col("mn")).as("mn"), max(col("mx")).as("mx")))
@@ -864,19 +772,6 @@ object EventStream {
   def runDrawdownMvOnce(spark: SparkSession, path: String,
       nChunks: Int = 4, compactEvery: Int = 2,
       sliceWidth: Long = SliceWidth): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_stream_ddmv")
-    val srcDir = work.resolve("src").toString
-    val srcSchema = StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType),
-      StructField("value", DoubleType)))
-    graft.core.Tables.readEventsPath(spark, path)
-      .select(col("event_id"), col("user_id"), col("value"))
-      .repartitionByRange(nChunks, col("event_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream
-      .schema(srcSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
     // per-(user, seg) summary of a batch's rows: window runpeak within
     // the partial (event_id order), dd = max(runpeak − x)
     def summarize(df: DataFrame): DataFrame = {
@@ -892,7 +787,7 @@ object EventStream {
           max(col("runpeak") - col("value")).as("dd"))
     }
     val folds = new java.util.concurrent.atomic.AtomicLong(0L)
-    foldMvReplay(spark, work, stream) { (prev, batch) =>
+    foldEventsMv(spark, path, nChunks, "event_id", "user_id", "value") { (prev, batch) =>
       val sentinel = batch
         .agg(min(col("event_id")).as("lo"), max(col("event_id")).as("hi"))
         .where(col("lo").isNotNull)
@@ -930,19 +825,6 @@ object EventStream {
       sliceWidth: Long = SliceWidth): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val dec = DecimalType(27, 6)
-    val work = java.nio.file.Files.createTempDirectory("graft_stream_acmv")
-    val srcDir = work.resolve("src").toString
-    val srcSchema = StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType),
-      StructField("value", DoubleType)))
-    graft.core.Tables.readEventsPath(spark, path)
-      .select(col("event_id"), col("user_id"), col("value"))
-      .repartitionByRange(nChunks, col("event_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream
-      .schema(srcSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
     def summarize(df: DataFrame): DataFrame = {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id"), col("seg")).orderBy(col("event_id"))
@@ -968,7 +850,7 @@ object EventStream {
     }
     val zero37 = lit(0).cast(DecimalType(37, 6))
     val folds = new java.util.concurrent.atomic.AtomicLong(0L)
-    foldMvReplay(spark, work, stream) { (prev, batch) =>
+    foldEventsMv(spark, path, nChunks, "event_id", "user_id", "value") { (prev, batch) =>
       val sentinel = batch
         .agg(min(col("event_id")).as("lo"), max(col("event_id")).as("hi"))
         .where(col("lo").isNotNull)
@@ -997,28 +879,14 @@ object EventStream {
     * generation; per-trigger cost O(batch + keys) — quantile serving at
     * any corpus size without a rescan. Returns the final sketch table. */
   def runKllMvOnce(spark: SparkSession, path: String, k: Int = 400,
-      nChunks: Int = 4): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_stream_kllmv")
-    val srcDir = work.resolve("src").toString
-    val srcSchema = StructType(Seq(
-      StructField("event_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    graft.core.Tables.readEventsPath(spark, path)
-      .select(col("event_id"), col("event_type"), col("value"))
-      .repartitionByRange(nChunks, col("event_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream
-      .schema(srcSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    foldMvReplay(spark, work, stream) { (prev, batch) =>
+      nChunks: Int = 4): DataFrame =
+    foldEventsMv(spark, path, nChunks, "event_id", "event_type", "value") { (prev, batch) =>
       val partials = batch.groupBy(col("event_type"))
         .agg(kll_sketch_agg_double(col("value"), k).as("sk"))
       prev.fold(partials)(state => state.unionByName(partials)
         .groupBy(col("event_type"))
         .agg(kll_merge_agg_double(col("sk")).as("sk")))
     }
-  }
 
   /** Streaming TOP-K LEADERBOARD maintenance (st18 — u7's streaming
     * twin): per micro-batch, fold the batch into the bounded top-k
@@ -1032,21 +900,8 @@ object EventStream {
     * cost O(batch + k·touched groups). Returns the final state. */
   def runTopKMergeOnce(spark: SparkSession, path: String, k: Int,
       nChunks: Int = 4): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_stream_topk")
-    val srcDir = work.resolve("src").toString
-    val srcSchema = StructType(Seq(
-      StructField("event_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    graft.core.Tables.readEventsPath(spark, path)
-      .select(col("event_id"), col("event_type"), col("value"))
-      .repartitionByRange(nChunks, col("event_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream
-      .schema(srcSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
     val ord = Seq(col("value").desc, col("event_id").asc)
-    foldMvReplay(spark, work, stream) { (prev, batch) =>
+    foldEventsMv(spark, path, nChunks, "event_id", "event_type", "value") { (prev, batch) =>
       graft.core.Merge.topKFold(prev.getOrElse(batch.limit(0)), batch,
         Seq("event_type"), ord, k)
     }
@@ -1064,21 +919,8 @@ object EventStream {
     * serve (`Frequency.Cms.estimates`) answerable at any corpus scale
     * without a rescan. Returns the final merged counter table. */
   def runCmsMvOnce(spark: SparkSession, path: String, nChunks: Int = 4): DataFrame = {
-    import org.apache.spark.sql.types._
     val Cms = graft.llm.Frequency.Cms
-    val work = java.nio.file.Files.createTempDirectory("graft_stream_cmsmv")
-    val srcDir = work.resolve("src").toString
-    val srcSchema = StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType)))
-    graft.core.Tables.readEventsPath(spark, path)
-      .select(col("event_id"), col("user_id"))
-      .repartitionByRange(nChunks, col("event_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream
-      .schema(srcSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    foldMvReplay(spark, work, stream) { (prev, batch) =>
+    foldEventsMv(spark, path, nChunks, "event_id", "user_id") { (prev, batch) =>
       val partials = Cms.expand(batch, "user_id")
         .groupBy(col("depth"), col("bucket"))
         .agg(count(lit(1)).as("c"))
@@ -1114,54 +956,33 @@ object EventStream {
     * (unlike st4's per-user state timeouts, which got per-user
     * sentinels to also bound state). Returns
     * (user_id, n_events, dur_us) per emitted session. */
-  def runSessionWindowOnce(spark: SparkSession, path: String, sinkName: String,
+  def runSessionWindowOnce(spark: SparkSession, path: String,
       gapMs: Long = 30 * 60 * 1000L, watermark: String = "1 hour"): DataFrame = {
     import spark.implicits._
     val static = graft.core.Tables.readEventsPath(spark, path)
     val maxTsRow = static.agg(max(unix_micros(col("ts")))).head
     if (maxTsRow.isNullAt(0))
       return Seq.empty[(Long, Long, Long)].toDF("user_id", "n_events", "dur_us")
-    // RocksDB state store (st8's pattern): a bounded replay holds EVERY
-    // session of the file in one micro-batch's state — the default
-    // in-memory provider OOMs at the ×100 gate (60M events ≈ millions of
-    // open sessions); RocksDB spills, which is also the cluster-correct
-    // provider for session state at any real rate.
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val wmMs = intervalMs(watermark)
     val sentinelMicros = maxTsRow.getLong(0) + (gapMs + 2 * wmMs + 3600000L) * 1000L
     val sentinel = Seq((-1L, sentinelMicros, -1L, "sentinel", 0.0, ""))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .withColumn("ts", timestamp_micros(col("ts")))
-    val d = java.nio.file.Files.createTempDirectory("graft_stream")
-    static.unionByName(sentinel).write.mode("overwrite").parquet(d.toString)
-    val stream = normTs(spark.readStream
-      .schema(rawEventSchema(spark, d.toString))
-      .parquet(d.toString))
-    try withReplayPartitions(spark) {
-      val q = stream
+    withReplayDir(path,
+        Some(d => static.unionByName(sentinel).write.mode("overwrite").parquet(d))) { dir =>
+      val stream = normTs(spark.readStream.schema(rawEventSchema(spark, dir)).parquet(dir))
+      // RocksDB state store: the replay holds every session of the file
+      // in one micro-batch's state (see replayToMemory)
+      replayToMemory(spark, stream
         .withWatermark("ts", watermark)
         .groupBy(session_window(col("ts"), s"$gapMs milliseconds"), col("user_id"))
         .agg(count(lit(1)).as("n_events"))
         .select(col("user_id"), col("n_events"),
           (unix_micros(col("session_window.end"))
             - unix_micros(col("session_window.start"))
-            - gapMs * 1000L).as("dur_us"))
-        .writeStream
-        .queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally prevProvider match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
-    rmTree(d)
-    spark.table(sinkName).where(col("user_id") =!= -1L)
+            - gapMs * 1000L).as("dur_us")),
+        OutputMode.Append(), rocksDb = true)
+    }.where(col("user_id") =!= -1L)
   }
 
   /** Bounded replay of [[sessionize]] over an events parquet file — the
@@ -1178,7 +999,7 @@ object EventStream {
     * the extra empty micro-batch that fires the timeouts
     * (`shouldRunAnotherBatch` on watermark advance). Sessions starting at
     * or after the sentinel timestamp are filtered out defensively. */
-  def runSessionizeOnce(spark: SparkSession, path: String, sinkName: String,
+  def runSessionizeOnce(spark: SparkSession, path: String,
       gapMs: Long = 30 * 60 * 1000L, watermark: String = "1 hour"): DataFrame = {
     import spark.implicits._
     // normalize in batch and rewrite into the replay dir: the sentinel file
@@ -1187,38 +1008,27 @@ object EventStream {
     val static = graft.core.Tables.readEventsPath(spark, path)
     val maxTsRow = static.agg(max(unix_micros(col("ts")))).head
     if (maxTsRow.isNullAt(0)) return spark.emptyDataset[Session].toDF
-    val d = java.nio.file.Files.createTempDirectory("graft_stream")
-    static.write.mode("overwrite").parquet(d.toString)
     // sentinel file: one max-ts row per user, far enough out to flush all
     // real sessions (margin = gap + the caller's watermark delay + 1h slack)
     val wmMs = intervalMs(watermark)
     val sentinelMicros = maxTsRow.getLong(0) + (gapMs + wmMs + 60 * 60 * 1000L) * 1000L
-    static.select(col("user_id")).distinct()
-      .select(
-        lit(-1L).as("event_id"), timestamp_micros(lit(sentinelMicros)).as("ts"),
-        col("user_id"), lit("__sentinel").as("event_type"),
-        lit(0.0).as("value"), lit("").as("props"))
-      .write.mode("append").parquet(d.toString)
-    val events = normTs(spark.readStream
-      .schema(rawEventSchema(spark, d.toString))
-      .parquet(d.toString))
-      .select(
-        col("ts"),
-        col("user_id").as("userId"), col("event_type").as("eventType"), col("value"))
-      .as[Event]
-    withReplayPartitions(spark) {
-      val q = sessionize(events, gapMs, watermark)
-        .writeStream
-        .queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    def rewrite(d: String): Unit = {
+      static.write.mode("overwrite").parquet(d)
+      static.select(col("user_id")).distinct()
+        .select(
+          lit(-1L).as("event_id"), timestamp_micros(lit(sentinelMicros)).as("ts"),
+          col("user_id"), lit("__sentinel").as("event_type"),
+          lit(0.0).as("value"), lit("").as("props"))
+        .write.mode("append").parquet(d)
     }
-    rmTree(d)
-    spark.table(sinkName)
-      .where(col("sessionStart") < timestamp_micros(lit(sentinelMicros)))
+    withReplayDir(path, Some(rewrite)) { dir =>
+      val events = normTs(spark.readStream.schema(rawEventSchema(spark, dir)).parquet(dir))
+        .select(
+          col("ts"),
+          col("user_id").as("userId"), col("event_type").as("eventType"), col("value"))
+        .as[Event]
+      replayToMemory(spark, sessionize(events, gapMs, watermark), OutputMode.Append())
+    }.where(col("sessionStart") < timestamp_micros(lit(sentinelMicros)))
   }
 
   final case class ProfileEvent(userId: Long, eventId: Long, tsMicros: Long, valueMicros: Long)
@@ -1272,61 +1082,34 @@ object EventStream {
     * transformWithState requires, and restored afterwards). Update-mode
     * emissions are cumulative, so the final profile per user is its
     * max-nEvents row — with a single available-now batch, the only row. */
-  def runProfileOnce(spark: SparkSession, path: String, sinkName: String,
+  def runProfileOnce(spark: SparkSession, path: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
     val schema = rawEventSchema(spark, path)
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val src = java.nio.file.Paths.get(path)
-    val dir =
-      if (java.nio.file.Files.isDirectory(src)) path
-      else {
-        val d = java.nio.file.Files.createTempDirectory("graft_stream")
-        java.nio.file.Files.createSymbolicLink(d.resolve(src.getFileName), src)
-        d.toString
+    val sink = withReplayDir(path) { dir =>
+      // maxFilesPerTrigger splits a multi-file input into several
+      // micro-batches — the cross-batch state-accumulation path (specs
+      // drive it; the single-file bounded replay runs one batch)
+      val reader = maxFilesPerTrigger.foldLeft(
+        spark.readStream.schema(schema)) {
+        (r, n) => r.option("maxFilesPerTrigger", n)
       }
-    // maxFilesPerTrigger splits a multi-file input into several
-    // micro-batches — the cross-batch state-accumulation path (specs
-    // drive it; the single-file bounded replay runs one batch)
-    val reader = maxFilesPerTrigger.foldLeft(
-      spark.readStream.schema(schema)) {
-      (r, n) => r.option("maxFilesPerTrigger", n)
+      val events = normTs(reader.parquet(dir))
+        .select(
+          col("user_id").as("userId"), col("event_id").as("eventId"),
+          unix_micros(col("ts")).as("tsMicros"),
+          round(col("value") * lit(1000000L)).cast("long").as("valueMicros"))
+        .as[ProfileEvent]
+      replayToMemory(spark, events
+        .groupByKey(_.userId)
+        .transformWithState(new UserProfileProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update()),
+        OutputMode.Update(), rocksDb = true)
     }
-    val events = normTs(reader.parquet(dir))
-      .select(
-        col("user_id").as("userId"), col("event_id").as("eventId"),
-        unix_micros(col("ts")).as("tsMicros"),
-        round(col("value") * lit(1000000L)).cast("long").as("valueMicros"))
-      .as[ProfileEvent]
-    try {
-      withReplayPartitions(spark) {
-        val q = events
-          .groupByKey(_.userId)
-          .transformWithState(new UserProfileProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-          .writeStream
-          .queryName(sinkName)
-          .outputMode(OutputMode.Update())
-          .format("memory")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
-    if (dir != path) rmTree(java.nio.file.Paths.get(dir))
     // keep each user's final (cumulative) emission
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("userId")).orderBy(col("nEvents").desc)
-    spark.table(sinkName)
-      .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1).drop("__rn")
+    sink.withColumn("__rn", row_number().over(w)).where(col("__rn") === 1).drop("__rn")
   }
 
   final case class AnomEvent(userId: Long, tsMicros: Long, value: Double)
@@ -1413,54 +1196,27 @@ object EventStream {
     * maxFilesPerTrigger for the cross-batch state path). Update-mode
     * emissions are per-event (one output row per input event), so the
     * sink needs no final-row selection. */
-  def runAnomalyOnce(spark: SparkSession, path: String, sinkName: String,
+  def runAnomalyOnce(spark: SparkSession, path: String,
       windowMicros: Long = 86400L * 1000000L, minPoints: Int = 5, kSigma: Double = 3.0,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
     val schema = rawEventSchema(spark, path)
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val src = java.nio.file.Paths.get(path)
-    val dir =
-      if (java.nio.file.Files.isDirectory(src)) path
-      else {
-        val d = java.nio.file.Files.createTempDirectory("graft_stream")
-        java.nio.file.Files.createSymbolicLink(d.resolve(src.getFileName), src)
-        d.toString
+    withReplayDir(path) { dir =>
+      val reader = maxFilesPerTrigger.foldLeft(
+        spark.readStream.schema(schema)) {
+        (r, n) => r.option("maxFilesPerTrigger", n)
       }
-    val reader = maxFilesPerTrigger.foldLeft(
-      spark.readStream.schema(schema)) {
-      (r, n) => r.option("maxFilesPerTrigger", n)
+      val events = normTs(reader.parquet(dir))
+        .where(col("value").isNotNull)
+        .select(col("user_id").as("userId"), unix_micros(col("ts")).as("tsMicros"),
+          col("value").cast("double").as("value"))
+        .as[AnomEvent]
+      replayToMemory(spark, events
+        .groupByKey(_.userId)
+        .transformWithState(new RollingAnomalyProcessor(windowMicros, minPoints, kSigma),
+          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update()),
+        OutputMode.Update(), rocksDb = true)
     }
-    val events = normTs(reader.parquet(dir))
-      .where(col("value").isNotNull)
-      .select(col("user_id").as("userId"), unix_micros(col("ts")).as("tsMicros"),
-        col("value").cast("double").as("value"))
-      .as[AnomEvent]
-    try {
-      withReplayPartitions(spark) {
-        val q = events
-          .groupByKey(_.userId)
-          .transformWithState(new RollingAnomalyProcessor(windowMicros, minPoints, kSigma),
-            org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-          .writeStream
-          .queryName(sinkName)
-          .outputMode(OutputMode.Update())
-          .format("memory")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
-    if (dir != path) rmTree(java.nio.file.Paths.get(dir))
-    spark.table(sinkName)
   }
 
   final case class Event(ts: java.sql.Timestamp, userId: Long, eventType: String, value: Double)

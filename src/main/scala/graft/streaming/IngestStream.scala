@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 import graft.llm.Dedup
 
 /** The rolling-ingestion NEAR-dup loop: a document stream probes a
@@ -28,23 +29,13 @@ object IngestStream {
 
   /** Schema of a slim [[Dedup.nearDupIndex]] frame — the empty gen-0
     * index (three longs per (doc, band) row; signatures never persist). */
-  private[graft] val IndexSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("band",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("band_hash",
-      org.apache.spark.sql.types.LongType)))
+  private[graft] val IndexSchema = new StructType()
+    .add("id", LongType).add("band", IntegerType).add("band_hash", LongType)
 
   def runNearDupIngestOnce(spark: SparkSession, docsPath: String, nChunks: Int = 3,
-      w: Int = 5, k: Int = 64, bands: Int = 32, minJaccard: Double = 0.5): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_neardup_ingest")
-    val out = runNearDupIngestAt(spark, work, docsPath, nChunks, w, k, bands, minJaccard)
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(work).iterator().asScala.toSeq.reverseIterator
-      .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    out
-  }
+      w: Int = 5, k: Int = 64, bands: Int = 32, minJaccard: Double = 0.5): DataFrame =
+    EventStream.withTempDir("graft_neardup_ingest")(
+      runNearDupIngestAt(spark, _, docsPath, nChunks, w, k, bands, minJaccard))
 
   /** [[runNearDupIngestOnce]] against a CALLER-OWNED work dir, left on
     * disk afterwards — the crash-recovery spec plants a garbage
@@ -52,65 +43,12 @@ object IngestStream {
     * index after it (StreamingSpec's planted-crash pattern). */
   private[graft] def runNearDupIngestAt(spark: SparkSession,
       work: java.nio.file.Path, docsPath: String, nChunks: Int = 3,
-      w: Int = 5, k: Int = 64, bands: Int = 32, minJaccard: Double = 0.5): DataFrame = {
-    val srcDir = work.resolve("src").toString
-    val pairsDir = work.resolve("pairs").toString
-    val docs = spark.read.parquet(docsPath).select(col("doc_id"), col("text"))
-    docs.repartitionByRange(nChunks, col("doc_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream
-      .schema(docs.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    // Every per-batch write is KEYED BY batchId and mode-overwrite, so a
-    // retried micro-batch (at-least-once foreachBatch) redoes identical
-    // work instead of double-appending: pairs land in pairs/batch=<id>
-    // (partition-discovered on read), and index generation b+1 is an
-    // overwrite derived from the immutable generation b. No driver-side
-    // counter participates in state addressing — `maxGen` only records
-    // the last generation for the final read.
-    @volatile var maxGen = 0L
-    // same bounded-replay scoping as the MV folds (EventStream): the
-    // per-batch probe is a fixed plan over a capped partition count
-    // every trigger, so AQE re-planning and rate-sized shuffle fan-out
-    // only add per-batch jobs (censused: st10 78 single-task jobs).
-    // Both knobs are parameterized session confs with the same
-    // production story (raise ReplayPartitionsKey / flip ReplayAqeKey).
-    EventStream.withReplayPartitions(spark) {
-    val q = stream.writeStream
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val index =
-          if (batchId == 0L)
-            spark.createDataFrame(spark.sparkContext
-              .emptyRDD[org.apache.spark.sql.Row], IndexSchema)
-          else spark.read.parquet(work.resolve(s"index_$batchId").toString)
-        // corpus text for the exact-Jaccard verify: everything EXCEPT
-        // the current batch (ids not yet indexed can never be
-        // candidates, so the anti join is the only exclusion needed)
-        val corpus = docs.join(batch.select("doc_id"), Seq("doc_id"), "left_anti")
-        // one signature pass per batch serves both the probe and the roll
-        val (pairs, batchIdx) = Dedup.incrementalNearDupRoll(
-          corpus, index, batch, "doc_id", "text", w, k, bands, minJaccard)
-        EventStream.probeBatchPlan(pairs)
-        pairs.write.mode("overwrite")
-          .parquet(java.nio.file.Paths.get(pairsDir, s"batch=$batchId").toString)
-        // roll the index forward (at scale: append to the bucketed
-        // index table; the generation rewrite is fixture-scale only)
-        index.unionByName(batchIdx)
-          .write.mode("overwrite").parquet(work.resolve(s"index_${batchId + 1}").toString)
-        maxGen = math.max(maxGen, batchId + 1)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      w: Int = 5, k: Int = 64, bands: Int = 32, minJaccard: Double = 0.5): DataFrame =
+    ingestAt(spark, work, docsPath, "doc_id", "text", nChunks,
+        Seq(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))) {
+      (corpus, index, batch) => Dedup.incrementalNearDupRoll(
+        corpus, index, batch, "doc_id", "text", w, k, bands, minJaccard)
     }
-    require(maxGen >= 2, s"near-dup ingest replay must run multiple micro-batches, ran $maxGen")
-    spark.read.parquet(pairsDir)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-      .orderBy(col("id_a"), col("id_b"))
-      .localCheckpoint(true)
-  }
 
   /** The rolling-ingestion loop for the EMBEDDING near-dup index — the
     * vector twin of [[runNearDupIngestOnce]]: an embedding stream probes
@@ -128,58 +66,77 @@ object IngestStream {
     * text loop. */
   def runEmbedIngestOnce(spark: SparkSession, embPath: String, nChunks: Int = 3,
       minCos: Double = 0.45, dim: Int = 64,
-      nPlanes: Int = 16, nBands: Int = 8): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_embed_ingest")
-    val out = runEmbedIngestAt(spark, work, embPath, nChunks, minCos, dim, nPlanes, nBands)
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(work).iterator().asScala.toSeq.reverseIterator
-      .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    out
-  }
+      nPlanes: Int = 16, nBands: Int = 8): DataFrame =
+    EventStream.withTempDir("graft_embed_ingest")(
+      runEmbedIngestAt(spark, _, embPath, nChunks, minCos, dim, nPlanes, nBands))
 
   /** [[runEmbedIngestOnce]] against a caller-owned work dir (see
     * [[runNearDupIngestAt]]). */
   private[graft] def runEmbedIngestAt(spark: SparkSession,
       work: java.nio.file.Path, embPath: String, nChunks: Int = 3,
       minCos: Double = 0.45, dim: Int = 64,
-      nPlanes: Int = 16, nBands: Int = 8): DataFrame = {
-    val srcDir = work.resolve("src").toString
-    val pairsDir = work.resolve("pairs").toString
-    val emb = spark.read.parquet(embPath).select(col("vec_id"), col("embedding"))
-    emb.repartitionByRange(nChunks, col("vec_id"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream
-      .schema(emb.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    @volatile var maxGen = 0L
-    // bounded-replay scoping — see runNearDupIngestAt
-    EventStream.withReplayPartitions(spark) {
-    val q = stream.writeStream
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val index =
-          if (batchId == 0L)
-            spark.createDataFrame(spark.sparkContext
-              .emptyRDD[org.apache.spark.sql.Row], IndexSchema)
-          else spark.read.parquet(work.resolve(s"index_$batchId").toString)
-        val corpus = emb.join(batch.select("vec_id"), Seq("vec_id"), "left_anti")
-        val (pairs, batchIdx) = Dedup.incrementalCosineNearDupRoll(
-          corpus, index, batch, "vec_id", "embedding", minCos, dim, nPlanes, nBands)
-        EventStream.probeBatchPlan(pairs)
-        pairs.write.mode("overwrite")
-          .parquet(java.nio.file.Paths.get(pairsDir, s"batch=$batchId").toString)
-        index.unionByName(batchIdx)
-          .write.mode("overwrite").parquet(work.resolve(s"index_${batchId + 1}").toString)
-        maxGen = math.max(maxGen, batchId + 1)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      nPlanes: Int = 16, nBands: Int = 8): DataFrame =
+    ingestAt(spark, work, embPath, "vec_id", "embedding", nChunks,
+        Seq(col("id_a"), col("id_b"), col("cos"))) {
+      (corpus, index, batch) => Dedup.incrementalCosineNearDupRoll(
+        corpus, index, batch, "vec_id", "embedding", minCos, dim, nPlanes, nBands)
     }
-    require(maxGen >= 2, s"embed ingest replay must run multiple micro-batches, ran $maxGen")
+
+  /** The rolling-ingest loop both indexes share: `(idCol, payloadCol)` of
+    * the table at `path` streams in `nChunks` micro-batches; per batch,
+    * `roll(corpus, index, batch)` returns the batch's verified pairs and
+    * its own index rows, where `corpus` is the table minus the batch
+    * (ids not yet indexed can never be candidates, so the anti join is
+    * the only exclusion needed) and `index` the rolled index so far.
+    * Returns the emitted pairs as `pairCols`, ordered and
+    * `localCheckpoint`ed so they outlive `work`. */
+  private def ingestAt(spark: SparkSession, work: java.nio.file.Path, path: String,
+      idCol: String, payloadCol: String, nChunks: Int, pairCols: Seq[Column])(
+      roll: (DataFrame, DataFrame, DataFrame) => (DataFrame, DataFrame)): DataFrame = {
+    val pairsDir = work.resolve("pairs").toString
+    val input = spark.read.parquet(path).select(col(idCol), col(payloadCol))
+    val stream = EventStream.chunkedSource(work, input, idCol, nChunks)
+    // Every per-batch write is KEYED BY batchId and mode-overwrite, so a
+    // retried micro-batch (at-least-once foreachBatch) redoes identical
+    // work instead of double-appending: pairs land in pairs/batch=<id>
+    // (partition-discovered on read), and index generation b+1 is an
+    // overwrite derived from the immutable generation b. No driver-side
+    // counter participates in state addressing — `maxGen` only records
+    // the last generation for the final read.
+    @volatile var maxGen = 0L
+    // same bounded-replay scoping as the MV folds (EventStream): the
+    // per-batch probe is a fixed plan over a capped partition count
+    // every trigger, so AQE re-planning and rate-sized shuffle fan-out
+    // only add per-batch jobs (censused: st10 78 single-task jobs).
+    // A deployment raises ReplayPartitionsKey with its rate.
+    EventStream.withReplayPartitions(spark) {
+      stream.writeStream
+        .option("checkpointLocation", work.resolve("ckpt").toString)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val index =
+            if (batchId == 0L)
+              spark.createDataFrame(spark.sparkContext
+                .emptyRDD[org.apache.spark.sql.Row], IndexSchema)
+            else spark.read.parquet(work.resolve(s"index_$batchId").toString)
+          val corpus = input.join(batch.select(idCol), Seq(idCol), "left_anti")
+          // one signature pass per batch serves both the probe and the roll
+          val (pairs, batchIdx) = roll(corpus, index, batch)
+          EventStream.probeBatchPlan(pairs)
+          pairs.write.mode("overwrite")
+            .parquet(java.nio.file.Paths.get(pairsDir, s"batch=$batchId").toString)
+          // roll the index forward (at scale: append to the bucketed
+          // index table; the generation rewrite is fixture-scale only)
+          index.unionByName(batchIdx)
+            .write.mode("overwrite").parquet(work.resolve(s"index_${batchId + 1}").toString)
+          maxGen = math.max(maxGen, batchId + 1)
+        }
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
+    require(maxGen >= 2, s"ingest replay of $path must run multiple micro-batches, ran $maxGen")
     spark.read.parquet(pairsDir)
-      .select(col("id_a"), col("id_b"), col("cos"))
+      .select(pairCols: _*)
       .orderBy(col("id_a"), col("id_b"))
       .localCheckpoint(true)
   }

@@ -85,13 +85,13 @@ class EventEncodingSpec extends SparkSpec {
   }
 
   test("windowed stream replay is encoding-invariant (nanos-long vs micros NTZ)") {
-    def run(dir: String, sink: String) =
-      EventStream.runWindowedOnce(spark, dir, sink)
+    def run(dir: String) =
+      EventStream.runWindowedOnce(spark, dir)
         .select(col("window_start").cast("string"), col("event_type"), col("n"),
           round(col("sum_value"), 6).as("s"))
         .collect().map(_.toSeq).toSet
-    val a = run(writeNanosLong(12), "enc_sink_nanos")
-    val b = run(writeNtz(12), "enc_sink_ntz")
+    val a = run(writeNanosLong(12))
+    val b = run(writeNtz(12))
     assert(a.nonEmpty && a === b, s"nanos=$a vs ntz=$b")
     // 12 events × 8h span 4+ distinct days → windows must NOT collapse
     // (the 1000× compression bug collapsed 150 windows into 5)
@@ -100,7 +100,7 @@ class EventEncodingSpec extends SparkSpec {
 
   test("profile replay pins sum_micros and recency order under micros encoding") {
     val dir = writeNtz(6)
-    val out = EventStream.runProfileOnce(spark, dir, "enc_profile_sink")
+    val out = EventStream.runProfileOnce(spark, dir)
       .select("userId", "nEvents", "sumMicros", "recent5")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
     // user 0 gets events 0,2,4 (values 0.0, 3.0, 6.0 → 9_000_000 micros);
@@ -112,7 +112,7 @@ class EventEncodingSpec extends SparkSpec {
 
   test("sessionize replay flushes trailing sessions for the micros encoding") {
     val dir = writeNtz(8)
-    val sessions = EventStream.runSessionizeOnce(spark, dir, "enc_sessions_sink")
+    val sessions = EventStream.runSessionizeOnce(spark, dir)
       .collect()
     // 8h gaps > 30min session gap → every event is its own session
     assert(sessions.length === 8, s"got ${sessions.length} sessions")

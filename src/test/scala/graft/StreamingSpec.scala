@@ -11,7 +11,7 @@ class StreamingSpec extends SparkSpec {
 
   test("bounded stream replay equals the batch windowed aggregate") {
     val streamed = EventStream.runWindowedOnce(
-      spark, "/root/testdata/sf0.001/events.parquet", "spec_sink")
+      spark, "/root/testdata/sf0.001/events.parquet")
       .select(col("window_start"), col("event_type"), col("n"), round(col("sum_value"), 6).as("s"))
       .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
     val batch = graft.core.Tables
@@ -28,16 +28,41 @@ class StreamingSpec extends SparkSpec {
     spark.conf.set(EventStream.ReplayPartitionsKey, "2")
     try {
       val streamed = EventStream.runWindowedOnce(
-        spark, "/root/testdata/sf0.001/events.parquet", "spec_knob_sink")
+        spark, "/root/testdata/sf0.001/events.parquet")
       assert(streamed.count() > 0)
       // session value untouched after the replay
       assert(spark.conf.get("spark.sql.shuffle.partitions") === prev)
       spark.conf.set(EventStream.ReplayPartitionsKey, "0")
       intercept[IllegalArgumentException] {
         EventStream.runWindowedOnce(
-          spark, "/root/testdata/sf0.001/events.parquet", "spec_knob_sink2")
+          spark, "/root/testdata/sf0.001/events.parquet")
       }
     } finally spark.conf.unset(EventStream.ReplayPartitionsKey)
+  }
+
+  test("a failed replay deletes its temp dir (symlink, rewrite, chunked and ingest)") {
+    import scala.jdk.CollectionConverters._
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def leftovers(): Set[String] = {
+      val ls = java.nio.file.Files.list(tmp)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("graft_stream") || n.startsWith("graft_neardup_ingest"))
+        .toSet
+      finally ls.close()
+    }
+    val sf = "/root/testdata/sf0.001"
+    val events = s"$sf/events.parquet"
+    val before = leftovers()
+    // a cap of 0 fails inside the replay, after each runner made its dir
+    spark.conf.set(EventStream.ReplayPartitionsKey, "0")
+    try {
+      intercept[IllegalArgumentException](EventStream.runWindowedOnce(spark, events))
+      intercept[IllegalArgumentException](EventStream.runDedupOnce(spark, events))
+      intercept[IllegalArgumentException](EventStream.runMergeOnce(spark, events))
+      intercept[IllegalArgumentException](graft.streaming.IngestStream.runNearDupIngestOnce(
+        spark, s"$sf/documents.parquet"))
+    } finally spark.conf.unset(EventStream.ReplayPartitionsKey)
+    assert(leftovers() -- before === Set.empty[String])
   }
 
   test("stream-static join enriches the stream against a broadcast dimension") {
@@ -144,7 +169,7 @@ class StreamingSpec extends SparkSpec {
 
   test("transformWithState profile replay equals the batch per-user aggregate") {
     val streamed = EventStream.runProfileOnce(
-      spark, "/root/testdata/sf0.001/events.parquet", "spec_profile_sink")
+      spark, "/root/testdata/sf0.001/events.parquet")
       .select("userId", "nEvents", "sumMicros", "recent5")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
     val w = org.apache.spark.sql.expressions.Window
@@ -172,12 +197,12 @@ class StreamingSpec extends SparkSpec {
       .readEventsPath(spark, "/root/testdata/sf0.001/events.parquet")
     val dir = java.nio.file.Files.createTempDirectory("graft_profile_multi").toString
     raw.repartition(4).write.mode("overwrite").parquet(dir)
-    val multi = EventStream.runProfileOnce(spark, dir, "spec_profile_multi",
+    val multi = EventStream.runProfileOnce(spark, dir,
       maxFilesPerTrigger = Some(1))
       .select("userId", "nEvents", "sumMicros", "recent5")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
     val single = EventStream.runProfileOnce(
-      spark, "/root/testdata/sf0.001/events.parquet", "spec_profile_single")
+      spark, "/root/testdata/sf0.001/events.parquet")
       .select("userId", "nEvents", "sumMicros", "recent5")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
     assert(multi.nonEmpty && multi === single,
@@ -187,7 +212,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming rolling-anomaly replay equals the batch z-scores bitwise") {
     val path = "/root/testdata/sf0.001/events.parquet"
     def key(t: (Long, Long, Long, Option[Double], Boolean)) = (t._1, t._2, t._4.getOrElse(0.0))
-    val streamed = EventStream.runAnomalyOnce(spark, path, "spec_anom_sink")
+    val streamed = EventStream.runAnomalyOnce(spark, path)
       .collect().map(r => (r.getAs[Long]("userId"), r.getAs[Long]("tsMicros"),
         r.getAs[Long]("nPrior"),
         if (r.isNullAt(r.fieldIndex("z"))) None else Some(r.getAs[Double]("z")),
@@ -230,9 +255,9 @@ class StreamingSpec extends SparkSpec {
         r.getAs[Long]("nPrior"),
         if (r.isNullAt(r.fieldIndex("z"))) None else Some(r.getAs[Double]("z"))))
         .toSeq.sortBy(t => (t._1, t._2, t._4.getOrElse(0.0)))
-    val multi = rows(EventStream.runAnomalyOnce(spark, dir, "spec_anom_multi",
+    val multi = rows(EventStream.runAnomalyOnce(spark, dir,
       maxFilesPerTrigger = Some(1)))
-    val single = rows(EventStream.runAnomalyOnce(spark, path, "spec_anom_single"))
+    val single = rows(EventStream.runAnomalyOnce(spark, path))
     assert(multi.nonEmpty && multi === single,
       s"first diff: ${multi.zip(single).find(p => p._1 != p._2)}")
   }
