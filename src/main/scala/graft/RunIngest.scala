@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import graft.io.Generations
 import graft.llm.Dedup
 import graft.streaming.IngestStream
 
@@ -14,13 +14,20 @@ import graft.streaming.IngestStream
   *   <stateDir>/docs   — accepted documents (text kept for exact verify)
   *   <stateDir>/pairs  — verified near-dup pairs emitted so far
   *
-  * Each invocation probes the index with the batch, appends the verified
+  * Each invocation probes the index with the batch, adds the verified
   * pairs (exactly the pairs a full-corpus re-run would add — see
-  * [[Dedup.incrementalNearDup]]), and appends the batch's banded rows +
-  * docs to the state. Invariant after N batches: `pairs` equals the
+  * [[Dedup.incrementalNearDup]]), and adds the batch's banded rows + docs
+  * to the state. Invariant after N batches: `pairs` equals the
   * full-corpus LSH pair set over everything ingested (IngestSpec replays
-  * this via the CLI). Batch ids must be new (dedup ingest runs exact d7
-  * first in a real pipeline).
+  * this via the CLI).
+  *
+  * Retry contract: each call is one [[Generations.TableSet]] commit
+  * keyed by the batch's file listing (paths, lengths, mtimes). A batch
+  * already committed writes nothing and returns the summary it returned
+  * the first time; a call that died mid-commit leaves files the next call
+  * deletes first. A state written by plain parquet appends is adopted as
+  * committed. Between calls, each table dir holds exactly its committed
+  * rows.
   *
   * Usage: runMain graft.RunIngest <batch.parquet> <stateDir>
   *        [minJaccard] [w] [k] [bands]
@@ -59,38 +66,10 @@ object RunIngest {
   /** The ingest step, spark-session-injected for specs. Returns the
     * one-line JSON summary it also prints. */
   def ingestOnce(spark: SparkSession, in: String, state: String,
-      minJ: Double = 0.5, w: Int = 5, k: Int = 64, bands: Int = 32): String = {
-    val indexPath = s"$state/index"
-    val docsPath = s"$state/docs"
-    val pairsPath = s"$state/pairs"
-    val batch = spark.read.parquet(in).select(col("doc_id"), col("text"))
-    // Hadoop FS probe, not java.io.File: the state dir may be HDFS/S3 —
-    // a local-only exists() would silently treat a remote index as empty
-    // and drop every corpus-vs-batch pair while still appending to it
-    val hIndex = new org.apache.hadoop.fs.Path(indexPath)
-    val hasState = hIndex.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hIndex)
-    val index =
-      if (hasState) spark.read.parquet(indexPath)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], IngestStream.IndexSchema)
-    val corpus =
-      if (hasState) spark.read.parquet(docsPath)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
-    val (pairs, batchIdx) = Dedup.incrementalNearDupRoll(
-      corpus, index, batch, "doc_id", "text", w, k, bands, minJ)
-    pairs.write.mode("append").parquet(pairsPath)
-    // at scale these appends are bucketed-table commits; the state dir
-    // here is the same layout minus the manifest
-    batchIdx.write.mode("append").parquet(indexPath)
-    batch.write.mode("append").parquet(docsPath)
-    val nBatch = batch.count()
-    val nNew = pairs.count()
-    val nTotal = spark.read.parquet(pairsPath).count()
-    val nIndex = spark.read.parquet(indexPath).count()
-    s"""{"batch_docs":$nBatch,"new_pairs":$nNew,"total_pairs":$nTotal,"index_rows":$nIndex}"""
-  }
+      minJ: Double = 0.5, w: Int = 5, k: Int = 64, bands: Int = 32): String =
+    ingestStep(spark, in, state, "doc_id", "text", "docs") { (corpus, index, batch) =>
+      Dedup.incrementalNearDupRoll(corpus, index, batch, "doc_id", "text", w, k, bands, minJ)
+    }
 
   /** Embedding twin of [[ingestOnce]]: one rolling step of the COSINE
     * near-dup index ([[Dedup.incrementalCosineNearDupRoll]] — the st11 /
@@ -119,31 +98,33 @@ object RunIngest {
     * (measured OOM at 200k vectors; DevScale ingest12 builds the at-rest
     * state via [[Dedup.cosineIndex]] instead and ingests deltas). */
   def ingestEmbedOnce(spark: SparkSession, in: String, state: String,
-      minCos: Double = 0.45, dim: Int = 64, nPlanes: Int = 16, nBands: Int = 8): String = {
-    val indexPath = s"$state/index"
-    val vecsPath = s"$state/vecs"
-    val pairsPath = s"$state/pairs"
-    val batch = spark.read.parquet(in).select(col("vec_id"), col("embedding"))
-    val hIndex = new org.apache.hadoop.fs.Path(indexPath)
-    val hasState = hIndex.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hIndex)
-    val index =
-      if (hasState) spark.read.parquet(indexPath)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], IngestStream.IndexSchema)
-    val corpus =
-      if (hasState) spark.read.parquet(vecsPath)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-    val (pairs, batchIdx) = Dedup.incrementalCosineNearDupRoll(
-      corpus, index, batch, "vec_id", "embedding", minCos, dim, nPlanes, nBands)
-    pairs.write.mode("append").parquet(pairsPath)
-    batchIdx.write.mode("append").parquet(indexPath)
-    batch.write.mode("append").parquet(vecsPath)
-    val nBatch = batch.count()
-    val nNew = pairs.count()
-    val nTotal = spark.read.parquet(pairsPath).count()
-    val nIndex = spark.read.parquet(indexPath).count()
-    s"""{"batch_vecs":$nBatch,"new_pairs":$nNew,"total_pairs":$nTotal,"index_rows":$nIndex}"""
+      minCos: Double = 0.45, dim: Int = 64, nPlanes: Int = 16, nBands: Int = 8): String =
+    ingestStep(spark, in, state, "vec_id", "embedding", "vecs") { (corpus, index, batch) =>
+      Dedup.incrementalCosineNearDupRoll(
+        corpus, index, batch, "vec_id", "embedding", minCos, dim, nPlanes, nBands)
+    }
+
+  /** The rolling step both indexes share: `(idCol, payloadCol)` of the
+    * batch at `in` probes the state's `index` and `docs` (the at-rest
+    * payload table) through `roll(corpus, index, batch)`, which returns
+    * the verified pairs and the batch's own index rows. Pairs, index rows
+    * and batch commit together; the summary's counts come from the
+    * commit, never from a table scan. */
+  private def ingestStep(spark: SparkSession, in: String, state: String,
+      idCol: String, payloadCol: String, docs: String)(
+      roll: (DataFrame, DataFrame, DataFrame) => (DataFrame, DataFrame)): String = {
+    val set = Generations.tableSet(spark, state, Seq("index", docs, "pairs"))
+    val key = Generations.batchKey(spark, in)
+    set.summary(key).getOrElse {
+      val batch = spark.read.parquet(in).select(col(idCol), col(payloadCol))
+      val (pairs, batchIdx) = roll(set.read(docs, batch.schema),
+        set.read("index", IngestStream.IndexSchema), batch)
+      set.commit(key, Seq("pairs" -> pairs, "index" -> batchIdx, docs -> batch)) {
+        (rows, totals) =>
+          s"""{"batch_$docs":${rows(docs)},"new_pairs":${rows("pairs")},""" +
+            s""""total_pairs":${totals("pairs")},"index_rows":${totals("index")}}"""
+      }
+    }
   }
 
   /** Maintenance step: compact the rolling state after deletions
@@ -159,46 +140,32 @@ object RunIngest {
     * Contract (IngestSpec): after compaction the state is
     * indistinguishable from a fresh ingest of the surviving corpus —
     * signatures are per-doc, so dropping a doc's rows is exact removal.
-    * The swap (write tmp → delete old → rename) is NOT atomic between
-    * the last two steps; at scale this is a table format's
-    * rewrite-and-commit, which is. */
-  def compactOnce(spark: SparkSession, state: String,
-      deleted: org.apache.spark.sql.DataFrame,
+    * The rewritten tables publish as one base commit of the state's
+    * [[Generations.TableSet]], so the next call on the state discards an
+    * interrupted compaction or finishes it. */
+  def compactOnce(spark: SparkSession, state: String, deleted: DataFrame,
       targetRowsPerFile: Long = 4000000L): String = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
+    val set = Generations.tableSet(spark, state, Seq("index", "docs", "pairs"))
     val del = broadcast(deleted.select(col("doc_id")).distinct()).cache()
-
-    def rewrite(path: String, drop: org.apache.spark.sql.DataFrame =>
-        org.apache.spark.sql.DataFrame): (Long, Long, Long, Long) = {
-      val p = new Path(path)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) return (0L, 0L, 0L, 0L)
-      def nFiles = fs.listStatus(p).count(s => s.isFile && s.getPath.getName.startsWith("part-"))
-      val before = spark.read.parquet(path)
-      val (rowsBefore, filesBefore) = (before.count(), nFiles.toLong)
-      val kept = drop(before)
-      val rowsAfter = kept.count()
-      val parts = math.max(1L, (rowsAfter + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-      val tmp = new Path(s"${path}__compact_tmp")
-      kept.coalesce(parts).write.mode("overwrite").parquet(tmp.toString)
-      fs.delete(p, true)
-      fs.rename(tmp, p)
-      (rowsBefore, rowsAfter, filesBefore, nFiles.toLong)
-    }
-
+    def anti(df: DataFrame, c: String) =
+      df.join(del.withColumnRenamed("doc_id", c), Seq(c), "left_anti")
+    val drops = Seq[(String, DataFrame => DataFrame)](
+      "index" -> (anti(_, "id")),
+      "docs" -> (anti(_, "doc_id")),
+      "pairs" -> (df => anti(anti(df, "id_a"), "id_b")))
     try {
-      val (ib, ia, ifb, ifa) = rewrite(s"$state/index",
-        df => df.join(del.withColumnRenamed("doc_id", "id"), Seq("id"), "left_anti"))
-      val (db, da, _, _) = rewrite(s"$state/docs",
-        df => df.join(del, Seq("doc_id"), "left_anti"))
-      val (pb, pa, _, _) = rewrite(s"$state/pairs",
-        df => df
-          .join(del.withColumnRenamed("doc_id", "id_a"), Seq("id_a"), "left_anti")
-          .join(del.withColumnRenamed("doc_id", "id_b"), Seq("id_b"), "left_anti"))
+      val (before, filesBefore) = (set.totals, set.files("index"))
+      val kept = drops.filter(d => set.files(d._1) > 0).map { case (t, drop) =>
+        val df = drop(spark.read.parquet(s"$state/$t"))
+        val parts = math.max(1L, (df.count() + targetRowsPerFile - 1) / targetRowsPerFile).toInt
+        t -> df.coalesce(parts)
+      }
+      set.commit(f"${scala.util.Random.nextLong()}%016x", kept, base = true)((_, _) => "")
+      val after = set.totals
+      def span(t: String) = s"[${before(t)},${after(t)}]"
       val census = Dedup.bandBucketStats(spark.read.parquet(s"$state/index")).collect()(0)
-      s"""{"index_rows":[$ib,$ia],"index_files":[$ifb,$ifa],""" +
-        s""""docs":[$db,$da],"pairs":[$pb,$pa],""" +
+      s"""{"index_rows":${span("index")},"index_files":[$filesBefore,${set.files("index")}],""" +
+        s""""docs":${span("docs")},"pairs":${span("pairs")},""" +
         s""""n_buckets":${census.getAs[Long]("n_buckets")},""" +
         s""""max_bucket":${census.getAs[Long]("max_bucket")},""" +
         s""""n_oversize":${census.getAs[Long]("n_oversize")}}"""

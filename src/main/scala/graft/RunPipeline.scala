@@ -15,11 +15,11 @@ object RunPipeline {
     val spark = Session.build()
     val (inputDir, outDir) = args match {
       case Array("--fixture", out) =>
-        val fx = java.nio.file.Files.createTempDirectory("graft_fixture").toString
+        val fx = Session.scratch(spark, "fixture").toString
         RefFixture.write(spark, fx)
         (fx, out)
       case Array("--fixture", out, nTrain) =>
-        val fx = java.nio.file.Files.createTempDirectory("graft_fixture").toString
+        val fx = Session.scratch(spark, "fixture").toString
         RefFixture.write(spark, fx, nTrain.toLong, nTrain.toLong * 3 / 8)
         (fx, out)
       case Array(in, out) => (in, out)

@@ -52,6 +52,17 @@ object Session {
     spark
   }
 
+  /** The session's scratch path `name`, under one root per application,
+    * `<java.io.tmpdir>/graft_<appId>` (two concurrent sessions never share
+    * files): sink round-trips, fold generations, prebuilt bench indexes.
+    * The root is deleted when the JVM exits. Nothing is created here. */
+  def scratch(spark: SparkSession, name: String): java.nio.file.Path = {
+    val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
+      s"graft_${spark.sparkContext.applicationId}")
+    org.apache.spark.sql.graftbridge.Bridge.deleteOnShutdown(root.toFile)
+    root.resolve(name)
+  }
+
   /** Parse the `SPARK_GRAFT_CONF` sweep knob ("k1=v1;k2=v2"). Entries
     * are ';'-split unconditionally, so VALUES MAY NOT CONTAIN ';'
     * (documented in the verify skill); an entry without '=' fails with

@@ -662,8 +662,7 @@ object AggQueries {
     Q("h6_hll_at_rest",
       (s, d) => {
         val ev = T(s, d, "events").select(col("event_type"), col("user_id"))
-        val out = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-          s"graft_${s.sparkContext.applicationId}", "h6_sketches").toString
+        val out = graft.Session.scratch(s, "h6_sketches").toString
         ev.withColumn("shard", pmod(col("user_id"), lit(16)))
           .groupBy(col("event_type"), col("shard"))
           .agg(hll_sketch_agg(col("user_id"), 12).as("sk"))
@@ -697,8 +696,7 @@ object AggQueries {
     Q("h8_audience_overlap",
       (s, d) => {
         val ev = T(s, d, "events").select(col("event_type"), col("user_id"))
-        val out = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-          s"graft_${s.sparkContext.applicationId}", "h8_sketches").toString
+        val out = graft.Session.scratch(s, "h8_sketches").toString
         ev.withColumn("shard", pmod(col("user_id"), lit(16)))
           .groupBy(col("event_type"), col("shard"))
           .agg(hll_sketch_agg(col("user_id"), 12).as("sk"))
@@ -761,8 +759,7 @@ object AggQueries {
         val s2 = s; import s2.implicits._
         val Cms = graft.llm.Frequency.Cms
         val ev = T(s, d, "events").select(col("user_id"))
-        val out = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-          s"graft_${s.sparkContext.applicationId}", "h9_counters").toString
+        val out = graft.Session.scratch(s, "h9_counters").toString
         Cms.expand(ev, "user_id")
           .withColumn("shard", pmod(col("user_id"), lit(8)))
           .groupBy(col("shard"), col("depth"), col("bucket"))
@@ -816,8 +813,7 @@ object AggQueries {
       (s, d) => {
         val li = T(s, d, "lineitem").select(col("l_returnflag"),
           col("l_orderkey"), col("l_extendedprice").cast("double").as("v"))
-        val out = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-          s"graft_${s.sparkContext.applicationId}", "h7_sketches").toString
+        val out = graft.Session.scratch(s, "h7_sketches").toString
         li.withColumn("shard", pmod(col("l_orderkey"), lit(32)))
           .groupBy(col("l_returnflag"), col("shard"))
           .agg(kll_sketch_agg_double(col("v"), 400).as("sk"))

@@ -36,8 +36,8 @@ object BenchOps {
   private def emb(s: SparkSession, d: String) =
     s.read.parquet(s"$d/embeddings.parquet")
 
-  private def scratch(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_benchop_$tag").toString
+  private def scratch(s: SparkSession, tag: String, d: String): String =
+    graft.Session.scratch(s, s"benchop_${tag}_${d.hashCode}").toString
 
   def ops: Map[String, (SparkSession, String) => DataFrame] = Map(
     // d12 steady state: probe a PREBUILT at-rest band index with the
@@ -46,7 +46,7 @@ object BenchOps {
     "d12_op_incremental_probe" -> ((s, d) => {
       val corpus = docs(s, d).where(pmod(col("doc_id"), lit(3)) =!= 0)
       val idxPath = memo(s"d12|$d") {
-        val p = scratch("d12_index")
+        val p = scratch(s, "d12_index", d)
         Dedup.nearDupIndex(corpus, "doc_id", "text", w = 5, k = 64, bands = 32)
           .write.mode("overwrite").parquet(p)
         p
@@ -63,7 +63,7 @@ object BenchOps {
     "d13_op_cosine_probe" -> ((s, d) => {
       val corpus = emb(s, d).where(pmod(col("vec_id"), lit(3)) =!= 0)
       val idxPath = memo(s"d13|$d") {
-        val p = scratch("d13_index")
+        val p = scratch(s, "d13_index", d)
         Dedup.cosineIndex(corpus, "vec_id", "embedding",
           dim = 64, nPlanes = 16, nBands = 8).write.mode("overwrite").parquet(p)
         p
@@ -78,7 +78,7 @@ object BenchOps {
     // no brute truth in the timed region.
     "n7_op_ivf_probe" -> ((s, d) => {
       val (idxPath, cents) = memo(s"n7|$d") {
-        val p = scratch("n7_ivf")
+        val p = scratch(s, "n7_ivf", d)
         val (assigned, cs) = Similarity.ivfIndex(emb(s, d), "vec_id", "embedding")
         assigned.write.mode("overwrite").partitionBy("cell").parquet(p)
         (p, cs)
@@ -92,7 +92,7 @@ object BenchOps {
     // rerank against raw vectors.
     "n8_op_pq_probe" -> ((s, d) => {
       val (idxPath, books) = memo(s"n8|$d") {
-        val p = scratch("n8_pq")
+        val p = scratch(s, "n8_pq", d)
         val (codes, bks) = Similarity.pqIndex(emb(s, d), "vec_id", "embedding", dim = 64)
         codes.write.mode("overwrite").parquet(p)
         (p, bks)
@@ -106,7 +106,7 @@ object BenchOps {
     // rerank, against the at-rest codes table.
     "n9_op_ivfpq_probe" -> ((s, d) => {
       val idx = memo(s"n9|$d") {
-        val p = scratch("n9_ivfpq")
+        val p = scratch(s, "n9_ivfpq", d)
         val built = Similarity.ivfPqIndex(emb(s, d), "vec_id", "embedding",
           dim = 64, nlist = 16)
         built.codes.write.mode("overwrite").partitionBy("cell").parquet(p)

@@ -1396,7 +1396,7 @@ object LlmQueries {
         val emb = T(s, d, "embeddings")
         val qs = emb.where(col("vec_id") < 10)
         val idx = Similarity.ivfPqIndex(emb, "vec_id", "embedding", dim = 64, nlist = 16)
-        val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_index")
+        val dir = graft.Session.scratch(s, "n9_ivfpq_index")
         idx.codes.write.mode("overwrite").partitionBy("cell").parquet(dir.toString)
         val fromRest = Similarity.ivfPqTopKFromIndex(
           idx.copy(codes = s.read.parquet(dir.toString)), emb, qs,
@@ -1416,7 +1416,7 @@ object LlmQueries {
             Seq("query_id", "corpus_id"), "left")
           .agg(count(lit(1)).as("n_truth"),
             sum(coalesce(col("hit"), lit(0))).cast("long").as("n_hit"))
-        val out = graft.core.Relational.attachSingleton(
+        graft.core.Relational.attachSingleton(
             graft.core.Relational.attachSingleton(
               hits, qs.agg(count(lit(1)).as("n_queries"))), eq)
           .select(col("n_queries"), col("n_truth"),
@@ -1424,10 +1424,6 @@ object LlmQueries {
               .otherwise(col("n_hit") / col("n_truth") >= 0.5).as("recall_ok"),
             (col("n_mismatch") === 0L).as("atrest_equals_mem"))
           .localCheckpoint(true)
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverseIterator
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        out
       },
       Some("""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
              |  FROM embeddings WHERE vec_id < 10),
@@ -1452,7 +1448,7 @@ object LlmQueries {
         val emb = T(s, d, "embeddings")
         val qs = emb.where(col("vec_id") < 10)
         val (codes, books) = Similarity.pqIndex(emb, "vec_id", "embedding", dim = 64)
-        val dir = java.nio.file.Files.createTempDirectory("graft_pq_index")
+        val dir = graft.Session.scratch(s, "n8_pq_index")
         codes.write.mode("overwrite").parquet(dir.toString)
         val fromRest = Similarity.pqTopKFromIndex(
           s.read.parquet(dir.toString), books, emb, qs, "vec_id", "embedding",
@@ -1472,7 +1468,7 @@ object LlmQueries {
             Seq("query_id", "corpus_id"), "left")
           .agg(count(lit(1)).as("n_truth"),
             sum(coalesce(col("hit"), lit(0))).cast("long").as("n_hit"))
-        val out = graft.core.Relational.attachSingleton(
+        graft.core.Relational.attachSingleton(
             graft.core.Relational.attachSingleton(
               hits, qs.agg(count(lit(1)).as("n_queries"))), eq)
           .select(col("n_queries"), col("n_truth"),
@@ -1480,10 +1476,6 @@ object LlmQueries {
               .otherwise(col("n_hit") / col("n_truth") >= 0.6).as("recall_ok"),
             (col("n_mismatch") === 0L).as("atrest_equals_mem"))
           .localCheckpoint(true)
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverseIterator
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        out
       },
       Some("""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
              |  FROM embeddings WHERE vec_id < 10),
@@ -1510,7 +1502,7 @@ object LlmQueries {
         val emb = T(s, d, "embeddings")
         val qs = emb.where(col("vec_id") < 10)
         val (assigned, cents) = Similarity.ivfIndex(emb, "vec_id", "embedding")
-        val dir = java.nio.file.Files.createTempDirectory("graft_ivf_index")
+        val dir = graft.Session.scratch(s, "n7_ivf_index")
         assigned.write.mode("overwrite").partitionBy("cell").parquet(dir.toString)
         val fromRest = Similarity.ivfTopKFromIndex(
           s.read.parquet(dir.toString), cents, qs, "vec_id", "embedding", k = 3)
@@ -1528,7 +1520,7 @@ object LlmQueries {
             Seq("query_id", "corpus_id"), "left")
           .agg(count(lit(1)).as("n_truth"),
             sum(coalesce(col("hit"), lit(0))).cast("long").as("n_hit"))
-        val out = graft.core.Relational.attachSingleton(
+        graft.core.Relational.attachSingleton(
             graft.core.Relational.attachSingleton(
               hits, qs.agg(count(lit(1)).as("n_queries"))), eq)
           .select(col("n_queries"), col("n_truth"),
@@ -1536,10 +1528,6 @@ object LlmQueries {
               .otherwise(col("n_hit") / col("n_truth") >= 0.5).as("recall_ok"),
             (col("n_mismatch") === 0L).as("atrest_equals_mem"))
           .localCheckpoint(true)
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverseIterator
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        out
       },
       Some("""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
              |  FROM embeddings WHERE vec_id < 10),
@@ -3948,7 +3936,7 @@ object LlmQueries {
         val delta = emb.where(pmod(col("vec_id"), lit(3)) === 2)
         val qs = emb.where(col("vec_id") < 10)
         val (assignedBase, cents) = Similarity.ivfIndex(base, "vec_id", "embedding")
-        val dir = java.nio.file.Files.createTempDirectory("graft_ivf_incr")
+        val dir = graft.Session.scratch(s, "ivf_incr")
         assignedBase.write.mode("overwrite").partitionBy("cell").parquet(dir.toString)
         val assignedDelta = Similarity.assignToCentroids(delta, cents, "vec_id", "embedding")
         assignedDelta.write.mode("append").partitionBy("cell").parquet(dir.toString)
@@ -3981,7 +3969,7 @@ object LlmQueries {
         // reads green AND the artifact shows at a glance whether the
         // recall bar actually gated.
         val minRecallCorpus = 1000L
-        val out = graft.core.Relational.attachSingleton(
+        graft.core.Relational.attachSingleton(
             graft.core.Relational.attachSingleton(
               graft.core.Relational.attachSingleton(
                 hits, qs.agg(count(lit(1)).as("n_queries"))), eq),
@@ -3993,10 +3981,6 @@ object LlmQueries {
               .otherwise(col("n_hit") / col("n_truth") >= 0.5).as("recall_ok"),
             (col("n_mismatch") === 0L).as("fold_equals_recompute"))
           .localCheckpoint(true)
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverseIterator
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        out
       },
       Some("""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
              |  FROM embeddings WHERE vec_id < 10),

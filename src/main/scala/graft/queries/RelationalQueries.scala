@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.core.{Joins, Layout, Merge, Relational, Sampling, Validation, WideAgg}
 import graft.stats.{Auc, Correlations}
 import graft.core.Relational.SingletonAttachOps
+import graft.io.Generations
 
 /** One declared query per SURVEY.md §2 operator (the driver's correctness
   * surface). Every query returns a DataFrame whose column names match its
@@ -24,12 +25,13 @@ object RelationalQueries {
   private def T(s: SparkSession, dir: String, n: String): DataFrame =
     s.read.parquet(s"$dir/$n.parquet")
 
-  /** Per-session scratch path for sink round-trips: keyed by the Spark
-    * application id so two concurrent sessions on one machine never
-    * overwrite each other's round-trip files mid-read. */
-  private def scratch(s: SparkSession, name: String): java.nio.file.Path =
-    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_${s.sparkContext.applicationId}", name)
+  import graft.Session.scratch
+
+  /** An in-query fold into the query's own generation dir (see
+    * [[Generations.fold]]). */
+  private def fold(s: SparkSession, name: String, seed: DataFrame)(
+      steps: Seq[DataFrame => DataFrame]): DataFrame =
+    Generations.fold(s, scratch(s, name).toString, seed, steps)
 
   /** Shared oracle for j1 / j8 / j9: the salted and bloom-pruned joins'
     * contract IS "result equals the plain inner join". */
@@ -685,25 +687,18 @@ object RelationalQueries {
     Q("u2_incremental_agg",
       (s, d) => {
         val orders = T(s, d, "orders")
-        // alternating GENERATION dirs (the MV-replay layout): each fold
+        // GENERATION dirs (the MV-replay layout): each fold
         // reads gen i−1 and streams straight into gen i's parquet — no
         // eager block-manager materialization of the state between the
         // fold and its write (the old single-dir overwrite needed one
         // to avoid reading files mid-rewrite; at scale it doubled the
         // state I/O per fold)
-        def gen(i: Int) = scratch(s, s"u2_state_$i").toString
         def batch(i: Int) = orders.where(pmod(col("o_orderkey"), lit(3)) === i)
+        def partials(i: Int) =
+          graft.core.Merge.aggPartials(batch(i), Seq("o_orderstatus"), "o_totalprice")
         // seed state from batch 0, then fold batches 1 and 2 in
-        graft.core.Merge.aggPartials(batch(0), Seq("o_orderstatus"), "o_totalprice")
-          .write.mode("overwrite").parquet(gen(0))
-        (1 to 2).foreach { i =>
-          graft.core.Merge.mergeAggState(
-            s.read.parquet(gen(i - 1)),
-            graft.core.Merge.aggPartials(batch(i), Seq("o_orderstatus"), "o_totalprice"),
-            Seq("o_orderstatus"))
-            .write.mode("overwrite").parquet(gen(i))
-        }
-        s.read.parquet(gen(2))
+        fold(s, "u2_state", partials(0))((1 to 2).map(i => (st: DataFrame) =>
+          graft.core.Merge.mergeAggState(st, partials(i), Seq("o_orderstatus"))))
           .select(col("o_orderstatus"), col("cnt").as("n"),
             col("sum").cast("double").as("sum_price"),
             (col("sum").cast("double") / col("cnt")).as("avg_price"),
@@ -920,20 +915,14 @@ object RelationalQueries {
           .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"))
         val ord = Seq(col("o_totalprice").desc, col("o_orderkey").asc)
         // generation dirs, fold streams straight to parquet (see u2)
-        def gen(i: Int) = scratch(s, s"u7_state_$i").toString
         def batch(i: Int) = orders.where(pmod(col("o_orderkey"), lit(3)) === i)
-        graft.core.Merge.topKFold(orders.limit(0), batch(0),
-            Seq("o_orderpriority"), ord, k)
-          .write.mode("overwrite").parquet(gen(0))
-        (1 to 2).foreach { i =>
-          graft.core.Merge.topKFold(s.read.parquet(gen(i - 1)),
-            batch(i), Seq("o_orderpriority"), ord, k)
-            .write.mode("overwrite").parquet(gen(i))
-        }
+        def topK(st: DataFrame, i: Int) =
+          graft.core.Merge.topKFold(st, batch(i), Seq("o_orderpriority"), ord, k)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("o_orderpriority"))
           .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-        s.read.parquet(gen(2))
+        fold(s, "u7_state", topK(orders.limit(0), 0))(
+            (1 to 2).map(i => (st: DataFrame) => topK(st, i)))
           .withColumn("rk", row_number().over(w))
           .select(col("o_orderpriority"), col("rk"), col("o_orderkey"),
             col("o_totalprice"))
@@ -1229,20 +1218,11 @@ object RelationalQueries {
       (s, d) => {
         val li = T(s, d, "lineitem")
         // generation dirs, fold streams straight to parquet (see u2)
-        def gen(i: Int) = scratch(s, s"u9_state_$i").toString
         def batch(i: Int) = li.where(pmod(col("l_orderkey"), lit(3)) === i)
-        graft.core.Merge.corrPartials(batch(0), Seq("l_returnflag"),
-            "l_extendedprice", "l_discount")
-          .write.mode("overwrite").parquet(gen(0))
-        (1 to 2).foreach { i =>
-          graft.core.Merge.mergeCorrState(
-            s.read.parquet(gen(i - 1)),
-            graft.core.Merge.corrPartials(batch(i), Seq("l_returnflag"),
-              "l_extendedprice", "l_discount"),
-            Seq("l_returnflag"))
-            .write.mode("overwrite").parquet(gen(i))
-        }
-        val st = s.read.parquet(gen(2))
+        def partials(i: Int) = graft.core.Merge.corrPartials(batch(i),
+          Seq("l_returnflag"), "l_extendedprice", "l_discount")
+        val st = fold(s, "u9_state", partials(0))((1 to 2).map(i => (prev: DataFrame) =>
+          graft.core.Merge.mergeCorrState(prev, partials(i), Seq("l_returnflag"))))
         val nD = col("cnt").cast("double")
         def dd(c: String) = col(c).cast("double")
         st.select(col("l_returnflag"), col("cnt").as("n"),
@@ -2428,22 +2408,16 @@ object RelationalQueries {
               floor((col("v") - vmin) / (vmax - vmin) * 10), lit(0)),
               lit(9))).cast("int").as("bin"))
           .groupBy(col("bin")).agg(count(lit(1)).as(cnt))
-        // generation dirs, fold streams straight to parquet (see u2)
-        def gen(i: Int) = scratch(s, s"u10_state_$i").toString
+        // generation dirs, fold streams straight to parquet (see u2);
         // cur population = odd orderkeys, streamed in 3 residue batches
-        binned(pop(pmod(col("o_orderkey"), lit(6)) === 1), "n_cur")
-          .write.mode("overwrite").parquet(gen(0))
-        Seq(3, 5).zipWithIndex.foreach { case (r, i) =>
-          s.read.parquet(gen(i))
-            .unionByName(binned(pop(pmod(col("o_orderkey"), lit(6)) === r), "n_cur"))
-            .groupBy(col("bin")).agg(sum(col("n_cur")).as("n_cur"))
-            .write.mode("overwrite").parquet(gen(i + 1))
-        }
+        def cur(r: Int) = binned(pop(pmod(col("o_orderkey"), lit(6)) === r), "n_cur")
+        val curState = fold(s, "u10_state", cur(1))(Seq(3, 5).map(r => (st: DataFrame) =>
+          st.unionByName(cur(r)).groupBy(col("bin")).agg(sum(col("n_cur")).as("n_cur"))))
         val spine = s.range(0, 10).select(col("id").cast("int").as("bin"))
         val wAll = org.apache.spark.sql.expressions.Window.partitionBy(lit(0))
         val j = spine
           .join(binned(ref, "n_ref"), Seq("bin"), "left")
-          .join(s.read.parquet(gen(2)), Seq("bin"), "left")
+          .join(curState, Seq("bin"), "left")
           .na.fill(0L, Seq("n_ref", "n_cur"))
         val p = (col("n_ref") + 0.5) / (sum(col("n_ref")).over(wAll) + 5.0)
         val q = (col("n_cur") + 0.5) / (sum(col("n_cur")).over(wAll) + 5.0)
@@ -2503,15 +2477,9 @@ object RelationalQueries {
         val keys = ev.where(col("event_type") === "signup")
           .select(col("user_id").as("u")).distinct()
         // generation dirs, fold streams straight to parquet (see u2)
-        def gen(i: Int) = scratch(s, s"u11_state_$i").toString
-        B.build(keys.where(pmod(col("u"), lit(3)) === 0), "u")
-          .write.mode("overwrite").parquet(gen(0))
-        Seq(1, 2).foreach { r =>
-          B.merge(s.read.parquet(gen(r - 1)),
-            B.build(keys.where(pmod(col("u"), lit(3)) === r), "u"))
-            .write.mode("overwrite").parquet(gen(r))
-        }
-        val state = s.read.parquet(gen(2))
+        def part(r: Int) = B.build(keys.where(pmod(col("u"), lit(3)) === r), "u")
+        val state = fold(s, "u11_state", part(0))(
+          Seq(1, 2).map(r => (st: DataFrame) => B.merge(st, part(r))))
         val mismatches = state
           .join(B.build(keys, "u").withColumnRenamed("w", "w2"),
             Seq("idx"), "full")
@@ -2628,17 +2596,10 @@ object RelationalQueries {
           .agg(min(col("o_totalprice")).as("mn"),
             max(col("o_totalprice")).as("mx"))
         // generation dirs, fold streams straight to parquet (see u2)
-        def gen(i: Int) = scratch(s, s"u12_state_$i").toString
-        zm(orders.where(pmod(col("o_custkey"), lit(3)) === 0))
-          .write.mode("overwrite").parquet(gen(0))
-        Seq(1, 2).foreach { r =>
-          s.read.parquet(gen(r - 1))
-            .unionByName(zm(orders.where(pmod(col("o_custkey"), lit(3)) === r)))
-            .groupBy(col("bucket"))
-            .agg(min(col("mn")).as("mn"), max(col("mx")).as("mx"))
-            .write.mode("overwrite").parquet(gen(r))
-        }
-        val state = s.read.parquet(gen(2))
+        def part(r: Int) = zm(orders.where(pmod(col("o_custkey"), lit(3)) === r))
+        val state = fold(s, "u12_state", part(0))(Seq(1, 2).map(r => (st: DataFrame) =>
+          st.unionByName(part(r)).groupBy(col("bucket"))
+            .agg(min(col("mn")).as("mn"), max(col("mx")).as("mx"))))
         val mismatches = state
           .join(zm(orders).withColumnRenamed("mn", "mn2")
             .withColumnRenamed("mx", "mx2"), Seq("bucket"), "full")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
+import graft.io.Generations
 
 /** Structured Streaming surface over the events table: watermarked
   * windowed aggregation and stateful sessionization — the stream shapes
@@ -199,17 +200,13 @@ object EventStream {
     * `fold(prevState, batch)` (prevState is None on the first batch).
     *
     * Generations are keyed off the ENGINE-SUPPLIED batchId, never a
-    * driver-side counter, and a micro-batch whose output generation is
-    * already committed (its `_SUCCESS` marker exists) is SKIPPED —
-    * `foreachBatch` is at-least-once, so under a redelivered trigger a
-    * counter-based loop would double-increment the generation and fold
-    * the same rows twice, corrupting every non-idempotent fold (counts,
-    * sums, KLL weights). Checking `_SUCCESS` rather than the directory
-    * makes a half-written generation (crash mid-write) re-run instead
-    * of being trusted; `mode("overwrite")` then clears the partial
-    * output. At cluster scale the same idempotence comes from a table
-    * format's transactional commit keyed on batchId — this is that
-    * contract over raw parquet generations.
+    * driver-side counter, and each is a [[graft.io.Generations]] commit:
+    * `foreachBatch` is at-least-once, so a redelivered micro-batch whose
+    * output generation is already committed is SKIPPED (a counter-based
+    * loop would fold the same rows twice, corrupting every
+    * non-idempotent fold: counts, sums, KLL weights), and a generation
+    * half-written by a crash is re-folded, never trusted. The marker
+    * rule lives in that module.
     *
     * Returns the final state, `localCheckpoint`ed so it survives
     * deleting the scratch generations without a driver collect. */
@@ -217,19 +214,17 @@ object EventStream {
       stream: DataFrame)(
       fold: (Option[DataFrame], DataFrame) => DataFrame): DataFrame = {
     val lastGen = new java.util.concurrent.atomic.AtomicLong(0L)
+    def gen(i: Long) = work.resolve(s"state_$i").toString
     withReplayPartitions(spark) {
       val q = stream.writeStream
         .option("checkpointLocation", work.resolve("ckpt").toString)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val outDir = work.resolve(s"state_${batchId + 1}")
-          if (!java.nio.file.Files.exists(outDir.resolve("_SUCCESS"))) {
+          Generations.commit(spark, gen(batchId + 1)) {
             val prev =
-              if (batchId == 0L) None
-              else Some(spark.read.parquet(
-                work.resolve(s"state_$batchId").toString))
+              if (batchId == 0L) None else Some(Generations.read(spark, gen(batchId)))
             val out = fold(prev, batch)
             probeBatchPlan(out)
-            out.write.mode("overwrite").parquet(outDir.toString)
+            out
           }
           lastGen.updateAndGet(g => math.max(g, batchId + 1))
           ()
@@ -238,10 +233,9 @@ object EventStream {
         .start()
       q.awaitTermination()
     }
-    val gen = lastGen.get()
-    require(gen >= 2, s"MV replay must run multiple micro-batches, ran $gen")
-    val state = spark.read.parquet(work.resolve(s"state_$gen").toString)
-      .localCheckpoint(true)
+    val last = lastGen.get()
+    require(last >= 2, s"MV replay must run multiple micro-batches, ran $last")
+    val state = Generations.read(spark, gen(last)).localCheckpoint(true)
     rmTree(work)
     state
   }
@@ -462,11 +456,9 @@ object EventStream {
     * of batch boundaries or file arrival order — stream ≡ batch parity
     * like every other st query.
     *
-    * State lives in alternating parquet generations (read gen i, merge,
-    * write gen i+1): at scale the sink would be a table format's
-    * transactional commit, and the snapshot side of each merge would be
-    * partition-pruned by the batch's key range (see Merge scaladoc) —
-    * the generation swap here is the same shape minus the manifest.
+    * State lives in [[graft.io.Generations]] (read gen i, merge, write
+    * gen i+1); at scale the snapshot side of each merge would also be
+    * partition-pruned by the batch's key range (see Merge scaladoc).
     * The returned frame is `localCheckpoint`ed (materialized to executor
     * block storage) so it survives deleting the scratch generations
     * WITHOUT a driver collect — state rows scale with |distinct users|,
@@ -475,8 +467,7 @@ object EventStream {
   def runMergeOnce(spark: SparkSession, path: String, nChunks: Int = 4): DataFrame =
     foldEventsMv(spark, path, nChunks, "user_id", "event_id", "event_type", "value") {
       (prev, batch) =>
-        val state = prev.getOrElse(spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema))
+        val state = prev.getOrElse(Generations.empty(spark, batch.schema))
         graft.core.Merge.latestWins(state, batch, "user_id", "event_id")
     }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
+import graft.io.Generations
 import graft.llm.Dedup
 
 /** The rolling-ingestion NEAR-dup loop: a document stream probes a
@@ -21,7 +22,7 @@ import graft.llm.Dedup
   * regardless of batch count or arrival order — stream ≡ batch ≡ the
   * exhaustive exact-Jaccard oracle (d3's total-recall argument).
   *
-  * State lives in alternating parquet generations like
+  * State lives in [[graft.io.Generations]] commits like
   * [[EventStream.runMergeOnce]]; at scale the index is a bucketed table
   * on (band, band_hash) appended per batch (never rewritten), and the
   * emitted pairs feed the cluster-resolution job (d6/mm8 shape). */
@@ -96,14 +97,13 @@ object IngestStream {
     val pairsDir = work.resolve("pairs").toString
     val input = spark.read.parquet(path).select(col(idCol), col(payloadCol))
     val stream = EventStream.chunkedSource(work, input, idCol, nChunks)
-    // Every per-batch write is KEYED BY batchId and mode-overwrite, so a
-    // retried micro-batch (at-least-once foreachBatch) redoes identical
-    // work instead of double-appending: pairs land in pairs/batch=<id>
-    // (partition-discovered on read), and index generation b+1 is an
-    // overwrite derived from the immutable generation b. No driver-side
-    // counter participates in state addressing — `maxGen` only records
-    // the last generation for the final read.
+    // Every per-batch write is a Generations commit KEYED BY batchId, so
+    // a redelivered micro-batch skips what it committed: pairs land in
+    // pairs/batch=<id> (partition-discovered on read), and index
+    // generation b+1 derives from the immutable generation b. `maxGen`
+    // only records the last generation for the final read.
     @volatile var maxGen = 0L
+    def indexGen(b: Long) = work.resolve(s"index_$b").toString
     // same bounded-replay scoping as the MV folds (EventStream): the
     // per-batch probe is a fixed plan over a capped partition count
     // every trigger, so AQE re-planning and rate-sized shuffle fan-out
@@ -113,21 +113,18 @@ object IngestStream {
       stream.writeStream
         .option("checkpointLocation", work.resolve("ckpt").toString)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val index =
-            if (batchId == 0L)
-              spark.createDataFrame(spark.sparkContext
-                .emptyRDD[org.apache.spark.sql.Row], IndexSchema)
-            else spark.read.parquet(work.resolve(s"index_$batchId").toString)
-          val corpus = input.join(batch.select(idCol), Seq(idCol), "left_anti")
+          val index = Generations.read(spark, indexGen(batchId), Some(IndexSchema))
           // one signature pass per batch serves both the probe and the roll
-          val (pairs, batchIdx) = roll(corpus, index, batch)
-          EventStream.probeBatchPlan(pairs)
-          pairs.write.mode("overwrite")
-            .parquet(java.nio.file.Paths.get(pairsDir, s"batch=$batchId").toString)
+          lazy val (pairs, batchIdx) =
+            roll(input.join(batch.select(idCol), Seq(idCol), "left_anti"), index, batch)
+          Generations.commit(spark,
+              java.nio.file.Paths.get(pairsDir, s"batch=$batchId").toString) {
+            EventStream.probeBatchPlan(pairs)
+            pairs
+          }
           // roll the index forward (at scale: append to the bucketed
           // index table; the generation rewrite is fixture-scale only)
-          index.unionByName(batchIdx)
-            .write.mode("overwrite").parquet(work.resolve(s"index_${batchId + 1}").toString)
+          Generations.commit(spark, indexGen(batchId + 1))(index.unionByName(batchIdx))
           maxGen = math.max(maxGen, batchId + 1)
         }
         .trigger(Trigger.AvailableNow())

@@ -33,4 +33,9 @@ object Bridge {
     * `private[spark]`, reachable from this package). */
   def waitListenerBus(spark: org.apache.spark.sql.SparkSession, timeoutMillis: Long): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMillis)
+
+  /** Delete `dir` and everything under it when the JVM exits, through
+    * Spark's own shutdown-delete hook (`private[spark]`). */
+  def deleteOnShutdown(dir: java.io.File): Unit =
+    org.apache.spark.util.ShutdownHookManager.registerShutdownDeleteDir(dir)
 }

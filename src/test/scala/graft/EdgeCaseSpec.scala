@@ -52,7 +52,7 @@ class EdgeCaseSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Sinks.writeCsv(big, "/tmp/graft_guard.csv", maxRows = 10)
     }
-    val path = java.nio.file.Files.createTempDirectory("csv").resolve("q.csv").toString
+    val path = tempDir("csv").resolve("q.csv").toString
     Sinks.writeCsv(Seq(("a,b", 1), ("c\"d", 2)).toDF("s", "n"), path)
     val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(path))
     assert(lines.get(1) === "\"a,b\",1")
@@ -230,7 +230,7 @@ class EdgeCaseSpec extends SparkSpec {
 
   test("compactParquet validates target bytes and compacts a fragmented dir losslessly") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val d = tempDir("graft_compact").toString
     val df = (1L to 1000L).toDF("id")
     df.repartition(32).write.mode("overwrite").parquet(s"$d/frag")
     intercept[IllegalArgumentException] {
@@ -302,7 +302,7 @@ class EdgeCaseSpec extends SparkSpec {
   test("compactParquet refuses a hive-partitioned dir instead of collapsing it") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val d = java.nio.file.Files.createTempDirectory("graft_compact13").toString
+    val d = tempDir("graft_compact13").toString
     (1L to 10L).toDF("id").withColumn("p", col("id") % 2)
       .write.partitionBy("p").parquet(s"$d/part")
     val e = intercept[IllegalArgumentException] {

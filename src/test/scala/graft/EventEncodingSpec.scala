@@ -32,7 +32,7 @@ class EventEncodingSpec extends SparkSpec {
     * the shape the legacy nanos fixture presents after `nanosAsLong`. */
   private def writeNanosLong(n: Int): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_enc_nanos").toString
+    val dir = tempDir("graft_enc_nanos").toString
     rows(n).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .withColumn("ts", col("ts") * lit(1000L)) // micros → nanos
       .write.mode("overwrite").parquet(dir)
@@ -43,7 +43,7 @@ class EventEncodingSpec extends SparkSpec {
     * TIMESTAMP(MICROS, isAdjustedToUTC=false) — the pandas/pyarrow shape). */
   private def writeNtz(n: Int): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_enc_ntz").toString
+    val dir = tempDir("graft_enc_ntz").toString
     rows(n).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .withColumn("ts", timestamp_micros(col("ts")).cast(TimestampNTZType))
       .write.mode("overwrite").parquet(dir)
@@ -53,7 +53,7 @@ class EventEncodingSpec extends SparkSpec {
   /** Write the fixture with ts as a plain TimestampType instant. */
   private def writeUtc(n: Int): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_enc_utc").toString
+    val dir = tempDir("graft_enc_utc").toString
     rows(n).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .withColumn("ts", timestamp_micros(col("ts")))
       .write.mode("overwrite").parquet(dir)

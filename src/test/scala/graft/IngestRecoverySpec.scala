@@ -19,7 +19,7 @@ class IngestRecoverySpec extends SparkSpec {
     val embPath = "/root/testdata/sf0.001/embeddings.parquet"
 
     // clean reference run — pairs and the final rolled index
-    val cleanWork = Files.createTempDirectory("graft_spec_ingest_clean")
+    val cleanWork = tempDir("graft_spec_ingest_clean")
     val cleanPairs = IngestStream.runEmbedIngestAt(spark, cleanWork, embPath)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val cleanIndex = spark.read.parquet(cleanWork.resolve("index_3").toString)
@@ -31,7 +31,7 @@ class IngestRecoverySpec extends SparkSpec {
     // checkpoint, so the replay redelivers it; the roll's
     // mode("overwrite") must clear the remnant, and every downstream
     // generation and pair emission must come out exact.
-    val crashWork = Files.createTempDirectory("graft_spec_ingest_crash")
+    val crashWork = tempDir("graft_spec_ingest_crash")
     val gen1 = crashWork.resolve("index_1")
     Files.createDirectories(gen1)
     Files.write(gen1.resolve("part-00000-crash-remnant.snappy.parquet"),
@@ -63,13 +63,13 @@ class IngestRecoverySpec extends SparkSpec {
     // runNearDupIngestAt existed for exactly this spec.
     val docsPath = "/root/testdata/sf0.001/documents.parquet"
 
-    val cleanWork = Files.createTempDirectory("graft_spec_neardup_clean")
+    val cleanWork = tempDir("graft_spec_neardup_clean")
     val cleanPairs = IngestStream.runNearDupIngestAt(spark, cleanWork, docsPath)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val cleanIndex = spark.read.parquet(cleanWork.resolve("index_3").toString)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
 
-    val crashWork = Files.createTempDirectory("graft_spec_neardup_crash")
+    val crashWork = tempDir("graft_spec_neardup_crash")
     val gen1 = crashWork.resolve("index_1")
     Files.createDirectories(gen1)
     Files.write(gen1.resolve("part-00000-crash-remnant.snappy.parquet"),

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.llm.Dedup
 
@@ -12,7 +14,7 @@ class IngestSpec extends SparkSpec {
   test("RunIngest accumulates state across invocations; pairs equal the full run") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val work = java.nio.file.Files.createTempDirectory("graft_run_ingest")
+    val work = tempDir("graft_run_ingest")
     val state = work.resolve("state").toString
     // three daily drops
     (0 until 3).foreach { i =>
@@ -45,7 +47,7 @@ class IngestSpec extends SparkSpec {
     import spark.implicits._
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val work = java.nio.file.Files.createTempDirectory("graft_compact")
+    val work = tempDir("graft_compact")
     val state = work.resolve("state").toString
     // two drops into state; hold the third back as the post-compact probe
     (0 until 2).foreach { i =>
@@ -93,5 +95,126 @@ class IngestSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     java.nio.file.Files.walk(work).iterator().asScala.toSeq.reverseIterator
       .foreach(p => java.nio.file.Files.deleteIfExists(p))
+  }
+
+  private lazy val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    .select(col("doc_id"), col("text"))
+
+  /** Writes the three daily drops of `docs` (doc_id mod 3) under `work`. */
+  private def drops(work: Path): Seq[String] = (0 until 3).map { i =>
+    val bp = work.resolve(s"batch_$i").toString
+    docs.where(pmod(col("doc_id"), lit(3)) === i).write.parquet(bp)
+    bp
+  }
+
+  private def pairMap(df: DataFrame, sim: String = "jaccard"): Map[(Long, Long), Double] =
+    df.collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")) -> r.getAs[Double](sim))
+      .toMap
+
+  /** The state's pairs hold each full-run pair exactly once, with its
+    * Jaccard, and its index covers every doc × band. */
+  private def assertExact(state: String): Unit = {
+    val full = pairMap(Dedup.minHashNearDup(docs, "doc_id", "text",
+      w = 5, k = 64, bands = 32, minJaccard = 0.5))
+    val got = spark.read.parquet(s"$state/pairs")
+    assert(full.nonEmpty && pairMap(got).keySet === full.keySet)
+    assert(got.count() === full.size.toLong, "a pair is stored more than once")
+    pairMap(got).foreach { case (p, j) => assert(math.abs(j - full(p)) < 1e-12) }
+    assert(spark.read.parquet(s"$state/index").count() === docs.count() * 32)
+  }
+
+  private def field(summary: String, key: String): Long =
+    s""""$key":(\\d+)""".r.findFirstMatchIn(summary).map(_.group(1).toLong)
+      .getOrElse(fail(s"no $key in $summary"))
+
+  test("RunIngest retried on a committed batch writes nothing and repeats its summary") {
+    val work = tempDir("graft_ingest_retry")
+    val state = work.resolve("state").toString
+    val Seq(b0, b1, b2) = drops(work)
+    RunIngest.ingestOnce(spark, b0, state)
+    RunIngest.ingestOnce(spark, b1, state)
+    val once = RunIngest.ingestOnce(spark, b2, state)
+    def rows = Seq("index", "docs", "pairs").map(t => spark.read.parquet(s"$state/$t").count())
+    val before = rows
+    val again = RunIngest.ingestOnce(spark, b2, state)
+    assert(again === once)
+    assert(rows === before)
+    assertExact(state)
+    assert(field(again, "total_pairs") === before(2))
+    assert(field(again, "index_rows") === before(0))
+  }
+
+  test("RunIngest deletes the files of a batch that died mid-commit, then ingests it") {
+    import scala.jdk.CollectionConverters._
+    val work = tempDir("graft_ingest_remnant")
+    val state = work.resolve("state")
+    val Seq(b0, b1, b2) = drops(work)
+    // a commit that died after moving its files into the tables and
+    // before writing its manifest entry: the same commit into a copy of
+    // the state yields the files to plant
+    def plantRemnant(bp: String, twin: Path): Unit = {
+      if (Files.exists(state)) Files.walk(state).iterator().asScala.toSeq
+        .foreach(p => Files.copy(p, twin.resolve(state.relativize(p).toString)))
+      RunIngest.ingestOnce(spark, bp, twin.toString)
+      val planted = for (t <- Seq("index", "docs", "pairs");
+          p <- Files.list(twin.resolve(t)).iterator().asScala.toSeq
+          if !Files.exists(state.resolve(t).resolve(p.getFileName))) yield (t, p)
+      assert(planted.exists(_._2.getFileName.toString.startsWith("part-")))
+      planted.foreach { case (t, p) =>
+        Files.createDirectories(state.resolve(t))
+        Files.copy(p, state.resolve(t).resolve(p.getFileName))
+      }
+    }
+    plantRemnant(b0, work.resolve("twin_0")) // into a state with no manifest yet
+    RunIngest.ingestOnce(spark, b0, state.toString)
+    plantRemnant(b1, work.resolve("twin_1")) // beside a committed batch
+    RunIngest.ingestOnce(spark, b1, state.toString)
+    val last = RunIngest.ingestOnce(spark, b2, state.toString)
+    assertExact(state.toString)
+    assert(field(last, "total_pairs") === spark.read.parquet(s"$state/pairs").count())
+    assert(field(last, "index_rows") === docs.count() * 32)
+  }
+
+  test("RunIngest adopts a state written by plain parquet appends") {
+    val work = tempDir("graft_ingest_adopt")
+    val state = work.resolve("state").toString
+    val Seq(b0, b1, b2) = drops(work)
+    // the manifest-less layout: each batch's pairs, index rows and docs
+    // appended to the three table dirs
+    Seq(b0, b1).zipWithIndex.foreach { case (bp, i) =>
+      val batch = spark.read.parquet(bp)
+      val (corpus, index) =
+        if (i == 0) (batch.limit(0), graft.io.Generations.empty(spark,
+          graft.streaming.IngestStream.IndexSchema))
+        else (spark.read.parquet(s"$state/docs"), spark.read.parquet(s"$state/index"))
+      val (pairs, batchIdx) = Dedup.incrementalNearDupRoll(
+        corpus, index, batch, "doc_id", "text", 5, 64, 32, 0.5)
+      pairs.write.mode("append").parquet(s"$state/pairs")
+      batchIdx.write.mode("append").parquet(s"$state/index")
+      batch.write.mode("append").parquet(s"$state/docs")
+    }
+    val summary = RunIngest.ingestOnce(spark, b2, state)
+    assertExact(state)
+    assert(field(summary, "total_pairs") === spark.read.parquet(s"$state/pairs").count())
+    assert(field(summary, "index_rows") === docs.count() * 32)
+  }
+
+  test("RunIngest --embed accumulates state; pairs equal the full cosine LSH run") {
+    val vecs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"))
+    val work = tempDir("graft_ingest_embed")
+    val state = work.resolve("state").toString
+    (0 until 3).foreach { i =>
+      val bp = work.resolve(s"batch_$i").toString
+      vecs.where(pmod(col("vec_id"), lit(3)) === i).write.parquet(bp)
+      RunIngest.ingestEmbedOnce(spark, bp, state)
+    }
+    val full = pairMap(Dedup.cosinePairsLsh(vecs, "vec_id", "embedding",
+      minCos = 0.45, dim = 64, nPlanes = 16, nBands = 8), "cos")
+    val got = spark.read.parquet(s"$state/pairs")
+    assert(full.nonEmpty && pairMap(got, "cos").keySet === full.keySet)
+    assert(got.count() === full.size.toLong)
+    pairMap(got, "cos").foreach { case (p, c) => assert(math.abs(c - full(p)) < 1e-12) }
+    assert(spark.read.parquet(s"$state/index").count() === vecs.count() * 8)
   }
 }

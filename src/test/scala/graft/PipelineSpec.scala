@@ -21,8 +21,8 @@ class PipelineSpec extends SparkSpec {
   private val JobGroup = "graft-pipeline-spec"
 
   private lazy val result = {
-    val dir = Files.createTempDirectory("graft_fixture").toString
-    val outDir = Files.createTempDirectory("graft_out").toString
+    val dir = tempDir("graft_fixture").toString
+    val outDir = tempDir("graft_out").toString
     RefFixture.write(spark, dir, nTrain = 6000, nTest = 2000)
     // Count ONLY this run's jobs, identified by job group: the session
     // (and its listener bus) is shared across concurrently-running

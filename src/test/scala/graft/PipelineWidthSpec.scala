@@ -20,8 +20,8 @@ class PipelineWidthSpec extends SparkSpec {
   private val Width = 2240 // + customer_id = 2241, the reference width
 
   private lazy val result = {
-    val dir = Files.createTempDirectory("graft_fixture_w").toString
-    val outDir = Files.createTempDirectory("graft_out_w").toString
+    val dir = tempDir("graft_fixture_w").toString
+    val outDir = tempDir("graft_out_w").toString
     RefFixture.write(spark, dir, nTrain = 1500, nTest = 500, nExtraCols = Width)
     (EdaPipeline.run(spark, dir, outDir), outDir)
   }

@@ -157,7 +157,7 @@ class PlanSpec extends SparkSpec {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val qs = emb.where(col("vec_id") < 3)
     val (assigned, cents) = Similarity.ivfIndex(emb, "vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_plan")
+    val dir = tempDir("graft_ivf_plan")
     try {
       assigned.write.mode("overwrite").partitionBy("cell").parquet(dir.toString)
       val probe = Similarity.ivfTopKFromIndex(

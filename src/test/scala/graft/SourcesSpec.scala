@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Source/sink round-trips and partition pruning — the scan-side scale
@@ -11,7 +10,7 @@ class SourcesSpec extends SparkSpec {
   private lazy val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
 
   test("hive-partitioned write + read prunes partitions at the scan") {
-    val dir = Files.createTempDirectory("graft_part").toString
+    val dir = tempDir("graft_part").toString
     orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(dir)
     val back = spark.read.parquet(dir).where(col("o_orderstatus") === "F")
     val plan = back.queryExecution.executedPlan.toString
@@ -23,7 +22,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("Sinks.writeParquetPartitioned: pruning, sorted files, bounded file count") {
-    val dir = Files.createTempDirectory("graft_psink").toString
+    val dir = tempDir("graft_psink").toString
     graft.io.Sinks.writeParquetPartitioned(
       orders, dir, Seq("o_orderstatus"), sortCols = Seq("o_orderkey"))
     val back = spark.read.parquet(dir)
@@ -41,7 +40,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("CSV round-trip preserves data with explicit schema") {
-    val dir = Files.createTempDirectory("graft_csv").toString
+    val dir = tempDir("graft_csv").toString
     val sample = orders.limit(500).select("o_orderkey", "o_totalprice", "o_orderstatus")
     sample.write.mode("overwrite").option("header", "true").csv(dir)
     val back = spark.read.option("header", "true").schema(sample.schema).csv(dir)
@@ -52,7 +51,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("JSON round-trip preserves data incl. nested struct") {
-    val dir = Files.createTempDirectory("graft_json").toString
+    val dir = tempDir("graft_json").toString
     val sample = orders.limit(200)
       .select(col("o_orderkey"), struct(col("o_totalprice"), col("o_orderstatus")).as("payload"))
     sample.write.mode("overwrite").json(dir)
@@ -64,7 +63,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("p3 shape: partitioned scan + broadcast join keeps partition pruning") {
-    val dir = Files.createTempDirectory("graft_p3").toString
+    val dir = tempDir("graft_p3").toString
     graft.io.Sinks.writeParquetPartitioned(orders, dir, Seq("o_orderstatus"))
     val customer = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
     val q = spark.read.parquet(dir)

@@ -88,9 +88,8 @@ class StreamingPlanShapeSpec extends SparkSpec {
     // batches. The probe must capture its micro-batch plans and the
     // GroupArrayGuard walk must flag them; if this goes green the
     // streaming side of the guard has gone blind again.
-    import java.nio.file.Files
     val s = spark; import s.implicits._
-    val work = Files.createTempDirectory("graft_spec_collectprobe")
+    val work = tempDir("graft_spec_collectprobe")
     val srcDir = work.resolve("src").toString
     Seq.tabulate(30)(i => (i.toLong, (i % 3).toLong, i.toDouble))
       .toDF("event_id", "user_id", "value")

@@ -104,8 +104,8 @@ class StreamingSpec extends SparkSpec {
   test("foreachBatch sink with checkpoint: restart continues without reprocessing") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft_fb").toString
+    val ckpt = tempDir("graft_ckpt").toString
+    val outDir = tempDir("graft_fb").toString
     val seen = new java.util.concurrent.ConcurrentHashMap[Long, java.lang.Long]()
     val input = MemoryStream[Long]
 
@@ -195,7 +195,7 @@ class StreamingSpec extends SparkSpec {
     // across batches (totals add up, recent-5 merges across batches)
     val raw = graft.core.Tables
       .readEventsPath(spark, "/root/testdata/sf0.001/events.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft_profile_multi").toString
+    val dir = tempDir("graft_profile_multi").toString
     raw.repartition(4).write.mode("overwrite").parquet(dir)
     val multi = EventStream.runProfileOnce(spark, dir,
       maxFilesPerTrigger = Some(1))
@@ -241,7 +241,7 @@ class StreamingSpec extends SparkSpec {
     val cuts = ev.select(unix_micros(col("ts")).as("tsu")).orderBy(col("tsu"))
       .collect().map(_.getLong(0))
     val (c1, c2) = (cuts(cuts.length / 3), cuts(2 * cuts.length / 3))
-    val dir = java.nio.file.Files.createTempDirectory("graft_anom_multi").toString
+    val dir = tempDir("graft_anom_multi").toString
     Seq(
       ev.where(unix_micros(col("ts")) < c1),
       ev.where(unix_micros(col("ts")) >= c1 && unix_micros(col("ts")) < c2),
@@ -406,7 +406,7 @@ class StreamingSpec extends SparkSpec {
     // that batch 0 is skipped, so the final count is exactly
     // sentinel + rows of batches 1..n-1.
     import java.nio.file.Files
-    val work = Files.createTempDirectory("graft_spec_mvidem")
+    val work = tempDir("graft_spec_mvidem")
     val srcDir = work.resolve("src").toString
     val s = spark; import s.implicits._
     Seq.tabulate(30)(i => (i.toLong, i % 3)).toDF("v", "chunk")
@@ -442,7 +442,7 @@ class StreamingSpec extends SparkSpec {
     // part-file or silently serve garbage. Planted: state_1 with a
     // syntactically invalid parquet part-file and NO _SUCCESS.
     import java.nio.file.Files
-    val work = Files.createTempDirectory("graft_spec_mvrecover")
+    val work = tempDir("graft_spec_mvrecover")
     val srcDir = work.resolve("src").toString
     val s = spark; import s.implicits._
     Seq.tabulate(30)(i => (i.toLong, i % 3)).toDF("v", "chunk")

@@ -125,7 +125,7 @@ class ValidationOpsSpec extends SparkSpec {
   // ---- t5/t6 query semantics over a planted mini corpus --------------------
 
   private def plantEvents(rows: Seq[(Long, String, String, Long, Double)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_valspec").toString
+    val dir = tempDir("graft_valspec").toString
     rows.toDF("user_id", "event_type", "tss", "event_id", "value")
       .select(col("event_id"), to_timestamp(col("tss")).as("ts"), col("user_id"),
         col("event_type"), col("value"), lit("{}").as("props"))
@@ -243,7 +243,7 @@ class ValidationOpsSpec extends SparkSpec {
   // ---- RunQuality CLI ------------------------------------------------------
 
   test("RunQuality gate runs end-to-end in self-split mode and writes all sections") {
-    val out = java.nio.file.Files.createTempDirectory("graft_rq").toString
+    val out = tempDir("graft_rq").toString
     RunQuality.gateOnce(spark, "/root/testdata/sf0.001/orders.parquet", out)
     Seq("constraints.csv", "drift_psi.csv", "outliers.csv", "shape.csv",
         "quality_summary.json")
@@ -260,7 +260,7 @@ class ValidationOpsSpec extends SparkSpec {
   }
 
   test("RunQuality gate flips admit=false on planted drift and names the column") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rq_fail").toString
+    val dir = tempDir("graft_rq_fail").toString
     // reference: metric uniform over [0, 997); current: the same shape
     // shifted far right — every current value lands in the reference's
     // top bin, PSI >> the 0.25 action threshold. The id column is

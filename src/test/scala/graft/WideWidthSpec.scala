@@ -24,7 +24,7 @@ class WideWidthSpec extends SparkSpec {
 
   /** Wide fixture written once, read back from parquet. */
   private lazy val wide = {
-    val dir = Files.createTempDirectory("graft_wide").toString
+    val dir = tempDir("graft_wide").toString
     RefFixture.trainExtra(spark, n = Rows, nCols = Width)
       .write.mode("overwrite").parquet(s"$dir/train_extra_features.parquet")
     spark.read.parquet(s"$dir/train_extra_features.parquet")
@@ -120,8 +120,8 @@ class WideWidthSpec extends SparkSpec {
     // null-rates feeding block 9, block 13 screening over the full
     // width, the report writers) can't escape. Rows stay small — width
     // is the stress, not volume.
-    val dir = Files.createTempDirectory("graft_widepipe_in").toString
-    val outDir = Files.createTempDirectory("graft_widepipe_out").toString
+    val dir = tempDir("graft_widepipe_in").toString
+    val outDir = tempDir("graft_widepipe_out").toString
     RefFixture.write(spark, dir, nTrain = 2000, nTest = 800, nExtraCols = Width)
     val r = graft.pipeline.EdaPipeline.run(spark, dir, outDir)
     // golden invariants hold at width
