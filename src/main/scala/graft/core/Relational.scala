@@ -43,38 +43,56 @@ object Relational {
       .filter(col("rk") <= k)
   }
 
-  /** Exact global 1-based rank over `order` with NO single-partition stage
-    * (the scale-safe replacement for `row_number() OVER (ORDER BY …)`):
-    *   1. one range shuffle on the order keys (explicit partition count, so
-    *      AQE never re-coalesces it differently per consumer);
-    *   2. local sort, then `monotonically_increasing_id()` — its upper bits
-    *      are the physical partition index and its lower 33 bits a
-    *      consecutive within-partition counter, so one codegen'd projection
-    *      yields (pid, local_rank) with no second shuffle and no
-    *      mapPartitions (the expression is nondeterministic, which also
-    *      bars the optimizer from reordering it below the sort);
-    *   3. a tiny one-row-per-partition prefix-offset table (derived from
-    *      the SAME exchange via reuse) broadcast back to bridge partitions
-    *      — the pattern proven for AUC in [[graft.stats.Auc]].
-    * Adds `rankCol` (long) and `totalCol` (long, the table row count).
-    * Include unique tie-breakers in `order` for a deterministic rank.
-    * Assumes < 2^33 rows per range partition (size partitions accordingly).
+  /** What [[prefixScan]] accumulates along the order, per group. */
+  private sealed trait Scan
+  /** 1-based running row count; also emits the group's row count. */
+  private final case class RankScan(totalCol: String) extends Scan
+  /** Running Σ `weight` (as long) over rows at-or-before the row. */
+  private final case class SumScan(weight: Column) extends Scan
+  /** max(`value`) over rows strictly BEFORE the row (null when none). */
+  private final case class PriorMaxScan(value: Column) extends Scan
+
+  /** The one distributed prefix scan behind every global / per-group
+    * rank and running aggregate here (and through them AUC, deciles and
+    * the token-budget walk), with NO single-partition stage and no
+    * per-group serialization:
+    *   1. one range shuffle on (group ++ order), explicit partition count
+    *      so AQE never re-coalesces it differently per consumer — a hot
+    *      group spreads over many consecutive partitions;
+    *   2. local sort, then `monotonically_increasing_id()` — its upper
+    *      bits are the physical partition index and its lower 33 bits a
+    *      consecutive within-partition counter, so one projection yields
+    *      (pid, position) with no second shuffle and no mapPartitions
+    *      (the expression is nondeterministic, which also bars the
+    *      optimizer from reordering it below the sort);
+    *   3. a tiny per-(partition, group) slice table (≤ partitions + groups
+    *      rows) turned into strict-prior offsets per group by a window
+    *      over the slices, broadcast back and joined NULL-SAFELY on the
+    *      group keys, so a null group is one group like any other.
+    * Rank is position − slice-first + 1 + offset (no data-path window);
+    * sum and prior-max run a window per (partition, group) slice —
+    * bounded by partition size, never a whole group.
+    *
+    * `order` must be a TOTAL order within the group (add a unique
+    * tie-break, or pre-aggregate to one row per order key) — tied rows
+    * get order-dependent values. Assumes < 2^33 rows per range partition.
+    * Working columns are named `__scan_*`, so they never collide with a
+    * caller's output names.
     *
     * CONSISTENCY NOTE (the round-12 rank-corruption fix): the offsets
     * side and the data side MUST observe the same physical range
-    * partitioning. With both branches declared lazily off one `ranged`
-    * frame, that only held when Catalyst's exchange-reuse fired — and
-    * column pruning breaks it: the offsets branch needs no payload
-    * columns, so any input with a column outside `order` pruned to a
-    * DIFFERENT (non-canonically-equal) exchange, each branch sampled its
-    * own range boundaries, and the prefix offsets silently mis-keyed —
-    * nondeterministically wrong ranks (measured: 13k/15k ranks off on a
-    * 3-column orders frame; every committed caller happened to pass
-    * order-only frames, which is why the oracle gate never fired). The
-    * sorted+mid frame is therefore materialized ONCE via eager
-    * `localCheckpoint` — both branches read the same partitions, with
-    * lineage truncated so a recompute (which would re-sample boundaries)
-    * can never happen.
+    * partitioning. With both branches declared lazily off one range-
+    * partitioned frame, that only held when Catalyst's exchange-reuse
+    * fired — and column pruning breaks it: the offsets branch needs no
+    * payload columns, so any input with a column outside `order` pruned
+    * to a DIFFERENT (non-canonically-equal) exchange, each branch
+    * sampled its own range boundaries, and the prefix offsets silently
+    * mis-keyed (measured: 13k/15k ranks off on a 3-column orders frame;
+    * 4,867–4,992 of 5,000 sf0.1 documents kept by a budget that fits all
+    * of them when the text payload rode along). The sorted+mid frame is
+    * therefore materialized ONCE via eager `localCheckpoint` — both
+    * branches read the same partitions, with lineage truncated so a
+    * recompute (which would re-sample boundaries) can never happen.
     *
     * COST + ROBUSTNESS CONTRACT: the checkpoint copies the FULL input
     * frame, payload columns included — a slim-only copy is impossible in
@@ -82,83 +100,104 @@ object Relational {
     * that is stable across recomputes, and minting one
     * (monotonically_increasing_id on the input) is itself unstable under
     * shuffle-fetch reordering unless the full frame is materialized
-    * first. So: CALLERS PASS SLIM FRAMES (order cols + whatever the rank
-    * feeds; every committed caller does) and join wide payload back on
-    * their own key. localCheckpoint also truncates lineage: on a real
-    * cluster, losing an executor holding checkpoint blocks fails the job
-    * (no recompute path) — the price of deterministic ranks; use cluster
+    * first. So callers should pass slim frames (order cols + whatever
+    * the scan feeds) and join wide payload back on their own key.
+    * localCheckpoint also truncates lineage: on a real cluster, losing
+    * an executor holding checkpoint blocks fails the job (no recompute
+    * path) — the price of deterministic scans; use cluster
     * `checkpoint()` to reliable storage if that tradeoff is wrong for a
     * deployment. */
-  def withGlobalRank(df: DataFrame, order: Seq[Column], rankCol: String,
-      totalCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val nPart = spark.sessionState.conf.numShufflePartitions
-    val withMid = df.repartitionByRange(nPart, order: _*)
-      .sortWithinPartitions(order: _*)
-      .withColumn("__mid", monotonically_increasing_id())
+  private def prefixScan(df: DataFrame, groupCols: Seq[String], order: Seq[Column],
+      scan: Scan, outCol: String): DataFrame = {
+    val nPart = df.sparkSession.sessionState.conf.numShufflePartitions
+    val keys = groupCols.map(col)
+    val input = scan match {
+      case SumScan(w) => df.withColumn("__scan_x", w.cast("long"))
+      case PriorMaxScan(v) => df.withColumn("__scan_x", v)
+      case _: RankScan => df
+    }
+    val sorted = input.repartitionByRange(nPart, keys ++ order: _*)
+      .sortWithinPartitions(keys ++ order: _*)
+      .withColumn("__scan_mid", monotonically_increasing_id())
       .localCheckpoint(true)
+      .withColumn("__scan_pid", shiftright(col("__scan_mid"), 33).cast("int"))
 
-    // Tiny side: one row per partition → prefix offset + grand total. The
-    // windows below run over ≤ nPart rows (constant partition key keeps
-    // them off the data path).
-    val wOff = Window.partitionBy(lit(0)).orderBy("__pid")
+    // Tiny side: one row per (partition, group) slice, keyed by renamed
+    // copies of (pid, group) for the join back. Its windows run over the
+    // slice table, not the data (a constant key stands in for "no
+    // groups", which also keeps WindowExec from logging its
+    // single-partition warning).
+    val oKeys = groupCols.indices.map(i => s"__scan_g$i")
+    val slices = sorted.groupBy(col("__scan_pid").as("__scan_opid") +:
+      keys.zip(oKeys).map { case (k, o) => k.as(o) }: _*)
+    val byGroup =
+      Window.partitionBy((if (keys.isEmpty) Seq(lit(0)) else oKeys.map(col)): _*)
+    val prior = byGroup.orderBy(col("__scan_opid"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = withMid
-      .select(shiftright(col("__mid"), 33).cast("int").as("__pid"))
-      .groupBy("__pid").agg(count(lit(1)).as("__pn"))
-      .withColumn("__off", coalesce(sum("__pn").over(wOff), lit(0L)))
-      .withColumn(totalCol, sum("__pn").over(Window.partitionBy(lit(0))))
-      .select("__pid", "__off", totalCol)
+    val offsets = scan match {
+      case RankScan(totalCol) =>
+        slices.agg(count(lit(1)).as("__scan_n"),
+            min(col("__scan_mid")).as("__scan_first"))
+          .withColumn("__scan_off", coalesce(sum(col("__scan_n")).over(prior), lit(0L)))
+          .withColumn(totalCol, sum(col("__scan_n")).over(byGroup))
+      case _: SumScan =>
+        slices.agg(sum(col("__scan_x")).as("__scan_n"))
+          .withColumn("__scan_off", coalesce(sum(col("__scan_n")).over(prior), lit(0L)))
+      case _: PriorMaxScan =>
+        slices.agg(max(col("__scan_x")).as("__scan_n"))
+          .withColumn("__scan_off", max(col("__scan_n")).over(prior))
+    }
+    val onSlice = groupCols.zip(oKeys).foldLeft(col("__scan_pid") === col("__scan_opid")) {
+      case (acc, (g, o)) => acc && (col(g) <=> col(o))
+    }
 
-    withMid
-      .withColumn("__pid2", shiftright(col("__mid"), 33).cast("int"))
-      .withColumn("__lrk", col("__mid").bitwiseAND(lit((1L << 33) - 1)) + lit(1L))
-      .join(broadcast(offsets), col("__pid2") === col("__pid"))
-      .withColumn(rankCol, col("__lrk") + col("__off"))
-      .drop("__mid", "__pid", "__pid2", "__lrk", "__off")
+    val slice = Window.partitionBy(col("__scan_pid") +: keys: _*).orderBy(col("__scan_mid"))
+    val withLocal = scan match {
+      case _: RankScan => sorted
+      case _: SumScan => sorted.withColumn("__scan_loc", sum(col("__scan_x")).over(
+        slice.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      case _: PriorMaxScan => sorted.withColumn("__scan_loc", max(col("__scan_x")).over(
+        slice.rowsBetween(Window.unboundedPreceding, -1)))
+    }
+    val value = scan match {
+      case _: RankScan => col("__scan_mid") - col("__scan_first") + 1 + col("__scan_off")
+      case _: SumScan => col("__scan_loc") + col("__scan_off")
+      case _: PriorMaxScan => greatest(col("__scan_loc"), col("__scan_off"))
+    }
+    withLocal.join(broadcast(offsets.drop("__scan_n")), onSlice)
+      .withColumn(outCol, value)
+      .drop(Seq("__scan_x", "__scan_mid", "__scan_pid", "__scan_loc", "__scan_opid",
+        "__scan_first", "__scan_off") ++ oKeys: _*)
   }
 
-  /** DISTRIBUTED global running total: `cumCol` = Σ weight over all rows
-    * at-or-before this row in the global `order` — the weighted
-    * generalization of [[withGlobalRank]] (rank = cumsum of weight 1),
-    * built on the same machinery: one range exchange + per-partition
-    * sorted window (O(1) state, parallel across partitions) + a
-    * broadcast of per-partition prefix offsets. No single-partition
-    * stage anywhere. The same branch-consistency rule applies, so the
-    * sorted frame is eagerly checkpointed once (full-frame copy — pass
-    * SLIM frames, see withGlobalRank's contract note).
+  /** Exact global 1-based rank over `order` (the scale-safe replacement
+    * for `row_number() OVER (ORDER BY …)`) via [[prefixScan]]. Adds
+    * `rankCol` (long) and `totalCol` (long, the table row count).
+    * Include unique tie-breakers in `order` for a deterministic rank. */
+  def withGlobalRank(df: DataFrame, order: Seq[Column], rankCol: String,
+      totalCol: String): DataFrame =
+    prefixScan(df, Nil, order, RankScan(totalCol), rankCol)
+
+  /** Global running total: `cumCol` = Σ weight over all rows at-or-before
+    * this row in the global `order` — the weighted generalization of
+    * [[withGlobalRank]] (rank = cumsum of weight 1), via [[prefixScan]].
     *
     * Primary use: cumulative counts over VALUE HISTOGRAMS (CDFs, exact
-    * tie-aware ranks à la a28 — group to (value, count) first, then
-    * cumsum the counts; the checkpoint then holds distinct values, not
-    * rows). Ties in `order` get order-dependent intermediate cumsums —
-    * include a unique tie-break, or pre-aggregate so ties cannot exist
+    * tie-aware ranks à la a28 and AUC — group to (value, count) first,
+    * then cumsum the counts; the checkpoint then holds distinct values,
+    * not rows). Ties in `order` get order-dependent intermediate cumsums
+    * — include a unique tie-break, or pre-aggregate so ties cannot exist
     * (the histogram pattern does exactly that). */
   def withGlobalCumSum(df: DataFrame, order: Seq[Column], weight: Column,
-      cumCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val nPart = spark.sessionState.conf.numShufflePartitions
-    val withMid = df.withColumn("__w", weight.cast("long"))
-      .repartitionByRange(nPart, order: _*)
-      .sortWithinPartitions(order: _*)
-      .withColumn("__mid", monotonically_increasing_id())
-      .localCheckpoint(true)
-    val wOff = Window.partitionBy(lit(0)).orderBy("__pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = withMid
-      .select(shiftright(col("__mid"), 33).cast("int").as("__pid"), col("__w"))
-      .groupBy("__pid").agg(sum(col("__w")).as("__pw"))
-      .withColumn("__off", coalesce(sum("__pw").over(wOff), lit(0L)))
-      .select("__pid", "__off")
-    val wLoc = Window.partitionBy(col("__pid2")).orderBy(col("__mid"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    withMid
-      .withColumn("__pid2", shiftright(col("__mid"), 33).cast("int"))
-      .withColumn("__lc", sum(col("__w")).over(wLoc))
-      .join(broadcast(offsets), col("__pid2") === col("__pid"))
-      .withColumn(cumCol, col("__lc") + col("__off"))
-      .drop("__w", "__mid", "__pid", "__pid2", "__lc")
-  }
+      cumCol: String): DataFrame =
+    prefixScan(df, Nil, order, SumScan(weight), cumCol)
+
+  /** Per-group running total — [[withGlobalCumSum]] restarted per group
+    * of `groupCols` (null keys form one group), via [[prefixScan]]: a hot
+    * group spreads over many range partitions instead of one reducer. */
+  def withGroupCumSum(df: DataFrame, groupCols: Seq[String], order: Seq[Column],
+      weight: Column, cumCol: String): DataFrame =
+    prefixScan(df, groupCols, order, SumScan(weight), cumCol)
 
   /** Attach a 1-row scalar frame to every row of `df` — the audit-clean
     * replacement for `crossJoin(broadcast(oneRow))`: a 1-row cross join
@@ -217,15 +256,9 @@ object Relational {
       Relational.attachSingleton(df, scalars)
   }
 
-  /** DISTRIBUTED strict-prior running MAX: `outCol` = max(`value`) over
-    * all rows strictly BEFORE this row in the global `order` (null when
-    * no predecessor) — the running-extreme sibling of
-    * [[withGlobalCumSum]], built on the same machinery: one range
-    * exchange + per-partition sorted window (rowsBetween(-∞,-1), O(1)
-    * state, parallel across partitions) + a broadcast of per-partition
-    * STRICT-prior prefix maxima. No single-partition stage on the data
-    * path. The eager checkpoint carries the same branch-consistency
-    * rationale as withGlobalRank — pass slim frames.
+  /** Strict-prior running MAX: `outCol` = max(`value`) over all rows
+    * strictly BEFORE this row in the global `order` (null when no
+    * predecessor), via [[prefixScan]].
     *
     * Primary use: dominance tests over a sorted axis (the 2-D skyline,
     * w19: a point survives iff its y beats the strict running max over
@@ -234,32 +267,8 @@ object Relational {
     * row per order key — do that first, same rule as withGlobalCumSum's
     * histogram pattern. */
   def withGlobalCumMax(df: DataFrame, order: Seq[Column], value: Column,
-      outCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val nPart = spark.sessionState.conf.numShufflePartitions
-    val withMid = df.withColumn("__v", value)
-      .repartitionByRange(nPart, order: _*)
-      .sortWithinPartitions(order: _*)
-      .withColumn("__mid", monotonically_increasing_id())
-      .localCheckpoint(true)
-    // Tiny side: one row per partition → strict-prior prefix max over
-    // partition index (≤ nPart rows, constant partition key).
-    val wOff = Window.partitionBy(lit(0)).orderBy("__pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = withMid
-      .select(shiftright(col("__mid"), 33).cast("int").as("__pid"), col("__v"))
-      .groupBy("__pid").agg(max(col("__v")).as("__pm"))
-      .withColumn("__offm", max("__pm").over(wOff))
-      .select("__pid", "__offm")
-    val wLoc = Window.partitionBy(col("__pid2")).orderBy(col("__mid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    withMid
-      .withColumn("__pid2", shiftright(col("__mid"), 33).cast("int"))
-      .withColumn("__lm", max(col("__v")).over(wLoc))
-      .join(broadcast(offsets), col("__pid2") === col("__pid"))
-      .withColumn(outCol, greatest(col("__lm"), col("__offm")))
-      .drop("__v", "__mid", "__pid", "__pid2", "__lm", "__offm")
-  }
+      outCol: String): DataFrame =
+    prefixScan(df, Nil, order, PriorMaxScan(value), outCol)
 
   /** W4 (exact): decile bucketing with NTILE tie semantics over a global
     * order, computed from the distributed [[withGlobalRank]] — no
@@ -433,44 +442,16 @@ object Relational {
     * families (percent_rank / cume_dist / ntile) whose stock
     * `Window.partitionBy(group)` plan caps parallelism at the GROUP
     * COUNT (measured: 17 s at 15M orders × 5 priorities, gates12b —
-    * every group is one task).
-    *
-    * Same three moves, group-aware: ONE range shuffle on
-    * (group ++ order) so each group's rows spread over many contiguous
-    * partitions; `monotonically_increasing_id` after the local sort for
-    * (partition, position); a tiny per-(partition, group) frame — row
-    * count and first-position — turned into prefix offsets per group
-    * and broadcast back. rank = mid − first(pid, g) + 1 + offset(pid, g).
+    * every group is one task). Via [[prefixScan]], so each group's rows
+    * spread over many contiguous range partitions; null keys form one
+    * group.
     *
     * `order` must be a TOTAL order within the group (add a unique
     * tie-break) — with ties, rank here is row_number, not RANK. Adds
-    * `rankCol` and `groupTotalCol` (rows in the row's group).
-    * The sorted+mid frame is materialized once (eager localCheckpoint)
-    * for the same branch-consistency reason as [[withGlobalRank]] —
-    * see its consistency note. */
+    * `rankCol` and `groupTotalCol` (rows in the row's group). */
   def withGroupRank(df: DataFrame, groupCols: Seq[String], order: Seq[Column],
-      rankCol: String, groupTotalCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val nPart = spark.sessionState.conf.numShufflePartitions
-    val keys = groupCols.map(col)
-    val withMid = df.repartitionByRange(nPart, keys ++ order: _*)
-      .sortWithinPartitions(keys ++ order: _*)
-      .withColumn("__mid", monotonically_increasing_id())
-      .localCheckpoint(true)
-      .withColumn("__pid2", shiftright(col("__mid"), 33).cast("int"))
-    val wOff = Window.partitionBy(keys: _*).orderBy(col("__pid2"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = withMid.groupBy(col("__pid2") +: keys: _*)
-      .agg(count(lit(1)).as("__pn"), min(col("__mid")).as("__mfirst"))
-      .withColumn("__off", coalesce(sum(col("__pn")).over(wOff), lit(0L)))
-      .withColumn(groupTotalCol,
-        sum(col("__pn")).over(Window.partitionBy(keys: _*)))
-      .select(col("__pid2") +: keys :+ col("__mfirst") :+ col("__off")
-        :+ col(groupTotalCol): _*)
-    withMid.join(broadcast(offsets), "__pid2" +: groupCols)
-      .withColumn(rankCol, col("__mid") - col("__mfirst") + 1 + col("__off"))
-      .drop("__mid", "__pid2", "__mfirst", "__off")
-  }
+      rankCol: String, groupTotalCol: String): DataFrame =
+    prefixScan(df, groupCols, order, RankScan(groupTotalCol), rankCol)
 
   /** NTILE(n) closed form from a per-group (rank, total) pair — the
     * [[decileExact]] formula, reusable against [[withGroupRank]]. */

@@ -497,8 +497,9 @@ object Validation {
     val Array(ga, gb) = groups
     // This query is what EXPOSED the rank-helper branch-divergence bug
     // (ks_stat nondeterministically 0.045–0.086 vs the true 0.0301):
-    // the fix lives inside withGlobalRank/withGroupRank (internal eager
-    // localCheckpoint — see withGlobalRank's consistency note). The
+    // the fix lives inside the rank helpers (the prefix-scan kernel's
+    // eager localCheckpoint — see Relational.prefixScan's consistency
+    // note). The
     // persist here is purely a cost optimization: withGroupRank's two
     // branches both consume the global-rank output, and caching it
     // avoids running the rank join twice.

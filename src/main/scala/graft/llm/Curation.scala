@@ -265,67 +265,21 @@ object Curation {
     * monotone, so everything after the first overflow is out) — a plain
     * cumulative-sum window filter, and therefore fully SQL-oracle-able.
     *
-    * Scale shape (two-level cumulative sum — no per-stratum reducer):
-    * rows range-partition on (stratum, walk-key), so a hot stratum
-    * spreads over many consecutive partitions instead of landing on one
-    * reducer. Level 1 computes the running sum within each (partition,
-    * stratum) slice — bounded by partition size regardless of stratum
-    * skew. Level 2 computes each slice's starting offset from the tiny
-    * per-(partition, stratum) totals table (≤ partitions + strata rows;
-    * broadcast back). cum = slice-local running sum + slice offset. The
-    * price is one extra data shuffle vs the naive per-stratum window;
-    * the win is that NO reducer ever sorts a whole stratum — the same
-    * trade [[graft.core.Relational.withGlobalRank]] makes for global
-    * ranks. */
+    * Scale shape: a grouped running sum from the distributed prefix scan
+    * ([[graft.core.Relational.withGroupCumSum]]) — a hot stratum spreads
+    * over many range partitions, so NO reducer ever sorts a whole
+    * stratum. */
   def tokenBudgetCap(df: DataFrame, keyCol: String, strataCol: String,
       nTokensCol: String, budget: Long, seed: String): DataFrame = {
     require(budget >= 0, s"budget must be >= 0, got $budget")
-    val spark = df.sparkSession
-    val nPart = spark.sessionState.conf.numShufflePartitions
-    import org.apache.spark.sql.expressions.Window
-    val ranged = df
-      .withColumn("__skey",
-        md5(concat(lit(seed + "#"), col(keyCol).cast("string"))))
-      .repartitionByRange(nPart, col(strataCol), col("__skey"), col(keyCol))
-      .withColumn("__pid", spark_partition_id())
-    // tiny side: token total per (partition, stratum) slice → prefix
-    // offset of each slice within its stratum (slices of one stratum are
-    // consecutive partitions under the range partitioning)
-    val wOff = Window.partitionBy(col(strataCol)).orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = ranged.groupBy(col("__pid"), col(strataCol))
-      .agg(sum(col(nTokensCol).cast("long")).as("__ptok"))
-      .withColumn("__off", coalesce(sum("__ptok").over(wOff), lit(0L)))
-      .select(col("__pid").as("__opid"), col(strataCol).as("__ostr"), col("__off"))
-    // slice-local running sum: window groups are (partition, stratum) —
-    // bounded by partition size, never a whole stratum
-    val wLoc = Window.partitionBy(col("__pid"), col(strataCol))
-      .orderBy(col("__skey"), col(keyCol))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    ranged
-      .withColumn("__lcum", sum(col(nTokensCol).cast("long")).over(wLoc))
-      .join(broadcast(offsets),
-        col("__pid") === col("__opid") && col(strataCol) <=> col("__ostr"))
-      .where(col("__lcum") + col("__off") <= budget)
-      .drop("__skey", "__pid", "__lcum", "__opid", "__ostr", "__off")
+    val keyed = df.withColumn("__skey",
+      md5(concat(lit(seed + "#"), col(keyCol).cast("string"))))
+    graft.core.Relational.withGroupCumSum(keyed, Seq(strataCol),
+        Seq(col("__skey"), col(keyCol)), col(nTokensCol), "__cum")
+      .where(col("__cum") <= budget)
+      .drop("__skey", "__cum")
   }
 
-  /** Greedy per-partition sequence packing: assign documents to packs so
-    * each pack's token total stays ≤ `budget` (docs larger than the
-    * budget get their own pack). Returns (pack_id, doc ids, n_docs,
-    * total_tokens). pack_id is globally unique (partition id × 2^40 +
-    * local counter); packing is partition-local — repartition upstream
-    * to control pack mix. */
-  /** Deterministic distributed corpus shuffle + round-robin sharding —
-    * the step between curation and the training data loader: every epoch
-    * reads the corpus in a pseudo-random but REPRODUCIBLE order, split
-    * into `nShards` equal shards for parallel loaders. The shuffle key is
-    * md5(seed # id) (engine-portable, seed-controlled); the global
-    * position comes from the distributed prefix-sum rank (one range
-    * shuffle — no single-partition window, same machinery as the decile
-    * ranks), and shard = pos % nShards gives perfectly balanced shards
-    * (sizes differ by at most 1). Returns the input columns plus
-    * (shuffle_key, pos [0-based], shard). */
   /** Per-document n-gram NOVELTY: the fraction of a doc's distinct
     * w-shingles whose FIRST corpus occurrence (min id over the corpus)
     * is this doc — the marginal-new-content score a curation pipeline
@@ -349,6 +303,16 @@ object Curation {
       .withColumn("novelty", col("n_novel").cast("double") / col("n_shingles"))
   }
 
+  /** Deterministic distributed corpus shuffle + round-robin sharding —
+    * the step between curation and the training data loader: every epoch
+    * reads the corpus in a pseudo-random but REPRODUCIBLE order, split
+    * into `nShards` equal shards for parallel loaders. The shuffle key is
+    * md5(seed # id) (engine-portable, seed-controlled); the global
+    * position comes from the distributed prefix-sum rank (one range
+    * shuffle — no single-partition window, same machinery as the decile
+    * ranks), and shard = pos % nShards gives perfectly balanced shards
+    * (sizes differ by at most 1). Returns the input columns plus
+    * (shuffle_key, pos [0-based], shard). */
   def shuffleShard(df: DataFrame, idCol: String, nShards: Int, seed: String): DataFrame = {
     require(nShards >= 1, s"nShards must be >= 1, got $nShards")
     val keyed = df.withColumn("shuffle_key",
@@ -360,6 +324,12 @@ object Curation {
       .drop("__total")
   }
 
+  /** Greedy per-partition sequence packing: assign documents to packs so
+    * each pack's token total stays ≤ `budget` (docs larger than the
+    * budget get their own pack). Returns (pack_id, doc ids, n_docs,
+    * total_tokens). pack_id is globally unique (partition id × 2^40 +
+    * local counter); packing is partition-local — repartition upstream
+    * to control pack mix. */
   def packSequences(df: DataFrame, idCol: String, tokenCol: String, budget: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._

@@ -1,8 +1,8 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Relational
 import graft.core.Relational.SingletonAttachOps
 
 /** Lexical (sparse) retrieval over the document corpus: Okapi BM25
@@ -107,10 +107,8 @@ object Retrieval {
       .groupBy(col("query_id"), col("doc_id"))
       .agg(round(sum(col("contrib")), 6).as("score"))
 
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-    scored.withColumn("rk", row_number().over(w).cast("int"))
-      .filter(col("rk") <= k)
+    Relational.topKPerGroup(scored, Seq("query_id"),
+        Seq(col("score").desc, col("doc_id").asc), k)
   }
 
   /** Oracle twin of [[bm25TopK]] (DuckDB SQL): same tokenizer, same
@@ -178,9 +176,7 @@ object Retrieval {
     val fused = contribs.reduce(_ unionByName _)
       .groupBy(col("query_id"), col("doc_id"))
       .agg(round(sum(col("contrib")), 6).as("rrf"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("rrf").desc, col("doc_id").asc)
-    fused.withColumn("rk", row_number().over(w).cast("int"))
-      .filter(col("rk") <= k)
+    Relational.topKPerGroup(fused, Seq("query_id"),
+        Seq(col("rrf").desc, col("doc_id").asc), k)
   }
 }

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Relational
 
 /** Similarity search over an embedding column (`array<float>`):
   * brute-force cosine top-k as the correctness baseline, and two scale
@@ -92,9 +93,8 @@ object Similarity {
       idCol: String, vecCol: String, k: Int, dim: Int = 0,
       maxQueries: Int = DefaultMaxQueries): DataFrame = {
     val scored = bruteScoredLocalTopK(corpus, queries, idCol, vecCol, k, maxQueries)
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("corpus_id"))
-    scored.withColumn("rk", row_number().over(w).cast("int"))
-      .where(col("rk") <= k)
+    Relational.topKPerGroup(scored, Seq("query_id"),
+        Seq(col("cos").desc, col("corpus_id")), k)
       .select("query_id", "corpus_id", "cos", "rk")
   }
 
@@ -138,9 +138,8 @@ object Similarity {
     val scored = bruteScoredLocalTopK(corpus, queries, idCol, vecCol, k, maxQueries,
         dotScore = true)
       .withColumnRenamed("cos", "dot")
-    val w = Window.partitionBy("query_id").orderBy(col("dot").desc, col("corpus_id"))
-    scored.withColumn("rk", row_number().over(w).cast("int"))
-      .where(col("rk") <= k)
+    Relational.topKPerGroup(scored, Seq("query_id"),
+        Seq(col("dot").desc, col("corpus_id")), k)
       .select("query_id", "corpus_id", "dot", "rk")
   }
 
@@ -258,12 +257,11 @@ object Similarity {
     val v = col(vecCol).cast("array<double>")
     val cv2 = corpus.select(col(idCol).cast("long").as("corpus_id"), v.as("__cv"))
     val qv2 = queries.select(col(idCol).cast("long").as("query_id"), v.as("__qv"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("corpus_id"))
-    short.select("query_id", "corpus_id")
+    val rescored = short.select("query_id", "corpus_id")
       .join(cv2, Seq("corpus_id")).join(qv2, Seq("query_id"))
       .withColumn("cos", cosine(col("__qv"), col("__cv"), dim))
-      .withColumn("rk", row_number().over(w).cast("int"))
-      .where(col("rk") <= k)
+    Relational.topKPerGroup(rescored, Seq("query_id"),
+        Seq(col("cos").desc, col("corpus_id")), k)
       .select("query_id", "corpus_id", "cos", "rk")
   }
 
@@ -399,9 +397,8 @@ object Similarity {
         h.drain.map { case (cid, s) => (qid, cid, s) }
       }
     }.toDF("query_id", "corpus_id", "cos")
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("corpus_id"))
-    localTop.withColumn("rk", row_number().over(w).cast("int"))
-      .where(col("rk") <= k)
+    Relational.topKPerGroup(localTop, Seq("query_id"),
+        Seq(col("cos").desc, col("corpus_id")), k)
       .select("query_id", "corpus_id", "cos", "rk")
   }
 
@@ -562,9 +559,8 @@ object Similarity {
           h.drain.map { case (cid, s) => (qs(i)._1, cid, s) }
         }
       }.toDF("query_id", "corpus_id", "cos")
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("corpus_id"))
-    scored.withColumn("rk", row_number().over(w).cast("int"))
-      .where(col("rk") <= k)
+    Relational.topKPerGroup(scored, Seq("query_id"),
+        Seq(col("cos").desc, col("corpus_id")), k)
       .select("query_id", "corpus_id", "cos", "rk")
   }
 
@@ -881,9 +877,8 @@ object Similarity {
       .join(corpusVec, Seq("corpus_id"))
       .join(broadcast(qVec), Seq("query_id"))
       .withColumn("cos", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("corpus_id"))
-    reranked.withColumn("rk", row_number().over(w).cast("int"))
-      .where(col("rk") <= k)
+    Relational.topKPerGroup(reranked, Seq("query_id"),
+        Seq(col("cos").desc, col("corpus_id")), k)
       .select("query_id", "corpus_id", "cos", "rk")
   }
 
@@ -1110,9 +1105,8 @@ object Similarity {
           h.drain.map { case (cid, s) => (qs(i)._1, cid, s) }
         }
       }.toDF("query_id", "corpus_id", "cos")
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("corpus_id"))
-    scored.withColumn("rk", row_number().over(w).cast("int"))
-      .where(col("rk") <= k)
+    Relational.topKPerGroup(scored, Seq("query_id"),
+        Seq(col("cos").desc, col("corpus_id")), k)
       .select("query_id", "corpus_id", "cos", "rk")
   }
 

@@ -1,9 +1,9 @@
 package graft.stats
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
+import graft.core.Relational
 
 /** Exact ROC AUC as a distributed rank statistic (Mann–Whitney U with
   * average-rank tie correction) — SURVEY.md A17.
@@ -19,12 +19,9 @@ import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructTy
   * Scale design (no global single-partition window anywhere):
   *   1. reduce to one row per DISTINCT score — shuffled, map-side-combined
   *      aggregate;
-  *   2. range-partition the distinct-score table by score and compute the
-  *      cumulative row count per partition with a window PARTITIONED BY the
-  *      physical partition id (fully parallel);
-  *   3. bridge partitions with a tiny broadcast prefix-offset table (one
-  *      row per partition);
-  *   4. single-row final reduction.
+  *   2. running row count over the distinct-score histogram, from the
+  *      distributed prefix scan ([[graft.core.Relational.withGlobalCumSum]]);
+  *   3. single-row final reduction.
   * Every per-row quantity is an integer-valued double (< 2^53), so the
   * arithmetic is exact and the result is bit-deterministic regardless of
   * partitioning — safe for the DuckDB-oracle hash compare.
@@ -35,9 +32,6 @@ object Auc {
     * (n_pos, n_neg, auc). Returns NaN auc when a class is absent —
     * the reference's `safe_auc` guard (`public_eda_pipeline.py:34-35`). */
   def aucDf(df: DataFrame, label: Column, score: Column): DataFrame = {
-    val spark = df.sparkSession
-    val nShuffle = spark.sessionState.conf.numShufflePartitions
-
     val perScore = df
       .select(score.cast("double").as("s"), label.cast("int").as("y"))
       .where(col("s").isNotNull && col("y").isNotNull)
@@ -46,30 +40,9 @@ object Auc {
         sum(col("y")).cast("double").as("pos"),
         sum(lit(1) - col("y")).cast("double").as("neg"))
 
-    // Parallel prefix sum: per-partition cumulative counts + broadcast
-    // partition offsets (same-key rows never straddle a range partition).
-    val ranged = perScore
-      .repartitionByRange(nShuffle, col("s"))
-      .sortWithinPartitions("s")
-      .withColumn("pid", spark_partition_id())
-    val wLocal = Window.partitionBy("pid").orderBy("s")
-    val local = ranged.withColumn("local_cum", sum(col("pos") + col("neg")).over(wLocal))
-
-    // One row per partition — tiny; this window runs over ≤ nShuffle
-    // rows, not the data (constant partition key keeps WindowExec from
-    // logging its single-partition warning for this intentionally-tiny
-    // frame).
-    val wOff = Window.partitionBy(lit(0))
-      .orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = local.groupBy("pid")
-      .agg(sum(col("pos") + col("neg")).as("part_total"))
-      .withColumn("offset", coalesce(sum("part_total").over(wOff), lit(0.0)))
-      .select("pid", "offset")
-
-    // Average rank of a tie-group = (rows before group) + (size+1)/2.
-    val ranked = local
-      .join(broadcast(offsets), Seq("pid"))
-      .withColumn("cum", col("local_cum") + col("offset"))
+    // Average rank of a tie-group = (rows at or before it) − (size−1)/2.
+    val ranked = Relational
+      .withGlobalCumSum(perScore, Seq(col("s")), col("pos") + col("neg"), "cum")
       .withColumn("avg_rank", col("cum") - (col("pos") + col("neg") - 1) / 2.0)
 
     ranked.agg(

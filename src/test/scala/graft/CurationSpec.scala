@@ -198,6 +198,38 @@ class CurationSpec extends SparkSpec {
     }
   }
 
+  test("tokenBudgetCap stays exact with a PAYLOAD column over real-sized data") {
+    // Regression for the branch-divergence bug the rank helpers had in
+    // round 12: with the text payload riding along, the offsets branch
+    // pruned to a narrower exchange, reuse never fired, each branch
+    // sampled its own range bounds, and a budget that fits every
+    // document kept 4,867–4,992 of 5,000. Checked against the driver walk.
+    val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
+      .select(col("doc_id"), col("source"), col("text"),
+        size(split(col("text"), " ")).cast("long").as("n_tokens"))
+    val walk = docs.select(col("source"), col("doc_id"), col("n_tokens"),
+        md5(concat(lit("p#"), col("doc_id").cast("string"))).as("skey"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getString(3)))
+      .groupBy(_._1).values.toSeq
+      .map(_.sortBy(r => (r._4, r._2)).scanLeft((0L, 0L)) { case ((_, cum), r) =>
+        (r._2, cum + r._3) }.tail)
+    val all = walk.map(_.last._2).max
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    for (parts <- Seq(4, 16); trial <- 1 to 3; budget <- Seq(all, 20000L)) {
+      spark.conf.set("spark.sql.shuffle.partitions", parts)
+      try {
+        // collect whole rows: selecting doc_id alone would let pruning
+        // drop the payload from both branches and hide the bug
+        val kept = Curation.tokenBudgetCap(docs, "doc_id", "source", "n_tokens", budget, "p")
+          .collect().map(_.getAs[Long]("doc_id")).toSet
+        val expect = walk.flatMap(_.takeWhile(_._2 <= budget).map(_._1)).toSet
+        val wrong = (kept diff expect) ++ (expect diff kept)
+        assert(wrong.size === 0, s"budget $budget at $parts parts (trial $trial): " +
+          s"kept ${kept.size}, expected ${expect.size}, ${wrong.size} docs differ")
+      } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    }
+  }
+
   test("exactKPerStratum: exact counts, determinism, seed sensitivity, group-limit plan") {
     import spark.implicits._
     val df = (1L to 300L).map(i => (i, s"src${i % 4}")).toDF("doc_id", "source")

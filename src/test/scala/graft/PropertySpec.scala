@@ -113,22 +113,17 @@ class PropertySpec extends SparkSpec {
   test("withGroupRank yields per-group permutations 1..N_g at any partition count") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val gen = for {
-      n <- Gen.choose(1, 400)
-      nGroups <- Gen.choose(1, 5) // few groups × many rows: the shape the operator targets
-      rows <- Gen.listOfN(n, Gen.zip(Gen.choose(0, nGroups - 1), Gen.choose(0, 20)))
-    } yield rows
-    forAll(gen, n = 6) { rows =>
-      val df = rows.zipWithIndex
-        .map { case ((g, v), i) => (s"g$g", v.toDouble, i.toLong) }.toDF("g", "v", "id")
+    def check(rows: Seq[(Option[String], Double, Long)]): Unit = {
+      val df = rows.toDF("g", "v", "id")
+      val sizes = rows.groupBy(_._1).view.mapValues(_.size.toLong).toMap
       for (parts <- Seq(1, 3, 32)) {
         spark.conf.set("spark.sql.shuffle.partitions", parts)
         try {
           val got = graft.core.Relational
             .withGroupRank(df, Seq("g"), Seq(col("v"), col("id")), "rk", "n")
             .select("g", "v", "id", "rk", "n").collect()
-            .map(r => (r.getString(0), r.getDouble(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-          val sizes = rows.groupBy(t => s"g${t._1}").view.mapValues(_.size.toLong).toMap
+            .map(r => (Option(r.getString(0)), r.getDouble(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+          assert(got.length === rows.size, s"rows lost at $parts parts")
           got.groupBy(_._1).foreach { case (g, grp) =>
             assert(grp.forall(_._5 === sizes(g)), s"group total wrong for $g at $parts parts")
             assert(grp.map(_._4).sorted.toSeq === (1L to sizes(g)),
@@ -142,6 +137,16 @@ class PropertySpec extends SparkSpec {
         } finally spark.conf.set("spark.sql.shuffle.partitions", 8)
       }
     }
+    val gen = for {
+      n <- Gen.choose(1, 400)
+      nGroups <- Gen.choose(1, 5) // few groups × many rows: the shape the operator targets
+      rows <- Gen.listOfN(n, Gen.zip(Gen.choose(0, nGroups - 1), Gen.choose(0, 20)))
+    } yield rows
+    forAll(gen, n = 6) { rows =>
+      check(rows.zipWithIndex.map { case ((g, v), i) => (Some(s"g$g"), v.toDouble, i.toLong) })
+    }
+    // a null key is a group of its own, not a row to drop
+    check(Seq((Some("a"), 1.0, 0L), (None, 2.0, 1L), (Some("a"), 0.5, 2L), (None, 1.0, 3L)))
   }
 
   test("rank helpers stay exact with PAYLOAD columns over real-sized tie-heavy data") {

@@ -23,6 +23,31 @@ class SessionSpec extends SparkSpec {
     assert(offenders === Seq("src/main/scala/graft/Session.scala"))
   }
 
+  test("one distributed prefix-scan kernel: no hand-copied offsets scan outside Relational") {
+    // needles split so this file does not match itself
+    val offsetsWindow = "rowsBetween(Window.unboundedPreceding, " + "-1)"
+    val pid = "spark_partition" + "_id()"
+    val pidSources = Seq(pid, "monotonically_increasing" + "_id()", "getPartition" + "Id")
+    val sources = {
+      val files = Files.walk(Paths.get("src/main"))
+      try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    }.map(p => p.toString.replace('\\', '/') -> Files.readString(p))
+    assert(sources.nonEmpty, "run from the repo root")
+    val copies = sources.collect {
+      case (f, text) if !f.endsWith("core/Relational.scala") && text.contains(offsetsWindow) &&
+          text.contains("broadcast(") && pidSources.exists(text.contains) => f
+    }
+    assert(copies.isEmpty, s"prefix-offset scans outside Relational.prefixScan: $copies")
+    // the one spark_partition_id() left computes footer stats, not a scan
+    val pidUses = sources.filter(_._2.contains(pid))
+    assert(pidUses.map(_._1) === Seq("src/main/scala/graft/core/Layout.scala"))
+    val layout = pidUses.head._2
+    val at = layout.indexOf(pid)
+    assert(at > layout.indexOf("def partitionBounds") && at == layout.lastIndexOf(pid),
+      "spark_partition_id() may appear only in Layout.partitionBounds")
+  }
+
   test("the shared spec session carries Session's confs") {
     val expected = Map(
       "spark.sql.shuffle.partitions" -> Session.cpus.toString,
