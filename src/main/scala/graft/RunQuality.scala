@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Validation
 import graft.io.Sinks
@@ -90,9 +90,8 @@ object RunQuality {
         .select("psi_total").head().getDouble(0)
       (c, math.rint(psi * 1e6) / 1e6, psi <= psiAction)
     }
-    import spark.implicits._
-    val driftDf = drift.toDF("column", "psi", "stable").orderBy(desc("psi"))
-    Sinks.writeCsv(driftDf, s"$out/drift_psi.csv")
+    Sinks.writeCsv(Seq("column", "psi", "stable"),
+      Sinks.orderBy(drift)(Sinks.desc(_._2)).map(Row.fromTuple), s"$out/drift_psi.csv")
 
     // 3. robust outlier profile per numeric column (grouped when asked,
     // else one global group)
@@ -135,9 +134,8 @@ object RunQuality {
         math.rint(ksRow.getAs[Double]("ks_stat") * 1e6) / 1e6,
         !ksRow.getAs[Boolean]("drifted"))
     }
-    val shapeDf = shape.toDF("column", "skewness", "ex_kurtosis", "ks_stat", "ks_stable")
-      .orderBy(desc("ks_stat"))
-    Sinks.writeCsv(shapeDf, s"$out/shape.csv")
+    Sinks.writeCsv(Seq("column", "skewness", "ex_kurtosis", "ks_stat", "ks_stable"),
+      Sinks.orderBy(shape)(Sinks.desc(_._4)).map(Row.fromTuple), s"$out/shape.csv")
 
     val allPass = constraints.where(!col("passed")).isEmpty
     val allStable = drift.forall(_._3)

@@ -21,15 +21,17 @@ import org.apache.spark.sql.types._
 object WideAgg {
   val DefaultBatch = 400
 
-  /** Null-rate per column (reference A3: `is_null().mean()` for 2241 cols).
-    * Returns a small DataFrame (col_name, null_rate) — one row per column.
-    * The 0/1 indicator sums are exact in double, so the rate is
-    * bit-deterministic across engines. */
-  def nullProfile(df: DataFrame, cols: Seq[String], batch: Int = DefaultBatch): DataFrame = {
-    val spark = df.sparkSession
-    val rates = runBatched(df, cols, c => avg(col(c).isNull.cast(DoubleType)), batch)
-    toDf(spark, rates, "col_name", "null_rate")
-  }
+  /** Null-rate per column (reference A3: `is_null().mean()` for 2241 cols),
+    * in column order; None for a column of an empty frame. The 0/1
+    * indicator sums are exact in double, so the rate is bit-deterministic
+    * across engines. */
+  def nullRates(df: DataFrame, cols: Seq[String],
+      batch: Int = DefaultBatch): Seq[(String, Option[Double])] =
+    runBatched(df, cols, c => avg(col(c).isNull.cast(DoubleType)), batch)
+
+  /** [[nullRates]] as a small (col_name, null_rate) DataFrame. */
+  def nullProfile(df: DataFrame, cols: Seq[String], batch: Int = DefaultBatch): DataFrame =
+    toDf(df.sparkSession, nullRates(df, cols, batch), "col_name", "null_rate")
 
   /** Per-column sum (reference A2: 41 target sums in one pass). Plain
     * double accumulation — fast path; use [[sumProfileExact]] when the

@@ -1,7 +1,8 @@
 package graft.io
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Output sinks (SURVEY.md §2.1 S4–S6): CSV golden tables, JSON summary,
   * Markdown report. The reference's entire deliverable is 29 CSVs + 1
@@ -9,21 +10,50 @@ import org.apache.spark.sql.DataFrame
   * ≤ ~21k rows — post-aggregation artifacts.
   *
   * Scale stance: these sinks are for SMALL results (the contract of every
-  * call site: aggregated tables). `writeCsv` collects to the driver —
-  * guarded by `maxRows` so a mis-wired call on a 100 TB frame fails fast
-  * instead of OOMing the driver; use `writeCsvDistributed` for anything
-  * larger (one file per partition, no driver round-trip).
+  * call site: aggregated tables). The CSV and report sinks take driver
+  * rows, sorted with [[orderBy]] (Spark's order, so the bytes match a
+  * Spark `orderBy`); their DataFrame forms collect through
+  * [[collectSmall]], guarded by `maxRows` so a mis-wired call on a 100 TB
+  * frame fails fast instead of OOMing the driver, and delegate, so each
+  * format has one cell formatter. Anything larger goes through
+  * `df.write` (one file per partition, no driver round-trip).
   */
 object Sinks {
 
-  /** Driver-side CSV writer for small aggregated tables (header + RFC-ish
-    * quoting). Deterministic: writes rows in the DataFrame's order — give
-    * it a sorted frame. */
-  def writeCsv(df: DataFrame, path: String, maxRows: Int = 100000): Unit = {
-    val rows = df.limit(maxRows + 1).collect()
-    require(rows.length <= maxRows,
-      s"writeCsv($path): > $maxRows rows — use writeCsvDistributed for large outputs")
-    val cols = df.columns
+  /** One sort key of [[orderBy]]: a cell of the row and its direction. */
+  final case class Key[T](cell: T => Any, ascending: Boolean)
+  def asc[T](cell: T => Any): Key[T] = Key(cell, ascending = true)
+  def desc[T](cell: T => Any): Key[T] = Key(cell, ascending = false)
+
+  /** Driver twin of Spark's `orderBy(keys…)` for small driver tables:
+    * ascending puts nulls first and descending puts them last (Spark's
+    * defaults), NaN is greater than every number, -0.0 equals 0.0, and
+    * strings compare as UTF-8 bytes. Stable, so rows tied on every key
+    * keep their input order — give a unique last key, as with Spark. */
+  def orderBy[T](rows: Seq[T])(keys: Key[T]*): Seq[T] =
+    rows.sorted(new Ordering[T] {
+      def compare(a: T, b: T): Int =
+        keys.iterator.map { k =>
+          val c = compareCells(k.cell(a), k.cell(b))
+          if (k.ascending) c else -c
+        }.find(_ != 0).getOrElse(0)
+    })
+
+  /** Spark's ascending order of two cells of one column type. */
+  private def compareCells(a: Any, b: Any): Int = (a, b) match {
+    case (null, null) => 0
+    case (null, _) => -1
+    case (_, null) => 1
+    case (x: Double, y: Double) => if (x == y) 0 else java.lang.Double.compare(x, y)
+    case (x: String, y: String) =>
+      UTF8String.fromString(x).binaryCompare(UTF8String.fromString(y))
+    case (x: Comparable[_], y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
+  }
+
+  /** Driver-side CSV writer for small tables (header + RFC-ish quoting),
+    * rows in the given order; a row's cells past the header are not
+    * written. */
+  def writeCsv(header: Seq[String], rows: Seq[Row], path: String): Unit = {
     def cell(v: Any): String = v match {
       case null => ""
       case s: String if s.contains(",") || s.contains("\"") || s.contains("\n") =>
@@ -31,18 +61,27 @@ object Sinks {
       case other => other.toString
     }
     val sb = new StringBuilder
-    sb.append(cols.mkString(",")).append('\n')
+    sb.append(header.mkString(",")).append('\n')
     rows.foreach { r =>
-      sb.append(cols.indices.map(i => cell(r.get(i))).mkString(",")).append('\n')
+      sb.append(header.indices.map(i => cell(r.get(i))).mkString(",")).append('\n')
     }
-    val p = Paths.get(path)
-    Option(p.getParent).foreach(Files.createDirectories(_))
-    Files.writeString(p, sb.toString)
+    writeText(sb.toString, path)
   }
 
-  /** Distributed CSV sink for large outputs (S4 scale path). */
-  def writeCsvDistributed(df: DataFrame, dir: String): Unit =
-    df.write.mode("overwrite").option("header", "true").csv(dir)
+  /** The rows of a small aggregated frame, in the frame's order. Collected
+    * through a `limit`, so a sorted frame plans as one top-k instead of a
+    * range shuffle; fails fast past `maxRows`. */
+  def collectSmall(df: DataFrame, maxRows: Int = 100000): Seq[Row] = {
+    val rows = df.limit(maxRows + 1).collect().toSeq
+    require(rows.length <= maxRows,
+      s"> $maxRows rows — write large outputs with `df.write`, one file per partition")
+    rows
+  }
+
+  /** [[writeCsv]] of a small aggregated frame, in the frame's order — give
+    * it a sorted frame. */
+  def writeCsv(df: DataFrame, path: String, maxRows: Int = 100000): Unit =
+    writeCsv(df.columns.toSeq, collectSmall(df, maxRows), path)
 
   /** Hive-partitioned parquet sink — the 100-TB-corpus write shape:
     * `dir/col=value/part-*.parquet` so downstream readers get partition
@@ -99,29 +138,27 @@ object Sinks {
       .mkString("{\n  ", ",\n  ", "\n}")
   }
 
-  def writeJson(m: Seq[(String, Any)], path: String): Unit = {
-    val p = Paths.get(path)
-    Option(p.getParent).foreach(Files.createDirectories(_))
-    Files.writeString(p, toJson(m))
-  }
+  def writeJson(m: Seq[(String, Any)], path: String): Unit = writeText(toJson(m), path)
 
   /** Fixed-width pretty table of the first `n` rows (S6 report blocks —
     * mirrors the reference's `pretty` helper, `public_eda_pipeline
     * .py:46-49`). */
-  def pretty(df: DataFrame, n: Int = 10): String = {
-    val rows = df.limit(n).collect()
-    val cols = df.columns
-    val cells = rows.map(r => cols.indices.map(i => Option(r.get(i)).map {
+  def pretty(header: Seq[String], rows: Seq[Row], n: Int): String = {
+    val cells = rows.take(n).map(r => header.indices.map(i => Option(r.get(i)).map {
       case d: Double => f"$d%.6g"
       case other => other.toString
-    }.getOrElse("null")).toArray)
-    val widths = cols.indices.map(i =>
-      (cols(i).length +: cells.map(_(i).length)).max)
+    }.getOrElse("null")))
+    val widths = header.indices.map(i =>
+      (header(i).length +: cells.map(_(i).length)).max)
     def line(vals: Seq[String]): String =
       vals.zip(widths).map { case (v, w) => v.reverse.padTo(w, ' ').reverse }
         .mkString("  ")
-    (line(cols.toSeq) +: cells.map(c => line(c.toSeq)).toSeq).mkString("\n")
+    (line(header) +: cells.map(line)).mkString("\n")
   }
+
+  /** [[pretty]] of a frame's first `n` rows. */
+  def pretty(df: DataFrame, n: Int = 10): String =
+    pretty(df.columns.toSeq, df.limit(n).collect().toSeq, n)
 
   def writeText(s: String, path: String): Unit = {
     val p = Paths.get(path)

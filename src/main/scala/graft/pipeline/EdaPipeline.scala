@@ -1,9 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{FeatureCatalog, Relational, Sampling, WideAgg}
 import graft.io.Sinks
+import graft.io.Sinks.{asc, desc, orderBy}
 import graft.ml.{Adversarial, Clustering}
 import graft.stats.{Auc, Correlations, StatTests}
 
@@ -23,8 +24,11 @@ import graft.stats.{Auc, Correlations, StatTests}
   *
   * Scale: every block that touches full-width input runs as Spark jobs
   * (batched wide aggs, one-pass Gramians, sampled joins with pushed-down
-  * hash filters); only post-aggregation artifacts (≤ ~20k rows) cross to
-  * the driver for CSV/stats.
+  * hash filters). What they return is small (≤ ~100k rows) and stays a
+  * Scala collection from there on, as the reference keeps its small
+  * statistics in pandas/NumPy: sorted (Spark's order, [[Sinks.orderBy]]),
+  * ranked, grouped and written on the driver, never sent back through a
+  * Spark job.
   */
 object EdaPipeline {
 
@@ -48,6 +52,15 @@ object EdaPipeline {
       val now = System.nanoTime()
       println(f"[pipeline] block $block%-28s ${(now - tBlock.getAndSet(now)) / 1e9}%6.1f s")
     }
+    def rows(ps: Seq[Product]): Seq[Row] = ps.map(Row.fromTuple)
+    def boxed(v: Option[Double]): java.lang.Double = v.map(Double.box).orNull
+    def mean(xs: Seq[Double]): Double = xs.sum / xs.size
+    // the middle value, or the mean of the two middle values (as Spark's
+    // `median`: 0.5·lo + 0.5·hi is the same double as (lo + hi) / 2)
+    def median(xs: Seq[Double]): Double = {
+      val s = xs.sorted
+      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+    }
 
     val trainMain = load("train_main_features")
     val testMain = load("test_main_features")
@@ -64,85 +77,77 @@ object EdaPipeline {
     val testRows = testMain.count()
 
     tick("1_sizes")
-    // ---- 2: target stats (wide sum → rate → family → sort) -----------------
-    val sums = WideAgg.runBatched(trainTarget, targets, c => sum(col(c).cast("long"))).toMap
-    val targetStats = targets.map { t =>
-      val pos = sums(t).map(_.toLong).getOrElse(0L)
-      (t, FeatureCatalog.targetFamily(t), pos, pos.toDouble / trainRows)
+    // ---- 2: target stats (one Gramian pass → rate → family → sort) --------
+    // n, the per-target positives and every co-count from ONE scan of
+    // train_target (reference `P:143-144`); blocks 4–6 read it too
+    val gram = Correlations.gramian(trainTarget, targets)
+    val targetStats = targets.indices.map { i =>
+      val pos = gram.positives(i)
+      (targets(i), FeatureCatalog.targetFamily(targets(i)), pos, pos.toDouble / trainRows)
     }
-    import spark.implicits._
-    val targetStatsDf = targetStats.toDF("target", "family", "positive_count", "positive_rate")
-      .orderBy(col("positive_count").desc, col("target"))
-    Sinks.writeCsv(targetStatsDf, out("target_stats.csv"))
-    val familyStats = targetStatsDf.groupBy(col("family"))
-      .agg(count(lit(1)).as("n_targets"), avg(col("positive_rate")).as("avg_rate"),
-        min(col("positive_rate")).as("min_rate"), max(col("positive_rate")).as("max_rate"))
-      .orderBy(col("family"))
-    Sinks.writeCsv(familyStats, out("target_family_stats.csv"))
+    val statHeader = Seq("target", "family", "positive_count", "positive_rate")
+    val statsSorted = orderBy(targetStats)(desc(_._3), asc(_._1))
+    Sinks.writeCsv(statHeader, rows(statsSorted), out("target_stats.csv"))
+    val familyHeader = Seq("family", "n_targets", "avg_rate", "min_rate", "max_rate")
+    val familyRows = rows(orderBy(statsSorted.groupBy(_._2).toSeq)(asc(_._1)).map {
+      case (fam, ts) =>
+        val rates = ts.map(_._4)
+        (fam, ts.size.toLong, mean(rates), rates.min, rates.max)
+    })
+    Sinks.writeCsv(familyHeader, familyRows, out("target_family_stats.csv"))
 
     tick("2_target_stats")
     // ---- 3: opened-targets distribution ------------------------------------
     val opened = trainTarget.withColumn("n_opened", WideAgg.horizontalSum(targets))
-    Sinks.writeCsv(
-      opened.groupBy(col("n_opened")).agg(count(lit(1)).as("n_customers")).orderBy(col("n_opened")),
-      out("opened_targets_distribution.csv"))
+      .groupBy(col("n_opened")).agg(count(lit(1)).as("n_customers")).orderBy(col("n_opened"))
+    val openedRows = Sinks.collectSmall(opened)
+    Sinks.writeCsv(opened.columns.toSeq, openedRows, out("opened_targets_distribution.csv"))
 
     tick("3_opened_dist")
-    // ---- 4: pair co-occurrence + lift --------------------------------------
-    val pairDf = Correlations.pairLift(trainTarget, targets)
-    Sinks.writeCsv(pairDf.orderBy(col("col_a"), col("col_b")), out("target_pair_stats.csv"))
-    Sinks.writeCsv(
-      pairDf.where(col("co_count") >= 10)
-        .orderBy(col("pair_lift").desc, col("col_a"), col("col_b")).limit(30),
-      out("target_top_pairs.csv"))
+    // ---- 4: pair co-occurrence + lift (from the block-2 Gramian) -----------
+    // (col_a, col_b, count_a, count_b, co_count, pair_lift, corr): the pair
+    // tables write the first six cells, the corr-enriched ones all seven
+    val pairs = for { i <- targets.indices; j <- targets.indices if i < j } yield
+      (targets(i), targets(j), gram.positives(i), gram.positives(j), gram.co(i, j),
+        gram.lift(i, j), gram.pearson(i, j))
+    val pairHeader = Seq("col_a", "col_b", "count_a", "count_b", "co_count", "pair_lift")
+    Sinks.writeCsv(pairHeader, rows(orderBy(pairs)(asc(_._1), asc(_._2))),
+      out("target_pair_stats.csv"))
+    val byLift = rows(orderBy(pairs.filter(_._5 >= 10))(desc(_._6), asc(_._1), asc(_._2)))
+    Sinks.writeCsv(pairHeader, byLift.take(30), out("target_top_pairs.csv"))
 
     tick("4_pair_lift")
     // ---- 5: 41×41 corr matrix + antagonist slice ---------------------------
-    val corrM = Correlations.corrMatrix(trainTarget, targets)
-    val corrRows = targets.indices.map { i =>
-      org.apache.spark.sql.Row.fromSeq(targets(i) +: targets.indices.map(j => corrM(i, j)))
-    }
-    val corrSchema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("target", org.apache.spark.sql.types.StringType) +:
-        targets.map(t => org.apache.spark.sql.types.StructField(t,
-          org.apache.spark.sql.types.DoubleType)))
-    import scala.jdk.CollectionConverters._
-    Sinks.writeCsv(spark.createDataFrame(corrRows.asJava, corrSchema), out("target_corr_matrix.csv"))
+    // Pearson r from the Gramian's exact integer moments
+    Sinks.writeCsv("target" +: targets,
+      targets.indices.map(i => Row.fromSeq(targets(i) +: targets.indices.map(gram.pearson(i, _)))),
+      out("target_corr_matrix.csv"))
     // pair tables enriched with the pearson corr of each pair
     // (reference `P:168-173`): top-30 positive / negative / lift slices
-    val corrPairs = (for { i <- targets.indices; j <- targets.indices if i < j }
-      yield (targets(i), targets(j), corrM(i, j))).toDF("col_a", "col_b", "corr")
-    val pairWithCorr = pairDf.join(corrPairs, Seq("col_a", "col_b"), "left")
-    Sinks.writeCsv(
-      pairWithCorr.orderBy(col("corr").desc, col("col_a"), col("col_b")).limit(30),
+    val pairCorrHeader = pairHeader :+ "corr"
+    Sinks.writeCsv(pairCorrHeader,
+      rows(orderBy(pairs)(desc(_._7), asc(_._1), asc(_._2)).take(30)),
       out("top_positive_target_pairs.csv"))
-    Sinks.writeCsv(
-      pairWithCorr.orderBy(col("corr").asc, col("col_a"), col("col_b")).limit(30),
+    Sinks.writeCsv(pairCorrHeader,
+      rows(orderBy(pairs)(asc(_._7), asc(_._1), asc(_._2)).take(30)),
       out("top_negative_target_pairs.csv"))
-    Sinks.writeCsv(
-      pairWithCorr.where(col("co_count") >= 10)
-        .orderBy(col("pair_lift").desc, col("col_a"), col("col_b")).limit(30),
-      out("top_cooccurrence_lift_pairs.csv"))
+    Sinks.writeCsv(pairCorrHeader, byLift.take(30), out("top_cooccurrence_lift_pairs.csv"))
 
     val antagonist = targets.head // family-10 analog of target_10_1
     val ai = targets.indexOf(antagonist)
-    val antiCorrs = targets.indices.filter(_ != ai).map(j => corrM(ai, j))
-    val antagonistNegShare = antiCorrs.count(_ < 0).toDouble / antiCorrs.size
-    Sinks.writeCsv(
-      targets.indices.filter(_ != ai).map(j => (targets(j), corrM(ai, j)))
-        .toDF("target", "corr_with_antagonist").orderBy(col("corr_with_antagonist")),
+    val antiCorrs = targets.indices.filter(_ != ai).map(j => (targets(j), gram.pearson(ai, j)))
+    val antagonistNegShare = antiCorrs.count(_._2 < 0).toDouble / antiCorrs.size
+    Sinks.writeCsv(Seq("target", "corr_with_antagonist"), rows(orderBy(antiCorrs)(asc(_._2))),
       out("antagonist_corr_slice.csv"))
     // abs-sorted profile variant (reference's target_10_1_profile, `P:175-181`)
-    Sinks.writeCsv(
-      targets.indices.filter(_ != ai)
-        .map(j => (targets(j), corrM(ai, j), math.abs(corrM(ai, j))))
-        .toDF("other_target", "correlation", "abs_correlation")
-        .orderBy(col("abs_correlation").desc, col("other_target")),
+    Sinks.writeCsv(Seq("other_target", "correlation", "abs_correlation"),
+      rows(orderBy(antiCorrs.map { case (t, r) => (t, r, math.abs(r)) })(desc(_._3), asc(_._1))),
       out("antagonist_profile.csv"))
 
     tick("5_corr_matrix")
     // ---- 6: clustering on 1−|corr| (k ∈ {3,4,5}) ---------------------------
-    val dist = Array.tabulate(targets.size, targets.size)((i, j) => 1.0 - math.abs(corrM(i, j)))
+    val dist = Array.tabulate(targets.size, targets.size)((i, j) =>
+      1.0 - math.abs(gram.pearson(i, j)))
     val byK = Seq(3, 4, 5).map { k =>
       val labels = Clustering.averageLinkage(dist, k)
       k -> (labels, Clustering.silhouette(dist, labels))
@@ -151,56 +156,56 @@ object EdaPipeline {
     // per-k quality table: silhouette + cluster-size value counts
     // (reference's target_cluster_quality, `P:186-205`)
     Sinks.writeCsv(
-      Seq(3, 4, 5).map { k =>
+      Seq("k", "silhouette_precomputed", "largest_cluster_share",
+        "min_cluster_size", "max_cluster_size"),
+      rows(Seq(3, 4, 5).map { k =>
         val (labels, sil) = byK(k)
         val sizes = labels.groupBy(identity).values.map(_.size)
         (k, sil, sizes.max.toDouble / targets.size, sizes.min, sizes.max)
-      }.toDF("k", "silhouette_precomputed", "largest_cluster_share",
-        "min_cluster_size", "max_cluster_size"),
+      }),
       out("target_cluster_quality.csv"))
     val families = targets.map(FeatureCatalog.targetFamily).toArray
-    Sinks.writeCsv(
-      targets.indices.map(i => (targets(i), families(i), labels4(i)))
-        .toDF("target", "family", "cluster").orderBy(col("cluster"), col("target")),
+    Sinks.writeCsv(Seq("target", "family", "cluster"),
+      rows(orderBy(targets.indices.map(i => (targets(i), families(i), labels4(i))))(
+        asc(_._3), asc(_._1))),
       out("target_cluster_assignments.csv"))
     Sinks.writeCsv(
-      Clustering.summaries(dist, labels4, families)
-        .map(s => (s.cluster, s.size, s.avgIntraDist, s.dominantGroup, s.dominantShare))
-        .toDF("cluster", "size", "avg_intra_dist", "dominant_family", "dominant_share"),
+      Seq("cluster", "size", "avg_intra_dist", "dominant_family", "dominant_share"),
+      rows(Clustering.summaries(dist, labels4, families)
+        .map(s => (s.cluster, s.size, s.avgIntraDist, s.dominantGroup, s.dominantShare))),
       out("target_cluster_summary.csv"))
     val largestShare = labels4.groupBy(identity).values.map(_.size).max.toDouble / targets.size
 
     tick("6_clustering")
     // ---- 7: main-feature missingness ---------------------------------------
     val mainFeats = mainCat.allFeatures
-    val mainNulls = WideAgg.nullProfile(trainMain, mainFeats)
-      .withColumn("feature_type",
-        when(col("col_name").startsWith("num_"), "numeric").otherwise("categorical"))
-      .withColumn("source", lit("main"))
+    val mainNulls = WideAgg.nullRates(trainMain, mainFeats)
 
     tick("7_main_missing")
     // ---- 8: extra-feature missingness bands --------------------------------
-    val extraNulls = WideAgg.nullProfile(trainExtra, extraCat.numFeatures)
+    val extraNulls = WideAgg.nullRates(trainExtra, extraCat.numFeatures)
     // the combined summary is main ∪ extra (reference `P:249-267`), plus
     // the extra-only slice and its top-10-missing head as separate tables
-    val extraNullsLabeled = extraNulls
-      .withColumn("feature_type", lit("numeric"))
-      .withColumn("source", lit("extra"))
-    Sinks.writeCsv(
-      mainNulls.unionByName(extraNullsLabeled).orderBy(col("null_rate").desc, col("col_name")),
+    val nullHeader = Seq("col_name", "null_rate", "feature_type", "source")
+    def byNullRate(ps: Seq[(String, java.lang.Double, String, String)]) =
+      rows(orderBy(ps)(desc(_._2), asc(_._1)))
+    val mainLabeled = mainNulls.map { case (c, r) =>
+      (c, boxed(r), if (c.startsWith("num_")) "numeric" else "categorical", "main")
+    }
+    val extraLabeled = extraNulls.map { case (c, r) => (c, boxed(r), "numeric", "extra") }
+    Sinks.writeCsv(nullHeader, byNullRate(mainLabeled ++ extraLabeled),
       out("feature_missingness_summary.csv"))
-    Sinks.writeCsv(extraNullsLabeled.orderBy(col("null_rate").desc, col("col_name")),
-      out("extra_missingness_summary.csv"))
-    Sinks.writeCsv(
-      extraNullsLabeled.orderBy(col("null_rate").desc, col("col_name")).limit(10),
-      out("top10_missing_features.csv"))
-    val banded = extraNulls.withColumn("band", Relational.bandLabel(
-      col("null_rate"),
-      Seq("a_.. <=0.10" -> 0.10001, "b_.. <=0.50" -> 0.50001, "c_.. <=0.90" -> 0.90001,
-        "d_.. <=0.99" -> 0.99001), "e_.. >0.99"))
-    Sinks.writeCsv(
-      banded.groupBy(col("band")).agg(count(lit(1)).as("n_features")).orderBy(col("band")),
-      out("extra_missingness_bands.csv"))
+    val extraByRate = byNullRate(extraLabeled)
+    Sinks.writeCsv(nullHeader, extraByRate, out("extra_missingness_summary.csv"))
+    Sinks.writeCsv(nullHeader, extraByRate.take(10), out("top10_missing_features.csv"))
+    // a null rate (empty frame) falls through every band, as SQL's `<` does
+    val bands = Seq("a_.. <=0.10" -> 0.10001, "b_.. <=0.50" -> 0.50001,
+      "c_.. <=0.90" -> 0.90001, "d_.. <=0.99" -> 0.99001)
+    val bandHeader = Seq("band", "n_features")
+    val bandRows = rows(orderBy(extraNulls.groupBy { case (_, r) =>
+      bands.find { case (_, ub) => r.exists(_ < ub) }.fold("e_.. >0.99")(_._1)
+    }.toSeq.map { case (band, cs) => (band, cs.size.toLong) })(asc(_._1)))
+    Sinks.writeCsv(bandHeader, bandRows, out("extra_missingness_bands.csv"))
 
     tick("8_extra_bands")
     // ---- 9: filled-extra-count → deciles, AUC, point-biserial --------------
@@ -216,7 +221,8 @@ object EdaPipeline {
       .agg(count(lit(1)).as("n"), avg(col("filled_extra_count")).as("avg_filled"),
         avg(col("any_open").cast("double")).as("open_rate"))
       .orderBy(col("decile"))
-    Sinks.writeCsv(deciles, out("filled_extra_count_deciles.csv"))
+    val decileRows = Sinks.collectSmall(deciles)
+    Sinks.writeCsv(deciles.columns.toSeq, decileRows, out("filled_extra_count_deciles.csv"))
     val aucRow = Auc.aucDf(joined, col("any_open") === 1, col("filled_extra_count")).collect()(0)
     val filledAuc = aucRow.getAs[Double]("auc")
     val pbRow = joined.agg(
@@ -228,19 +234,17 @@ object EdaPipeline {
 
     tick("9_filled_deciles")
     // ---- 10: missing-indicator AUC (30% sample) ----------------------------
-    val candidates = extraNulls.collect()
-      .map(r => r.getString(0) -> r.getDouble(1))
-      .filter { case (_, nr) => nr > 0.05 && nr < 0.95 }.map(_._1).take(20).toSeq
+    val candidates = extraNulls.collect {
+      case (c, Some(nr)) if nr > 0.05 && nr < 0.95 => c
+    }.take(20)
     val sampled = Sampling.modSample(trainExtra, "customer_id", 30)
       .select((col("customer_id") +: candidates.map(col)): _*)
       .join(anyOpen, Seq("customer_id"), "inner")
       .select((col("any_open") +: candidates.map(c => col(c).isNotNull.cast("int").as(c))): _*)
     // all indicator AUCs in ONE aggregate pass (binary-score closed form)
-    val indAuc = Auc.binaryAucProfile(sampled, col("any_open") === 1, candidates)
-    Sinks.writeCsv(
-      indAuc.withColumnRenamed("col_name", "feature")
-        .orderBy(col("abs_auc").desc, col("feature")),
-      out("missing_indicator_auc.csv"))
+    val indAuc = orderBy(Auc.binaryAucProfile(sampled, col("any_open") === 1, candidates))(
+      desc(_.get(2)), asc(_.get(0)))
+    Sinks.writeCsv(Seq("feature", "auc", "abs_auc"), indAuc, out("missing_indicator_auc.csv"))
 
     tick("10_missing_auc")
     // ---- 11: categorical dictionaries + unseen test categories -------------
@@ -264,7 +268,7 @@ object EdaPipeline {
     val unseenAgg = testGroups.join(trainGroups, Seq("feature", "value"), "left_anti")
       .groupBy("feature")
       .agg(count(lit(1)).as("unseen_test_values"), sum("n_te").as("unseen_rows"))
-    val catStats = trainGroups.groupBy("feature").agg(count(lit(1)).as("train_cardinality"))
+    val catStatsDf = trainGroups.groupBy("feature").agg(count(lit(1)).as("train_cardinality"))
       .join(testGroups.groupBy("feature").agg(count(lit(1)).as("test_cardinality")),
         Seq("feature"))
       .join(unseenAgg, Seq("feature"), "left")
@@ -272,19 +276,14 @@ object EdaPipeline {
         coalesce(col("unseen_test_values"), lit(0L)).as("unseen_test_values"),
         (coalesce(col("unseen_rows"), lit(0L)) / testRows.toDouble).as("unseen_row_rate"))
       .orderBy(col("feature"))
-      .collect().toSeq
+    val catStats = Sinks.collectSmall(catStatsDf)
     trainGroups.unpersist(); testGroups.unpersist()
-    Sinks.writeCsv(
-      catStats.map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
-        .toDF("feature", "train_cardinality", "test_cardinality",
-          "unseen_test_values", "unseen_row_rate"),
-      out("categorical_cardinality.csv"))
+    Sinks.writeCsv(catStatsDf.columns.toSeq, catStats, out("categorical_cardinality.csv"))
     // unseen-values slice sorted by test-row impact (reference's
     // categorical_unseen_categories, `P:398-405`)
-    Sinks.writeCsv(
-      catStats.map(r => (r.getString(0), r.getLong(3), r.getDouble(4)))
-        .toDF("feature", "unseen_unique_categories", "unseen_rate_test_rows")
-        .orderBy(col("unseen_rate_test_rows").desc, col("feature")),
+    Sinks.writeCsv(Seq("feature", "unseen_unique_categories", "unseen_rate_test_rows"),
+      rows(orderBy(catStats.map(r => (r.getString(0), r.getLong(3), r.getDouble(4))))(
+        desc(_._3), asc(_._1))),
       out("categorical_unseen_categories.csv"))
     val unseenFeatures = catStats.count(_.getLong(3) > 0)
 
@@ -295,14 +294,13 @@ object EdaPipeline {
       Sampling.modSample(trainMain, "customer_id", 20),
       Sampling.modSample(testMain, "customer_id", 20),
       advCols, maxIter = 15, maxDepth = 4)
-    Sinks.writeCsv(Seq(("train_vs_test", advAuc)).toDF("experiment", "auc"),
+    Sinks.writeCsv(Seq("experiment", "auc"), Seq(Row("train_vs_test", advAuc)),
       out("adversarial_auc.csv"))
 
     tick("12_adversarial")
     // ---- 13: linear screening (12% sample, impute, cross-corr) -------------
-    val screenFeats = mainCat.numFeatures ++
-      extraNulls.collect().map(r => r.getString(0) -> r.getDouble(1))
-        .filter(_._2 < 0.95).map(_._1).toSeq
+    val screenFeats =
+      mainCat.numFeatures ++ extraNulls.collect { case (c, Some(nr)) if nr < 0.95 => c }
     val screenSample = Sampling.modSample(trainMain, "customer_id", 12)
       .select((col("customer_id") +: mainCat.numFeatures.map(col)): _*)
       .join(Sampling.modSample(trainExtra, "customer_id", 12)
@@ -312,83 +310,77 @@ object EdaPipeline {
       .join(Sampling.modSample(trainTarget, "customer_id", 12), Seq("customer_id"), "inner")
       .cache()
     val screenRows = screenSample.count()
-    val linear = Correlations.crossCorr(screenSample, screenFeats, targets)
-    Sinks.writeCsv(linear.orderBy(col("feature"), col("target")),
+    // (feature, target, corr, abs_corr)
+    val linear = Correlations.crossCorrRows(screenSample, screenFeats, targets)
+    screenSample.unpersist()
+    val linearHeader = Seq("feature", "target", "corr", "abs_corr")
+    Sinks.writeCsv(linearHeader, rows(orderBy(linear)(asc(_._1), asc(_._2))),
       out("feature_target_linear_corr.csv"))
-    val top10 = Relational.topKPerGroup(
-      linear.na.drop(Seq("corr")), Seq("target"), Seq(col("abs_corr").desc, col("feature")), 10)
-    Sinks.writeCsv(top10.orderBy(col("target"), col("rk")), out("top10_features_per_target.csv"))
+    val valid = linear.filterNot(_._3.isNaN)
+    // top-k features per target by |corr|, ranked 1..k, in (target, rk) order
+    def topK(ls: Seq[(String, String, Double, Double)], k: Int) =
+      rows(orderBy(ls.groupBy(_._2).values.toSeq.flatMap { rs =>
+        orderBy(rs)(desc(_._4), asc(_._1)).take(k).zipWithIndex.map {
+          case ((f, t, c, a), i) => (f, t, c, a, i + 1)
+        }
+      })(asc(_._2), asc(_._5)))
+    val top10 = topK(valid, 10)
+    Sinks.writeCsv(linearHeader :+ "rk", top10, out("top10_features_per_target.csv"))
 
     // feature provenance for the mix/signal tables
     val mainFeatSet = (mainCat.numFeatures ++ mainCat.catFeatures).toSet
-    val withMeta = top10
-      .withColumn("source",
-        when(col("feature").isin(mainFeatSet.toSeq: _*), "main").otherwise("extra"))
-      .withColumn("feature_type",
-        when(col("feature").startsWith("cat_"), "categorical").otherwise("numeric"))
+    def source(f: String) = if (mainFeatSet(f)) "main" else "extra"
+    def categorical(f: String) = f.startsWith("cat_")
 
     // per-target composition of the top-10 list (reference `P:539-551`)
     Sinks.writeCsv(
-      withMeta.groupBy(col("target")).agg(
-        avg(col("abs_corr")).as("mean_abs_corr_top10"),
-        sum(when(col("feature_type") === "categorical", 1).otherwise(0)).as("n_cat_top10"),
-        sum(when(col("feature_type") === "numeric", 1).otherwise(0)).as("n_num_top10"),
-        sum(when(col("source") === "main", 1).otherwise(0)).as("n_main_top10"),
-        sum(when(col("source") === "extra", 1).otherwise(0)).as("n_extra_top10"))
-        .orderBy(col("mean_abs_corr_top10").desc, col("target")),
+      Seq("target", "mean_abs_corr_top10", "n_cat_top10", "n_num_top10", "n_main_top10",
+        "n_extra_top10"),
+      rows(orderBy(top10.groupBy(_.getString(1)).toSeq.map { case (t, rs) =>
+        val fs = rs.map(_.getString(0))
+        val (nCat, nMain) = (fs.count(categorical).toLong, fs.count(source(_) == "main").toLong)
+        (t, mean(rs.map(_.getDouble(3))), nCat, fs.size - nCat, nMain, fs.size - nMain)
+      })(desc(_._2), asc(_._1))),
       out("target_top10_feature_mix.csv"))
 
     // universality via top-10 membership (reference `P:553-563`; the full-
     // screen variant below stays as feature_universality.csv)
     Sinks.writeCsv(
-      withMeta.groupBy(col("feature")).agg(
-        countDistinct(col("target")).as("n_targets_top10"),
-        avg(col("abs_corr")).as("mean_abs_corr_when_top10"),
-        max(col("abs_corr")).as("max_abs_corr_when_top10"))
-        .orderBy(col("n_targets_top10").desc, col("mean_abs_corr_when_top10").desc,
-          col("feature")),
+      Seq("feature", "n_targets_top10", "mean_abs_corr_when_top10", "max_abs_corr_when_top10"),
+      rows(orderBy(top10.groupBy(_.getString(0)).toSeq.map { case (f, rs) =>
+        val a = rs.map(_.getDouble(3))
+        (f, rs.map(_.getString(1)).distinct.size.toLong, mean(a), a.max)
+      })(desc(_._2), desc(_._3), asc(_._1))),
       out("feature_universality_top10.csv"))
 
     // full-screen signal summary with provenance + null rate (reference
     // `P:565-585`)
-    val featNullRates = mainNulls.select(col("col_name").as("feature"), col("null_rate"))
-      .unionByName(extraNulls.select(col("col_name").as("feature"), col("null_rate")))
+    val absByFeature = valid.groupBy(_._1).toSeq.map { case (f, rs) => f -> rs.map(_._4) }
+    val nullRateOf = (mainNulls ++ extraNulls).toMap
     Sinks.writeCsv(
-      linear.na.drop(Seq("corr")).groupBy(col("feature")).agg(
-        max(col("abs_corr")).as("max_abs_corr"),
-        avg(col("abs_corr")).as("mean_abs_corr"),
-        sum(when(col("abs_corr") > 0.05, 1).otherwise(0)).as("n_targets_abs_corr_gt_005"),
-        sum(when(col("abs_corr") > 0.10, 1).otherwise(0)).as("n_targets_abs_corr_gt_010"))
-        .withColumn("source",
-          when(col("feature").isin(mainFeatSet.toSeq: _*), "main").otherwise("extra"))
-        .withColumn("feature_type",
-          when(col("feature").startsWith("cat_"), "categorical").otherwise("numeric"))
-        .join(featNullRates, Seq("feature"), "left")
-        .orderBy(col("max_abs_corr").desc, col("mean_abs_corr").desc, col("feature")),
+      Seq("feature", "max_abs_corr", "mean_abs_corr", "n_targets_abs_corr_gt_005",
+        "n_targets_abs_corr_gt_010", "source", "feature_type", "null_rate"),
+      rows(orderBy(absByFeature.map { case (f, a) =>
+        (f, a.max, mean(a), a.count(_ > 0.05).toLong, a.count(_ > 0.10).toLong, source(f),
+          if (categorical(f)) "categorical" else "numeric", boxed(nullRateOf.get(f).flatten))
+      })(desc(_._2), desc(_._3), asc(_._1))),
       out("feature_signal_summary.csv"))
 
     // convenience slice: top-5 linear rows for a fixed target set
     // (reference's golden_linear_top5_selected_targets, `P:587-594`;
     // selection is deterministic — first 4 targets in catalog order)
-    val selectedTargets = targets.take(4)
-    Sinks.writeCsv(
-      Relational.topKPerGroup(
-        linear.na.drop(Seq("corr")).where(col("target").isin(selectedTargets: _*)),
-        Seq("target"), Seq(col("abs_corr").desc, col("feature")), 5)
-        .orderBy(col("target"), col("rk")),
+    val selectedTargets = targets.take(4).toSet
+    Sinks.writeCsv(linearHeader :+ "rk", topK(valid.filter(r => selectedTargets(r._2)), 5),
       out("golden_linear_top5_selected_targets.csv"))
-    screenSample.unpersist()
 
     tick("13_screening")
     // ---- 14: feature universality ------------------------------------------
-    val universality = linear.na.drop(Seq("corr")).groupBy(col("feature"))
-      .agg(
-        sum(when(col("abs_corr") > 0.05, 1).otherwise(0)).as("n_targets_gt05"),
-        avg(col("abs_corr")).as("mean_abs_corr"),
-        max(col("abs_corr")).as("max_abs_corr"),
-        median(col("abs_corr")).as("median_abs_corr"))
-      .orderBy(col("n_targets_gt05").desc, col("mean_abs_corr").desc, col("feature"))
-    Sinks.writeCsv(universality, out("feature_universality.csv"))
+    val univHeader = Seq("feature", "n_targets_gt05", "mean_abs_corr", "max_abs_corr",
+      "median_abs_corr")
+    val universality = rows(orderBy(absByFeature.map { case (f, a) =>
+      (f, a.count(_ > 0.05).toLong, mean(a), a.max, median(a))
+    })(desc(_._2), desc(_._3), asc(_._1)))
+    Sinks.writeCsv(univHeader, universality, out("feature_universality.csv"))
 
     tick("14_universality")
     // ---- 15: whale signals (p99 cut × rare targets, Fisher) ----------------
@@ -427,33 +419,25 @@ object EdaPipeline {
       val p = StatTests.fisherExactGreater(a, b, c, d)
       (f, t, nWhale, a, lift, p)
     }
-    val whaleDf = whaleRows
-      .toDF("feature", "target", "n_whales", "n_whale_pos", "lift", "p_value")
-      .orderBy(col("p_value"), col("feature"), col("target"))
-    Sinks.writeCsv(whaleDf, out("whale_signals.csv"))
+    val whaleHeader = Seq("feature", "target", "n_whales", "n_whale_pos", "lift", "p_value")
+    val whalesByP = rows(orderBy(whaleRows)(asc(_._6), asc(_._1), asc(_._2)))
+    Sinks.writeCsv(whaleHeader, whalesByP, out("whale_signals.csv"))
     // candidate rollup + top-3 per target over the SIGNIFICANT slice
-    // (reference `P:652-669`); whaleRows is a driver-side list (≤ features
-    // × rare targets), so these are local transforms
-    val sigWhales = whaleRows.filter(r => !r._5.isNaN && r._5 >= 2.0 && r._6 < 0.05)
-    val whaleCandidates = sigWhales.groupBy(_._1).map { case (f, rs) =>
-      val lifts = rs.map(_._5).sorted
-      val median =
-        if (lifts.size % 2 == 1) lifts(lifts.size / 2)
-        else (lifts(lifts.size / 2 - 1) + lifts(lifts.size / 2)) / 2.0
-      (f, rs.map(_._2).distinct.size, median, lifts.last, rs.map(_._6).min)
-    }.toSeq
-    Sinks.writeCsv(
-      whaleCandidates
-        .toDF("feature", "n_rare_targets", "median_lift", "max_lift", "min_pvalue")
-        .orderBy(col("n_rare_targets").desc, col("median_lift").desc, col("feature")),
+    // (reference `P:652-669`)
+    val sigWhales = whaleRows.filter(r => r._5 >= 2.0 && r._6 < 0.05)
+    val whaleCandidates = sigWhales.groupBy(_._1).toSeq.map { case (f, rs) =>
+      val lifts = rs.map(_._5)
+      (f, rs.map(_._2).distinct.size, median(lifts), lifts.max, rs.map(_._6).min)
+    }
+    Sinks.writeCsv(Seq("feature", "n_rare_targets", "median_lift", "max_lift", "min_pvalue"),
+      rows(orderBy(whaleCandidates)(desc(_._2), desc(_._3), asc(_._1))),
       out("whale_feature_candidates.csv"))
-    Sinks.writeCsv(
-      sigWhales.groupBy(_._2).toSeq.flatMap { case (_, rs) =>
-        rs.sortBy(r => (-r._5, r._1)).take(3)
-      }.toDF("feature", "target", "n_whales", "n_whale_pos", "lift", "p_value")
-        .orderBy(col("target"), col("lift").desc, col("feature")),
+    Sinks.writeCsv(whaleHeader,
+      rows(orderBy(sigWhales.groupBy(_._2).values.toSeq.flatMap { rs =>
+        orderBy(rs)(desc(_._5), asc(_._1)).take(3)
+      })(asc(_._2), desc(_._5), asc(_._1))),
       out("whale_top3_per_target.csv"))
-    val whaleSig = whaleRows.count(r => r._5 >= 2.0 && r._6 < 0.05).toLong
+    val whaleSig = sigWhales.size.toLong
 
     tick("15_whales")
     // ---- 16: summary.json + report.md --------------------------------------
@@ -493,17 +477,16 @@ object EdaPipeline {
          |- extra features: ${extraCat.numFeatures.size} (heavily null)
          |
          |## 2. Target stats (top 10 by positive count)
-         |${Sinks.pretty(targetStatsDf, 10)}
+         |${Sinks.pretty(statHeader, rows(statsSorted), 10)}
          |
          |## 3. Family rollup
-         |${Sinks.pretty(familyStats, 10)}
+         |${Sinks.pretty(familyHeader, familyRows, 10)}
          |
          |## 4. Opened-target distribution
-         |${Sinks.pretty(opened.groupBy(col("n_opened")).count().orderBy(col("n_opened")), 10)}
+         |${Sinks.pretty(Seq("n_opened", "count"), openedRows, 10)}
          |
          |## 5. Strongest co-occurring target pairs (co_count ≥ 10, by lift)
-         |${Sinks.pretty(pairDf.where(col("co_count") >= 10)
-              .orderBy(col("pair_lift").desc, col("col_a"), col("col_b")), 10)}
+         |${Sinks.pretty(pairHeader, byLift, 10)}
          |
          |## 6. Antagonist target `$antagonist`
          |- negative-correlation share vs other targets: ${f"$antagonistNegShare%.3f"}
@@ -513,17 +496,16 @@ object EdaPipeline {
          |- largest-cluster share at k=4: ${f"$largestShare%.3f"}
          |
          |## 8. Extra-feature missingness bands
-         |${Sinks.pretty(banded.groupBy(col("band")).agg(count(lit(1)).as("n_features"))
-              .orderBy(col("band")), 10)}
+         |${Sinks.pretty(bandHeader, bandRows, 10)}
          |
          |## 9. Filled-extra-count signal
          |- AUC vs any-open: ${f"$filledAuc%.4f"}
          |- point-biserial r: ${f"$filledPb%.4f"} (p = ${f"$filledPbP%.3g"})
          |- deciles:
-         |${Sinks.pretty(deciles, 10)}
+         |${Sinks.pretty(deciles.columns.toSeq, decileRows, 10)}
          |
          |## 10. Top missing-indicator AUCs (30% sample)
-         |${Sinks.pretty(indAuc.orderBy(col("abs_auc").desc, col("col_name")), 10)}
+         |${Sinks.pretty(Seq("col_name", "auc", "abs_auc"), indAuc, 10)}
          |
          |## 11. Categorical dictionaries
          |- features with unseen test categories: $unseenFeatures
@@ -533,10 +515,10 @@ object EdaPipeline {
          |
          |## 13. Linear screen (12% sample, $screenRows rows, ${screenFeats.size} features)
          |top universal features:
-         |${Sinks.pretty(universality, 10)}
+         |${Sinks.pretty(univHeader, universality, 10)}
          |
          |## 14. Whale signals (top 10 by p-value)
-         |${Sinks.pretty(whaleDf, 10)}
+         |${Sinks.pretty(whaleHeader, whalesByP, 10)}
          |- significant (lift ≥ 2, p < 0.05): $whaleSig
          |""".stripMargin
     Sinks.writeText(report, out("report.md"))

@@ -12,8 +12,8 @@ import graft.core.Relational.SingletonAttachOps
 object AggQueries {
   import Det._
 
-  /** Shared oracle for a14 / a14b (expression-pass and Gramian paths must
-    * match the same SQL). */
+  /** Shared oracle for a14 / a14b (both entry points run the one Gramian
+    * kernel and must match the same SQL). */
   private val pairLiftOracleSql: String = {
     val fl = Seq(
       "f_disc" -> "CASE WHEN l_discount > 0.05 THEN 1 ELSE 0 END",
@@ -260,8 +260,8 @@ object AggQueries {
       },
       Some(pairLiftOracleSql)),
 
-    // A14 scale twin: identical semantics via RowMatrix Gramian (one
-    // treeAggregate of a k×k buffer — the k>64 path), same DuckDB oracle.
+    // A14 scale twin: the same Gramian kernel under the `pairLiftGramian`
+    // name (one treeAggregate of an upper-triangle buffer), same oracle.
     Q("a14b_pair_lift_gramian",
       (s, d) => {
         val flagged = T(s, d, "lineitem")

@@ -2,7 +2,6 @@ package graft.stats
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import graft.core.Relational
 
 /** Exact ROC AUC as a distributed rank statistic (Mann–Whitney U with
@@ -59,25 +58,15 @@ object Auc {
           .as("auc"))
   }
 
-  /** Scalar convenience: collect the 1-row result. */
-  def auc(df: DataFrame, label: Column, score: Column): Double = {
-    val row = aucDf(df, label, score).head()
-    if (row.isNullAt(2)) Double.NaN else row.getDouble(2)
-  }
-
-  /** Orientation-free strength `max(auc, 1-auc)` (reference `P:354`). */
-  def aucStrength(a: Double): Double =
-    if (a.isNaN) Double.NaN else math.max(a, 1.0 - a)
-
   /** Many BINARY-score AUCs in ONE aggregate pass. For a 0/1 score the
     * tie-corrected AUC has the closed form 0.5 + (P(s=1|y=1) −
     * P(s=1|y=0))/2, so k indicator columns (e.g. the reference's
     * missing-indicator screen, `P:321-364`) need k conditional means —
-    * one map-side-combined job instead of k ranking jobs. Returns
-    * (col_name, auc, abs_auc); NaN when a label class is absent.
-    * Verified against the rank-based [[aucDf]] in AucSpec. */
-  def binaryAucProfile(df: DataFrame, label: Column, cols: Seq[String]): DataFrame = {
-    val spark = df.sparkSession
+    * one map-side-combined job instead of k ranking jobs. Returns driver
+    * rows (col_name, auc, abs_auc) in column order; null auc when a label
+    * class is absent. Verified against the rank-based [[aucDf]] in
+    * AucSpec. */
+  def binaryAucProfile(df: DataFrame, label: Column, cols: Seq[String]): Seq[Row] = {
     val y = label.cast("int")
     val aggs =
       Seq(sum(y).as("__np"), sum(lit(1) - y).as("__nn")) ++
@@ -89,7 +78,7 @@ object Auc {
     val row = df.agg(aggs.head, aggs.tail: _*).head()
     val np = if (row.isNullAt(0)) 0L else row.getLong(0)
     val nn = if (row.isNullAt(1)) 0L else row.getLong(1)
-    val out = cols.zipWithIndex.map { case (c, i) =>
+    cols.zipWithIndex.map { case (c, i) =>
       val a =
         if (np == 0 || nn == 0) Double.NaN
         else {
@@ -98,13 +87,9 @@ object Auc {
           0.5 + (s1.toDouble / np - s0.toDouble / nn) / 2.0
         }
       val aucV: java.lang.Double = if (a.isNaN) null else a
+      // orientation-free strength max(auc, 1−auc) (reference `P:354`)
       val absV: java.lang.Double = if (a.isNaN) null else math.max(a, 1 - a)
       Row(c, aucV, absV)
     }
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(out.asJava, StructType(Seq(
-      StructField("col_name", StringType, nullable = false),
-      StructField("auc", DoubleType, nullable = true),
-      StructField("abs_auc", DoubleType, nullable = true))))
   }
 }

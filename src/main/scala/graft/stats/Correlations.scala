@@ -1,244 +1,237 @@
 package graft.stats
 
-import org.apache.spark.ml.feature.VectorAssembler
-import org.apache.spark.ml.linalg.Matrix
-import org.apache.spark.ml.stat.Correlation
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.ml.linalg.{Matrices, Matrix}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.core.WideAgg
 
-/** Distributed Pearson correlation matrices (SURVEY.md A13/A15).
+/** Pearson correlation and co-occurrence statistics (SURVEY.md A13–A15),
+  * all from ONE accumulation kernel, [[coMoments]].
   *
   * The reference computes a 41×41 target correlation matrix
-  * (`eda_workspace/public_eda_pipeline.py:140-141`) and a 519×41
+  * (`eda_workspace/public_eda_pipeline.py:140-141`), pair co-occurrence
+  * and lift from the Gramian yᵀy (`P:143-163`) and a 519×41
   * feature×target cross-correlation grid via centered `XᵀY/n`
-  * (`P:495-511`). The Spark-idiomatic form is ONE pass of
-  * `ml.stat.Correlation.corr` over an assembled vector column — a single
-  * distributed Gramian accumulation instead of O(k²) separate agg jobs.
-  * The resulting k×k matrix is tiny (≤ a few thousand entries) and is
-  * flattened driver-side to a long (col_a, col_b, corr) table.
+  * (`P:495-511`). Each is a block of co-moments: the kernel folds every
+  * partition's rows into a primitive buffer about fixed per-column
+  * centers and tree-reduces the buffers to the driver — one scan, no
+  * shuffle of row data, no per-pair aggregate expressions (so no codegen
+  * growth with the column count), and only the block asked for: the
+  * upper triangle of a square block, or exactly X×Y for a cross block.
+  * Centering at the column means first (one means pass) keeps Pearson
+  * free of the n·Σxy − ΣxΣy cancellation; 0/1 columns need no centering
+  * at all, since their moments are exact integers.
   *
-  * Scale note: `Correlation.corr` reduces via treeAggregate of a k×k
-  * co-moment buffer — one scan, no shuffle of row data; this is the plan
-  * you want at 100 TB for k up to a few thousand.
+  * Scale note: the buffer is O(|X|·|Y|) doubles per partition, so the
+  * plan holds at 100 TB for blocks up to a few thousand columns a side.
   */
 object Correlations {
 
-  /** k×k Pearson matrix over `cols`, nulls mean-imputed upstream or rows
-    * dropped here (`dropRows=true` mirrors pandas `DataFrame.corr`'s
-    * pairwise-complete default only when data has no nulls; the reference's
-    * target matrix has none). */
-  def corrMatrix(df: DataFrame, cols: Seq[String], dropNullRows: Boolean = true): Matrix = {
-    val base = if (dropNullRows) df.na.drop(cols) else df
-    val casted = base.select(cols.map(c => col(c).cast(DoubleType).as(c)): _*)
-    if (cols.length <= 16) return corrMatrixAgg(casted, cols)
-    val assembled = new VectorAssembler()
-      .setInputCols(cols.toArray)
-      .setOutputCol("__v")
-      .transform(casted)
-      .select("__v")
-    Correlation.corr(assembled, "__v", "pearson").head.getAs[Matrix](0)
+  /** Co-moments of an X×Y column block about fixed centers: the row
+    * count n and, per column or pair, Σ(x−cx), Σ(x−cx)², Σ(y−cy),
+    * Σ(y−cy)² and Σ(x−cx)(y−cy). A square block (`xs == ys`) stores only
+    * its upper triangle, whose diagonal is Σ(x−cx)². */
+  private final class CoMoments(
+      val n: Long, nx: Int, ny: Int, square: Boolean, buf: Array[Double]) {
+    private val cross = if (square) nx * (nx + 1) / 2 else nx * ny
+    private val sums = cross + (if (square) 0 else nx + ny)
+    def xy(i: Int, j: Int): Double =
+      if (!square) buf(i * ny + j)
+      else if (i <= j) buf(i * nx - i * (i - 1) / 2 + (j - i))
+      else xy(j, i)
+    private def xx(i: Int): Double = if (square) xy(i, i) else buf(cross + i)
+    private def yy(j: Int): Double = if (square) xy(j, j) else buf(cross + nx + j)
+    def x(i: Int): Double = buf(sums + i)
+    private def y(j: Int): Double = buf(sums + (if (square) 0 else nx) + j)
+    /** Pearson r, exact for any centers (the first moments remove the
+      * offset of a center from the column mean); NaN when either column
+      * has no variance. */
+    def pearson(i: Int, j: Int): Double = {
+      val d = math.sqrt((xx(i) - x(i) * x(i) / n) * (yy(j) - y(j) * y(j) / n))
+      if (d > 0) (xy(i, j) - x(i) * y(j) / n) / d else Double.NaN
+    }
   }
 
-  /** Small-k Pearson matrix via two centered aggregate passes (means,
-    * then co-moments of deviations) — numerically stable (no n·Σx² −
-    * (Σx)² cancellation) and ~10× cheaper than the assembler +
-    * `Correlation.corr` pipeline for k ≤ 16 (k + C(k,2) codegen'd aggs
-    * per pass vs RowMatrix machinery). Two scans instead of a cache:
-    * at scale a second columnar scan of k pruned columns is cheaper
-    * than materializing the frame. */
-  private def corrMatrixAgg(casted: DataFrame, cols: Seq[String]): Matrix = {
+  /** The one accumulation kernel: [[CoMoments]] of columns `xs` × `ys`
+    * (cast to double) about centers `xc`/`yc`, in one scan. A null cell
+    * sits at its column's center (deviation 0), so with the column mean
+    * as center a null is mean-imputed. The zero-buffer aggregate (not
+    * `treeReduce`) makes an empty or zero-partition input the zero
+    * Gramian instead of an error. Partition buffers merge exactly (a
+    * BigDecimal per slot, beside a double sum that only carries NaN and
+    * ±Inf), so the result does not depend on the order in which
+    * `treeAggregate` receives finished partitions. */
+  private def coMoments(df: DataFrame, xs: Seq[String], xc: Seq[Double],
+      ys: Seq[String], yc: Seq[Double]): CoMoments = {
+    val square = xs == ys && xc == yc
+    val nx = xs.length
+    val ny = ys.length
+    val cols = if (square) xs else xs ++ ys
+    val centers = (if (square) xc else xc ++ yc).toArray
+    val yOff = if (square) 0 else nx
+    val cross = if (square) nx * (nx + 1) / 2 else nx * ny
+    val len = cross + (if (square) 0 else cols.length) + cols.length + 1
+    type Sum = (Array[java.math.BigDecimal], Array[Double])
+    def add(a: Sum, b: Sum): Sum = {
+      var i = 0
+      while (i < len) { a._1(i) = a._1(i).add(b._1(i)); a._2(i) += b._2(i); i += 1 }
+      a
+    }
+    val (exact, raw) = df.select(cols.map(c => col(c).cast(DoubleType)): _*).rdd.mapPartitions { it =>
+      // cross block ++ squares (X×Y only) ++ first moments ++ row count
+      val acc = new Array[Double](len)
+      val d = new Array[Double](centers.length)
+      while (it.hasNext) {
+        val r = it.next()
+        var i = 0
+        while (i < d.length) {
+          d(i) = if (r.isNullAt(i)) 0.0 else r.getDouble(i) - centers(i)
+          i += 1
+        }
+        var idx = 0
+        i = 0
+        while (i < nx) {
+          val di = d(i)
+          var j = if (square) i else 0
+          while (j < ny) { acc(idx) += di * d(yOff + j); idx += 1; j += 1 }
+          i += 1
+        }
+        if (!square) {
+          i = 0
+          while (i < d.length) { acc(idx) += d(i) * d(i); idx += 1; i += 1 }
+        }
+        i = 0
+        while (i < d.length) { acc(idx) += d(i); idx += 1; i += 1 }
+        acc(idx) += 1.0
+      }
+      Iterator.single(acc)
+    }.map(acc => (acc.map(v =>
+      if (java.lang.Double.isFinite(v)) new java.math.BigDecimal(v) else java.math.BigDecimal.ZERO), acc): Sum)
+      .treeAggregate((Array.fill(len)(java.math.BigDecimal.ZERO), new Array[Double](len)))(add, add)
+    val buf = Array.tabulate(len)(i =>
+      if (java.lang.Double.isFinite(raw(i))) exact(i).doubleValue else raw(i))
+    new CoMoments(buf(len - 1).toLong, nx, ny, square, buf)
+  }
+
+  /** Gramian yᵀy of 0/1 columns (nulls count as 0) with the row count and
+    * column sums, from one scan: everything per-column positives, pair
+    * lift and the Pearson matrix of 0/1 columns need, as exact integers
+    * (below 2^53). Indices are positions in the scanned columns. */
+  final class Gramian private[Correlations] (m: CoMoments) {
+    val n: Long = m.n
+    def co(i: Int, j: Int): Long = m.xy(i, j).toLong
+    def positives(i: Int): Long = m.x(i).toLong
+
+    /** P(a∧b)/(P(a)·P(b)); NaN when a column has no positive. */
+    def lift(i: Int, j: Int): Double = {
+      val nd = n.toDouble
+      val pa = positives(i) / nd
+      val pb = positives(j) / nd
+      if (pa > 0 && pb > 0) (co(i, j) / nd) / (pa * pb) else Double.NaN
+    }
+
+    /** Pearson r from the exact integer moments,
+      * (n·co − a·b)/√(a(n−a)·b(n−b)); 1 on the diagonal, NaN off it when a
+      * column is constant. */
+    def pearson(i: Int, j: Int): Double =
+      if (i == j) 1.0
+      else {
+        val (nn, a, b) = (BigInt(n), BigInt(positives(i)), BigInt(positives(j)))
+        val den = a * (nn - a) * b * (nn - b)
+        if (den == 0) Double.NaN
+        else (nn * co(i, j) - a * b).toDouble / math.sqrt(den.toDouble)
+      }
+  }
+
+  /** One-scan [[Gramian]] of the 0/1 columns `cols`. */
+  def gramian(df: DataFrame, cols: Seq[String]): Gramian = {
+    val zeros = cols.map(_ => 0.0)
+    new Gramian(coMoments(df, cols, zeros, cols, zeros))
+  }
+
+  /** k×k Pearson matrix over `cols`: one means pass, then one square
+    * co-moment pass about the means. Rows with a null in `cols` are
+    * dropped (this mirrors pandas `DataFrame.corr`'s pairwise-complete
+    * default only when data has no nulls; the reference's target matrix
+    * has none). Diagonal 1; NaN off it for a constant column. */
+  def corrMatrix(df: DataFrame, cols: Seq[String]): Matrix = {
+    val base = df.na.drop(cols)
+    val means = WideAgg.runBatched(base, cols, c => avg(col(c).cast(DoubleType)))
+      .map(_._2.getOrElse(0.0))
+    val m = coMoments(base, cols, means, cols, means)
     val k = cols.length
-    val meanRow = casted.agg(
-      avg(col(cols.head)).as("m0"),
-      cols.tail.zipWithIndex.map { case (c, i) => avg(col(c)).as(s"m${i + 1}") }: _*).head()
-    val means = cols.indices.map(i => if (meanRow.isNullAt(i)) 0.0 else meanRow.getDouble(i))
-    val devs = cols.indices.map(i => col(cols(i)) - means(i))
-    val pairs = for { i <- 0 until k; j <- i until k } yield (i, j)
-    val aggs = pairs.map { case (i, j) => sum(devs(i) * devs(j)).as(s"c${i}_$j") }
-    val comRow = casted.agg(aggs.head, aggs.tail: _*).head()
-    val com = Array.ofDim[Double](k, k)
-    pairs.zipWithIndex.foreach { case ((i, j), idx) =>
-      val v = if (comRow.isNullAt(idx)) Double.NaN else comRow.getDouble(idx)
-      com(i)(j) = v; com(j)(i) = v
-    }
-    val vals = Array.tabulate(k, k) { (i, j) =>
-      val d = math.sqrt(com(i)(i) * com(j)(j))
-      if (d > 0) com(i)(j) / d else if (i == j) 1.0 else Double.NaN
-    }
-    org.apache.spark.ml.linalg.Matrices.dense(k, k, vals.flatten)
+    Matrices.dense(k, k,
+      Array.tabulate(k, k)((i, j) => if (i == j) 1.0 else m.pearson(i, j)).flatten)
   }
 
   /** Long-format (col_a, col_b, corr) for all ordered pairs a < b. */
   def corrLong(df: DataFrame, cols: Seq[String]): DataFrame = {
     val m = corrMatrix(df, cols)
-    val spark = df.sparkSession
-    val rows = for {
-      i <- cols.indices
-      j <- cols.indices
-      if i < j
-    } yield Row(cols(i), cols(j), m(i, j))
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      rows.asJava,
-      StructType(Seq(
-        StructField("col_a", StringType, nullable = false),
-        StructField("col_b", StringType, nullable = false),
-        StructField("corr", DoubleType, nullable = true))))
+    val rows = for { i <- cols.indices; j <- cols.indices if i < j }
+      yield Row(cols(i), cols(j), m(i, j))
+    toDf(df, rows, Seq("col_a" -> StringType, "col_b" -> StringType, "corr" -> DoubleType))
   }
 
-  /** Mean-impute `cols` in one exact pass (reference A11,
-    * `public_eda_pipeline.py:496-499`): per-column means via a single
-    * decimal-accumulated aggregate (order-independent, so the imputed
-    * values are bit-deterministic), then `coalesce(col, mean)`. Columns
-    * that are entirely null fill with 0.0 like the reference's
-    * `np.nan_to_num` fallback. */
-  def imputeMeans(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val means = graft.core.WideAgg.runBatched(
-      df, cols,
-      c => graft.functions.SumQ6.sum_q6(col(c)) / count(col(c)))
-      .toMap
+  /** Exact per-column means (reference A11, `public_eda_pipeline.py:496-499`):
+    * one decimal-accumulated aggregate per column batch (order-independent,
+    * so bit-deterministic); 0.0 for a column that is entirely null, like
+    * the reference's `np.nan_to_num` fallback. */
+  private def exactMeans(df: DataFrame, cols: Seq[String]): Seq[Double] =
+    WideAgg.runBatched(df, cols, c => graft.functions.SumQ6.sum_q6(col(c)) / count(col(c)))
+      .map(_._2.filterNot(_.isNaN).getOrElse(0.0))
+
+  /** Mean-impute `cols` in one exact pass: `coalesce(col, mean)` with the
+    * [[exactMeans]]. */
+  def imputeMeans(df: DataFrame, cols: Seq[String]): DataFrame =
     // one projection for all columns (withColumns), not a foldLeft of
     // withColumn: per-column re-analysis is O(k²) in plan-build time and
     // dominates wall-clock at the reference's 2241-column width
-    val repl = cols.map { c =>
-      val m = means.getOrElse(c, None).filterNot(_.isNaN).getOrElse(0.0)
+    df.withColumns(cols.zip(exactMeans(df, cols)).map { case (c, m) =>
       c -> coalesce(col(c).cast(DoubleType), lit(m))
-    }.toMap
-    df.withColumns(repl)
+    }.toMap)
+
+  /** Features × targets Pearson grid (reference screening `P:495-511`,
+    * 519×41): one means pass over both sides, then one X×Y co-moment
+    * pass about those means. Nulls are mean-imputed, as the reference
+    * does before its centered XᵀY grid (`P:496-499`), with the same exact
+    * means as [[imputeMeans]]. Rows (feature, target, corr, abs_corr) in
+    * feature-major order. */
+  def crossCorrRows(df: DataFrame, features: Seq[String],
+      targets: Seq[String]): Seq[(String, String, Double, Double)] = {
+    val means = exactMeans(df, features ++ targets)
+    val (fc, tc) = means.splitAt(features.length)
+    val m = coMoments(df, features, fc, targets, tc)
+    for { i <- features.indices; j <- targets.indices } yield {
+      val r = m.pearson(i, j)
+      (features(i), targets(j), r, math.abs(r))
+    }
   }
 
-  /** Cross-correlation block: features × targets Pearson grid via one
-    * assembled pass (reference screening `P:495-511`, 519×41). Nullable
-    * features are mean-imputed first (the reference mean-imputes NaNs
-    * before its centered XᵀY grid, `P:496-499`; VectorAssembler would
-    * otherwise throw on nulls). Returns (feature, target, corr, abs_corr). */
-  def crossCorr(df: DataFrame, features: Seq[String], targets: Seq[String]): DataFrame = {
-    val all = features ++ targets
-    val imputed = imputeMeans(df, features)
-    val m = corrMatrix(imputed, all, dropNullRows = false)
-    val spark = df.sparkSession
-    val nf = features.length
-    val rows = for {
-      i <- features.indices
-      j <- targets.indices
-    } yield Row(features(i), targets(j), m(i, nf + j), math.abs(m(i, nf + j)))
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      rows.asJava,
-      StructType(Seq(
-        StructField("feature", StringType, nullable = false),
-        StructField("target", StringType, nullable = false),
-        StructField("corr", DoubleType, nullable = true),
-        StructField("abs_corr", DoubleType, nullable = true))))
-  }
+  /** [[crossCorrRows]] as a frame. */
+  def crossCorr(df: DataFrame, features: Seq[String], targets: Seq[String]): DataFrame =
+    toDf(df, crossCorrRows(df, features, targets).map(Row.fromTuple), Seq("feature" -> StringType,
+      "target" -> StringType, "corr" -> DoubleType, "abs_corr" -> DoubleType))
 
-  /** Pairwise co-occurrence counts and lift for binary 0/1 columns via the
-    * Gramian yᵀy (reference A14, `P:143-163`): one distributed pass, then
-    * driver-side pair enumeration (≤ C(k,2) rows). Lift =
-    * P(a∧b)/(P(a)·P(b)). */
+  /** Pairwise co-occurrence counts and lift for binary 0/1 columns
+    * (reference A14, `P:143-163`): (col_a, col_b, count_a, count_b,
+    * co_count, pair_lift) for every pair a < b, from one [[Gramian]]. */
   def pairLift(df: DataFrame, cols: Seq[String]): DataFrame = {
-    // O(k²) aggregate expressions — one codegen'd pass for k ≤ 64; wider
-    // inputs route through the RowMatrix Gramian (one treeAggregate of a
-    // k×k buffer — no codegen blowup).
-    if (cols.length > 64) return pairLiftGramian(df, cols)
-    val spark = df.sparkSession
-    val pairs = for { i <- cols.indices; j <- cols.indices if i < j } yield (i, j)
-    // ONE full-scan pass: total count + k marginal sums + C(k,2) co-counts.
-    val allAggs =
-      Seq(count(lit(1)).as("__n")) ++
-        cols.map(c => sum(col(c).cast(LongType)).as(c)) ++
-        pairs.map { case (i, j) =>
-          sum((col(cols(i)) * col(cols(j))).cast(LongType)).as(s"${i}_$j")
-        }
-    val row = df.agg(allAggs.head, allAggs.tail: _*).head()
-    val n = row.getLong(0).toDouble
-    val counts = cols.indices.map(i => if (row.isNullAt(1 + i)) 0L else row.getLong(1 + i))
-    val coBase = 1 + cols.length
-    val rows = pairs.zipWithIndex.map { case ((i, j), k) =>
-      val co = if (row.isNullAt(coBase + k)) 0L else row.getLong(coBase + k)
-      val pa = counts(i) / n
-      val pb = counts(j) / n
-      val lift = if (pa > 0 && pb > 0) (co / n) / (pa * pb) else Double.NaN
-      Row(cols(i), cols(j), counts(i), counts(j), co, lift)
-    }
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      rows.asJava,
-      StructType(Seq(
-        StructField("col_a", StringType, nullable = false),
-        StructField("col_b", StringType, nullable = false),
-        StructField("count_a", LongType, nullable = false),
-        StructField("count_b", LongType, nullable = false),
-        StructField("co_count", LongType, nullable = false),
-        StructField("pair_lift", DoubleType, nullable = true))))
+    val g = gramian(df, cols)
+    val rows = for { i <- cols.indices; j <- cols.indices if i < j }
+      yield Row(cols(i), cols(j), g.positives(i), g.positives(j), g.co(i, j), g.lift(i, j))
+    toDf(df, rows, Seq("col_a" -> StringType, "col_b" -> StringType,
+      "count_a" -> LongType, "count_b" -> LongType, "co_count" -> LongType,
+      "pair_lift" -> DoubleType))
   }
 
-  /** Wide-k pair lift via a single-pass distributed Gramian: each partition
-    * folds its rows into a primitive upper-triangular k·(k+1)/2 buffer (plus
-    * one slot for the row count), tree-reduced to the driver — scales to k in
-    * the thousands where per-pair aggregate expressions would blow the
-    * codegen constant pool. One scan, no cache, no separate `count()` job,
-    * no per-cell boxing (the earlier `RowMatrix` form paid all three).
-    * Counts are exact (0/1 inputs ⇒ integer-valued doubles below 2^53).
-    * Same output schema as [[pairLift]]. */
-  def pairLiftGramian(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val spark = df.sparkSession
-    val k = cols.length
-    val tlen = k * (k + 1) / 2
-    val casted = df.select(cols.map(c => coalesce(col(c).cast(DoubleType), lit(0.0)).as(c)): _*)
-    val buf = casted.rdd.mapPartitions { it =>
-      val acc = new Array[Double](tlen + 1) // upper-tri gram ++ row count
-      val v = new Array[Double](k)
-      while (it.hasNext) {
-        val r = it.next()
-        var i = 0
-        while (i < k) { v(i) = r.getDouble(i); i += 1 }
-        var idx = 0
-        i = 0
-        while (i < k) {
-          val vi = v(i)
-          var j = i
-          while (j < k) { acc(idx) += vi * v(j); idx += 1; j += 1 }
-          i += 1
-        }
-        acc(tlen) += 1.0
-      }
-      Iterator.single(acc)
-    }.treeAggregate(new Array[Double](tlen + 1))(
-      // zero-buffer aggregate (not treeReduce): an empty/zero-partition
-      // input degrades to the zero Gramian instead of throwing
-      { (a, b) =>
-        var i = 0
-        while (i < a.length) { a(i) += b(i); i += 1 }
-        a
-      },
-      { (a, b) =>
-        var i = 0
-        while (i < a.length) { a(i) += b(i); i += 1 }
-        a
-      })
-    val n = buf(tlen)
-    // row i of the upper triangle starts at i*k - i*(i-1)/2; requires i <= j.
-    def gram(i: Int, j: Int): Double = buf(i * k - i * (i - 1) / 2 + (j - i))
-    val rows = for { i <- 0 until k; j <- 0 until k if i < j } yield {
-      val ca = gram(i, i).toLong
-      val cb = gram(j, j).toLong
-      val co = gram(i, j).toLong
-      val pa = ca / n
-      val pb = cb / n
-      val lift = if (pa > 0 && pb > 0) ((co / n) / (pa * pb)) else Double.NaN
-      Row(cols(i), cols(j), ca, cb, co, lift)
-    }
+  /** [[pairLift]] under the name the `a14b` scale twin declares. */
+  def pairLiftGramian(df: DataFrame, cols: Seq[String]): DataFrame = pairLift(df, cols)
+
+  private def toDf(like: DataFrame, rows: Seq[Row], cols: Seq[(String, DataType)]): DataFrame = {
     import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      rows.asJava,
-      StructType(Seq(
-        StructField("col_a", StringType, nullable = false),
-        StructField("col_b", StringType, nullable = false),
-        StructField("count_a", LongType, nullable = false),
-        StructField("count_b", LongType, nullable = false),
-        StructField("co_count", LongType, nullable = false),
-        StructField("pair_lift", DoubleType, nullable = true))))
+    like.sparkSession.createDataFrame(rows.asJava, StructType(cols.map { case (n, t) =>
+      StructField(n, t, nullable = t == DoubleType)
+    }))
   }
 }

@@ -49,7 +49,7 @@ class AucSpec extends SparkSpec {
     val df = Seq.fill(500)((rnd.nextInt(2), rnd.nextInt(2), rnd.nextInt(2), rnd.nextInt(4) / 3))
       .toDF("y", "i1", "i2", "i3")
     val profile = Auc.binaryAucProfile(df, col("y") === 1, Seq("i1", "i2", "i3"))
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      .map(r => r.getString(0) -> r.getDouble(1)).toMap
     Seq("i1", "i2", "i3").foreach { c =>
       val ranked = Auc.aucDf(df, col("y") === 1, col(c)).collect()(0).getAs[Double]("auc")
       assert(math.abs(profile(c) - ranked) < 1e-12, s"$c: ${profile(c)} vs $ranked")

@@ -90,22 +90,19 @@ class PropertySpec extends SparkSpec {
     } yield vals
     forAll(gen, n = 6) { vals =>
       val df = vals.zipWithIndex.map { case (v, i) => (v.toDouble, i.toLong) }.toDF("v", "id")
-      for (parts <- Seq(1, 3, 32)) {
-        spark.conf.set("spark.sql.shuffle.partitions", parts)
-        try {
-          val got = graft.core.Relational
-            .withGlobalRank(df, Seq(col("v"), col("id")), "rk", "n")
-            .select("v", "id", "rk", "n").collect()
-            .map(r => (r.getDouble(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-          val n = vals.size.toLong
-          assert(got.forall(_._4 === n))
-          assert(got.map(_._3).sorted.toSeq === (1L to n), s"not a permutation at $parts parts")
-          val expected = got.map(t => (t._1, t._2)).sortBy(identity).zipWithIndex
-            .map { case ((v, id), i) => (v, id) -> (i + 1L) }.toMap
-          got.foreach { case (v, id, rk, _) =>
-            assert(rk === expected((v, id)), s"rank mismatch for ($v,$id) at $parts parts")
-          }
-        } finally spark.conf.set("spark.sql.shuffle.partitions", 8)
+      for (parts <- Seq(1, 3, 32)) withShufflePartitions(parts) {
+        val got = graft.core.Relational
+          .withGlobalRank(df, Seq(col("v"), col("id")), "rk", "n")
+          .select("v", "id", "rk", "n").collect()
+          .map(r => (r.getDouble(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        val n = vals.size.toLong
+        assert(got.forall(_._4 === n))
+        assert(got.map(_._3).sorted.toSeq === (1L to n), s"not a permutation at $parts parts")
+        val expected = got.map(t => (t._1, t._2)).sortBy(identity).zipWithIndex
+          .map { case ((v, id), i) => (v, id) -> (i + 1L) }.toMap
+        got.foreach { case (v, id, rk, _) =>
+          assert(rk === expected((v, id)), s"rank mismatch for ($v,$id) at $parts parts")
+        }
       }
     }
   }
@@ -116,25 +113,22 @@ class PropertySpec extends SparkSpec {
     def check(rows: Seq[(Option[String], Double, Long)]): Unit = {
       val df = rows.toDF("g", "v", "id")
       val sizes = rows.groupBy(_._1).view.mapValues(_.size.toLong).toMap
-      for (parts <- Seq(1, 3, 32)) {
-        spark.conf.set("spark.sql.shuffle.partitions", parts)
-        try {
-          val got = graft.core.Relational
-            .withGroupRank(df, Seq("g"), Seq(col("v"), col("id")), "rk", "n")
-            .select("g", "v", "id", "rk", "n").collect()
-            .map(r => (Option(r.getString(0)), r.getDouble(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-          assert(got.length === rows.size, s"rows lost at $parts parts")
-          got.groupBy(_._1).foreach { case (g, grp) =>
-            assert(grp.forall(_._5 === sizes(g)), s"group total wrong for $g at $parts parts")
-            assert(grp.map(_._4).sorted.toSeq === (1L to sizes(g)),
-              s"not a permutation in $g at $parts parts")
-            val expected = grp.map(t => (t._2, t._3)).sortBy(identity).zipWithIndex
-              .map { case ((v, id), i) => (v, id) -> (i + 1L) }.toMap
-            grp.foreach { case (_, v, id, rk, _) =>
-              assert(rk === expected((v, id)), s"rank mismatch for ($g,$v,$id) at $parts parts")
-            }
+      for (parts <- Seq(1, 3, 32)) withShufflePartitions(parts) {
+        val got = graft.core.Relational
+          .withGroupRank(df, Seq("g"), Seq(col("v"), col("id")), "rk", "n")
+          .select("g", "v", "id", "rk", "n").collect()
+          .map(r => (Option(r.getString(0)), r.getDouble(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+        assert(got.length === rows.size, s"rows lost at $parts parts")
+        got.groupBy(_._1).foreach { case (g, grp) =>
+          assert(grp.forall(_._5 === sizes(g)), s"group total wrong for $g at $parts parts")
+          assert(grp.map(_._4).sorted.toSeq === (1L to sizes(g)),
+            s"not a permutation in $g at $parts parts")
+          val expected = grp.map(t => (t._2, t._3)).sortBy(identity).zipWithIndex
+            .map { case ((v, id), i) => (v, id) -> (i + 1L) }.toMap
+          grp.foreach { case (_, v, id, rk, _) =>
+            assert(rk === expected((v, id)), s"rank mismatch for ($g,$v,$id) at $parts parts")
           }
-        } finally spark.conf.set("spark.sql.shuffle.partitions", 8)
+        }
       }
     }
     val gen = for {
@@ -406,10 +400,7 @@ class PropertySpec extends SparkSpec {
         .collect()
         .map(r => r.getAs[Long]("doc_id") -> ((r.getAs[Long]("pos"), r.getAs[Int]("shard"))))
         .toMap
-    val results = Seq(1, 3, 32).map { parts =>
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
-      try run() finally spark.conf.set("spark.sql.shuffle.partitions", 8)
-    }
+    val results = Seq(1, 3, 32).map(withShufflePartitions(_)(run()))
     assert(results.distinct.size === 1,
       "shuffleShard must assign identical (pos, shard) at any partition count")
   }

@@ -43,4 +43,14 @@ trait SparkSpec extends AnyFunSuite {
 
   /** A fresh dir `prefix…` under the suite's temp dir. */
   def tempDir(prefix: String): Path = Files.createTempDirectory(suiteDir, prefix)
+
+  /** Runs `body` with `spark.sql.shuffle.partitions` = `n`, then restores
+    * the value it found (the session's is the CPU count, which every later
+    * suite in the JVM plans with). */
+  def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toLong)
+    try body finally spark.conf.set(key, prev)
+  }
 }

@@ -147,11 +147,10 @@ class WideWidthSpec extends SparkSpec {
   }
 
   test("screening-shape crossCorr at width: 200-feature slice × 8 targets") {
-    // block-13 shape at width: the Gramian path (VectorAssembler +
-    // Correlation.corr) over a wide assembled vector. A 2248-column
-    // Gramian is ~5M doubles — fine — but the spec keeps the spot-check
-    // slice small so the whole suite stays fast; the full-width agg paths
-    // above are the constant-pool stress.
+    // block-13 shape at width: the co-moment kernel's X×Y block (a
+    // 2240×8 block is ~18k doubles — fine), but the spec keeps the
+    // spot-check slice small so the whole suite stays fast; the
+    // full-width agg paths above are the constant-pool stress.
     val slice = featCols.take(200)
     val targets = RefFixture.trainTarget(spark, Rows)
     val joined = wide.select((col("customer_id") +: slice.map(col)): _*)
