@@ -18,8 +18,12 @@ import graft.streaming.IngestStream
   * pairs (exactly the pairs a full-corpus re-run would add — see
   * [[Dedup.incrementalNearDup]]), and adds the batch's banded rows + docs
   * to the state. Invariant after N batches: `pairs` equals the
-  * full-corpus LSH pair set over everything ingested (IngestSpec replays
-  * this via the CLI).
+  * full-corpus [[Dedup.minHashNearDup]] pair set over everything ingested
+  * (IngestSpec replays this via the CLI) while no (band, band_hash)
+  * bucket grows past [[Dedup.DefaultMaxBucket]]. Both paths run the one
+  * bucket-pair kernel, so past the cap both star-cap around the bucket's
+  * min id; `pairs` then also keeps what it emitted while the bucket was
+  * still small, a superset of the full run's pairs.
   *
   * Retry contract: each call is one [[Generations.TableSet]] commit
   * keyed by the batch's file listing (paths, lengths, mtimes). A batch
@@ -81,16 +85,19 @@ object RunIngest {
     *
     * Seeded hyperplanes make banding batch-invariant, so after N
     * invocations `pairs` equals the full-corpus [[Dedup.cosinePairsLsh]]
-    * run over everything ingested.
+    * run over everything ingested, with the same cap rule as
+    * [[ingestOnce]]: equal while every bucket stays within
+    * [[Dedup.DefaultMaxBucket]], a superset of the full run's pairs once
+    * one grows past it mid-history.
     *
     * SIZE THE BANDS TO THE CORPUS: a sign-LSH band of `nPlanes/nBands`
     * bits has `2^(nPlanes/nBands)` buckets, so expected bucket size is
     * about `N / 2^(nPlanes/nBands)` — once that approaches the
-    * [[Dedup.DefaultMaxBucket]] star-cap (1024), probes silently lose
-    * candidates to the cap (measured: 2-bit bands collapse recall at a
-    * 20k-vector corpus, DevScale ingest12). Rule: choose
-    * `nPlanes/nBands ≥ log2(N / 256)`; re-banding is a one-pass rebuild
-    * of the index from the at-rest vectors.
+    * [[Dedup.DefaultMaxBucket]] star-cap (1024), probes and full runs
+    * alike silently lose candidates to the cap (measured: 2-bit bands
+    * collapse recall at a 20k-vector corpus, DevScale ingest12). Rule:
+    * choose `nPlanes/nBands ≥ log2(N / 256)`; re-banding is a one-pass
+    * rebuild of the index from the at-rest vectors.
     *
     * KEEP BATCHES BOUNDED: a batch also pair-joins against ITSELF, and
     * that term's candidate mass is ~ buckets·(M/buckets)²/2 for batch

@@ -24,10 +24,6 @@ object Sampling {
   def hashBucket(key: Column, seed: Int = Seed): Column =
     pmod(xxhash64(key, lit(seed)), lit(100L))
 
-  /** Keep ~pct% of rows, deterministically by key. */
-  def hashSample(df: DataFrame, keyCol: String, pct: Int, seed: Int = Seed): DataFrame =
-    df.filter(hashBucket(col(keyCol), seed) < lit(pct.toLong))
-
   /** Modulo sampler on an integral key — used for oracle-parity queries
     * (DuckDB has no xxhash64; `k % 100` is engine-portable). Same shape,
     * weaker mixing; only for keys that are already ~uniform. */

@@ -17,11 +17,6 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Footer-only schema read (reference `public_eda_pipeline.py:64-66`
-    * `collect_schema().names()`). */
-  def columnNames(spark: SparkSession, dir: String, name: String): Seq[String] =
-    load(spark, dir, name).schema.fieldNames.toSeq
-
   /** Type-adaptive events loader: `dir/events.parquet` with `ts`
     * normalized to a proper TIMESTAMP (microsecond precision, UTC session
     * contract) REGARDLESS of how the producer encoded it. Real corpora mix

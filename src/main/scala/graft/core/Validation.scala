@@ -33,9 +33,6 @@ object Validation {
   def minBound(c: String, bound: Double): Check =
     Check(s"min_$c", min(col(c)).cast("double"), _ >= bound)
 
-  def maxBound(c: String, bound: Double): Check =
-    Check(s"max_$c", max(col(c)).cast("double"), _ <= bound)
-
   def inDomain(c: String, domain: Seq[String]): Check =
     Check(s"domain_$c",
       sum(when(col(c).isInCollection(domain) || col(c).isNull, 0L).otherwise(1L))

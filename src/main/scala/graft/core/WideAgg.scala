@@ -33,15 +33,6 @@ object WideAgg {
   def nullProfile(df: DataFrame, cols: Seq[String], batch: Int = DefaultBatch): DataFrame =
     toDf(df.sparkSession, nullRates(df, cols, batch), "col_name", "null_rate")
 
-  /** Per-column sum (reference A2: 41 target sums in one pass). Plain
-    * double accumulation — fast path; use [[sumProfileExact]] when the
-    * result must be bit-deterministic (oracle queries). */
-  def sumProfile(df: DataFrame, cols: Seq[String], batch: Int = DefaultBatch): DataFrame = {
-    val spark = df.sparkSession
-    val sums = runBatched(df, cols, c => sum(col(c).cast(DoubleType)), batch)
-    toDf(spark, sums, "col_name", "sum_value")
-  }
-
   /** Per-column sum with exact decimal accumulation (order-independent →
     * reproducible bitwise across engines/runs), emitted as double. */
   def sumProfileExact(df: DataFrame, cols: Seq[String], batch: Int = DefaultBatch): DataFrame = {

@@ -268,16 +268,21 @@ object Curation {
     * Scale shape: a grouped running sum from the distributed prefix scan
     * ([[graft.core.Relational.withGroupCumSum]]) — a hot stratum spreads
     * over many range partitions, so NO reducer ever sorts a whole
-    * stratum. */
+    * stratum. The scan (and its checkpoint) sees only (key, stratum,
+    * tokens); the kept keys then semi-join back onto `df`, so payload
+    * columns such as the text never enter the checkpoint. `keyCol` must
+    * be unique within a stratum. */
   def tokenBudgetCap(df: DataFrame, keyCol: String, strataCol: String,
       nTokensCol: String, budget: Long, seed: String): DataFrame = {
     require(budget >= 0, s"budget must be >= 0, got $budget")
-    val keyed = df.withColumn("__skey",
-      md5(concat(lit(seed + "#"), col(keyCol).cast("string"))))
-    graft.core.Relational.withGroupCumSum(keyed, Seq(strataCol),
-        Seq(col("__skey"), col(keyCol)), col(nTokensCol), "__cum")
+    val keyed = df.select(col(keyCol).as("__key"), col(strataCol).as("__strata"),
+      col(nTokensCol).as("__ntok"),
+      md5(concat(lit(seed + "#"), col(keyCol).cast("string"))).as("__skey"))
+    val kept = graft.core.Relational.withGroupCumSum(keyed, Seq("__strata"),
+        Seq(col("__skey"), col("__key")), col("__ntok"), "__cum")
       .where(col("__cum") <= budget)
-      .drop("__skey", "__cum")
+    df.join(kept, col(strataCol) <=> col("__strata") && col(keyCol) <=> col("__key"),
+      "left_semi")
   }
 
   /** Per-document n-gram NOVELTY: the fraction of a doc's distinct

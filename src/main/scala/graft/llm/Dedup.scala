@@ -172,16 +172,13 @@ object Dedup {
     // also get the inverted-index join computed once, not per consumer.
     // localCheckpoint blocks are ContextCleaner-managed (freed on GC); a
     // cluster deployment with a checkpoint dir would use checkpoint().
-    val sh = shingles(df, idCol, textCol, w)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    cached(shingles(df, idCol, textCol, w)) { sh =>
       pairIntersections(sh, maxDf)
-        .withColumn("jaccard",
-          col("n_inter").cast("double") / (col("n_a") + col("n_b") - col("n_inter")))
+        .withColumn("jaccard", jaccardOf)
         .where(col("jaccard") >= minJaccard)
         .select(col("id_a"), col("id_b"), col("n_a"), col("n_b"), col("n_inter"), col("jaccard"))
         .localCheckpoint(true)
-    } finally sh.unpersist(blocking = false)
+    }
   }
 
   /** Asymmetric CONTAINMENT pairs — the quote/subset detector Jaccard
@@ -194,10 +191,8 @@ object Dedup {
     * jaccard ≤ both containments). */
   def containmentPairs(
       df: DataFrame, idCol: String, textCol: String,
-      w: Int, minContainment: Double, maxDf: Long = Long.MaxValue): DataFrame = {
-    val sh = shingles(df, idCol, textCol, w)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      w: Int, minContainment: Double, maxDf: Long = Long.MaxValue): DataFrame =
+    cached(shingles(df, idCol, textCol, w)) { sh =>
       pairIntersections(sh, maxDf)
         .withColumn("containment_a", col("n_inter").cast("double") / col("n_a"))
         .withColumn("containment_b", col("n_inter").cast("double") / col("n_b"))
@@ -205,8 +200,7 @@ object Dedup {
         .select(col("id_a"), col("id_b"), col("n_a"), col("n_b"), col("n_inter"),
           col("containment_a"), col("containment_b"))
         .localCheckpoint(true)
-    } finally sh.unpersist(blocking = false)
-  }
+    }
 
   /** Inverted-index pair intersection kernel shared by [[jaccardPairs]] /
     * [[containmentPairs]]: candidate pairs share ≥1 (non-hot) shingle,
@@ -229,6 +223,142 @@ object Dedup {
     inter
       .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
       .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
+  }
+
+  // ---- banded LSH: one banding per signature kind, one bucket-pair -------
+  // ---- kernel, one exact verify per metric --------------------------------
+
+  /** MinHash band keys of the `sig` array column: `bands` bands of
+    * k/bands contiguous minhashes, each hashed with its band index to
+    * one 64-bit bucket key (array<long>[bands]). The one MinHash banding:
+    * [[bandedSignatures]] explodes it, d18 compares the arrays of two
+    * docs across band counts. */
+  private[graft] def minHashBands(k: Int, bands: Int): Column = {
+    require(k % bands == 0, s"k=$k not divisible by bands=$bands")
+    val r = k / bands
+    transform(sequence(lit(0), lit(bands - 1)),
+      b => xxhash64(b, concat_ws(",", slice(col("sig"), b * lit(r) + 1, lit(r)))))
+  }
+
+  /** Sign-band keys of the `sig` long column: `nBands` bands of
+    * nBits/nBands contiguous sign bits (array<struct<band, band_hash>>).
+    * The one sign-bit banding: the cosine index, SimHash and
+    * [[Similarity.lshTopK]]. */
+  private[graft] def signBands(nBits: Int, nBands: Int): Column = {
+    val r = nBits / nBands
+    array((0 until nBands).map { b =>
+      struct(lit(b).as("band"),
+        shiftrightunsigned(col("sig"), b * r).bitwiseAND(lit((1L << r) - 1)).as("band_hash"))
+    }: _*)
+  }
+
+  /** Within-bucket pair blowup guard (VERDICT r10 #4): a degenerate
+    * (band, band_hash) bucket of M members — M near-identical docs that
+    * survived upstream exact dedup, e.g. templated boilerplate — makes
+    * the band self-join emit M²/2 candidates inside ONE bucket. Buckets
+    * larger than this are "star-capped": instead of all pairs, each
+    * member pairs with the bucket's min-id representative (M−1 pairs).
+    * The dup CLUSTER stays connected (downstream union-find /
+    * [[dupClusters]] recovers the same component through the rep) and
+    * every emitted pair still passes exact verification; only
+    * pair-level completeness WITHIN the degenerate bucket is traded —
+    * the d2 `maxDf` trade, at the band level. Normal corpora (bucket
+    * sizes ≪ cap) produce byte-identical output. One cap for every
+    * path: [[bucketPairs]] applies it. */
+  val DefaultMaxBucket = 1024L
+
+  /** Members of a full-corpus run: every banded row is new — a full run
+    * is the probe of an empty index. */
+  private def allNew(banded: DataFrame): DataFrame = banded.withColumn("is_batch", lit(true))
+
+  /** Members of an incremental probe: index rows in buckets the batch
+    * touches — exactly the probe join's read set (bucket-pruned at
+    * rest), so the census adds no O(corpus) pass; per-batch work stays
+    * O(batch + matched rows) — unioned with the batch's own rows, each
+    * side flagged. */
+  private[graft] def probeMembers(index: DataFrame, batchIndex: DataFrame): DataFrame = {
+    val key = Seq("band", "band_hash")
+    index.join(batchIndex.select(key.map(col): _*).distinct(), key, "left_semi")
+      .select(col("id"), col("band"), col("band_hash"), lit(false).as("is_batch"))
+      .union(batchIndex
+        .select(col("id"), col("band"), col("band_hash"), lit(true).as("is_batch")))
+  }
+
+  /** THE bucket-pair kernel: candidate pairs (id_a < id_b) of members
+    * (id, band, band_hash, is_batch, payload…) that share a bucket, at
+    * least one of them new. Any payload column `c` rides along as
+    * `c_a`/`c_b` (SimHash carries its 64-bit hash so the verify needs no
+    * join back). A bucket census — ONE window pass over the bucket key
+    * (m, rep), not groupBy + join-back — feeds the self-join of buckets
+    * up to `maxBucket` and the star pairs (rep, member) of larger ones
+    * ([[DefaultMaxBucket]]). Stars INCLUDE a bucket's old index members,
+    * so a component stays connected through the rep even when the
+    * bucket crossed the cap mid-history (re-emitted (rep, old) links are
+    * idempotent for clustering). Both joins are (band, band_hash) EQUI
+    * joins, never all-pairs (PlanSpec locks this).
+    *
+    * Lazy by default. `eager` persists the census for its three pair
+    * branches and returns the pair set localCheckpointed, so it stays
+    * valid after the census is released — what a loop calling this per
+    * batch needs (GC-freed checkpoint blocks of a larger frame would
+    * accumulate). */
+  private[graft] def bucketPairs(members: DataFrame, maxBucket: Long = DefaultMaxBucket,
+      eager: Boolean = false): DataFrame = {
+    val payload = members.columns.toSeq.diff(Seq("id", "band", "band_hash", "is_batch"))
+    val byBucket = Window.partitionBy(col("band"), col("band_hash"))
+    val sized = payload.foldLeft(members
+        .withColumn("m", count(lit(1)).over(byBucket))
+        .withColumn("rep", min(col("id")).over(byBucket))) { (df, c) =>
+      df.withColumn(s"rep_$c", min_by(col(c), col("id")).over(byBucket))
+    }
+    def pairs(census: DataFrame): DataFrame = {
+      val small = census.where(col("m") <= maxBucket)
+      val smallPairs = small.as("a")
+        .join(small.as("b"),
+          col("a.band") === col("b.band") && col("a.band_hash") === col("b.band_hash") &&
+            col("a.id") < col("b.id") && (col("a.is_batch") || col("b.is_batch")))
+        .select(col("a.id").as("id_a") +: col("b.id").as("id_b") +:
+          payload.flatMap(c => Seq(col(s"a.$c").as(s"${c}_a"), col(s"b.$c").as(s"${c}_b"))): _*)
+      // rep < id by construction (rep is the bucket min)
+      val starPairs = census.where(col("m") > maxBucket && col("id") =!= col("rep"))
+        .select(col("rep").as("id_a") +: col("id").as("id_b") +:
+          payload.flatMap(c => Seq(col(s"rep_$c").as(s"${c}_a"), col(c).as(s"${c}_b"))): _*)
+      smallPairs.union(starPairs).dropDuplicates("id_a", "id_b")
+    }
+    if (eager) cached(sized)(pairs(_).localCheckpoint(true)) else pairs(sized)
+  }
+
+  /** Persist `df` for the scope of `f` and release it deterministically
+    * after — NOT localCheckpoint, whose blocks only free on driver GC. A
+    * result `f` materializes eagerly stays valid after the release. */
+  private def cached[T](df: DataFrame)(f: DataFrame => T): T = {
+    val c = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try f(c) finally c.unpersist(blocking = false)
+  }
+
+  /** Jaccard of a pair from (n_inter, n_a, n_b) set sizes. */
+  private def jaccardOf: Column =
+    col("n_inter").cast("double") / (col("n_a") + col("n_b") - col("n_inter"))
+
+  /** THE exact Jaccard verify: candidate pairs (id_a, id_b, extra…)
+    * checked against exact shingle-set Jaccard ≥ `minJaccard` over `sh`
+    * (id, shingle), which must hold every candidate's shingles and be
+    * persisted (it feeds the sizes and both intersection sides). Keeps
+    * the candidate columns, adds `jaccard`; eagerly materialized so the
+    * caller can release `sh`. */
+  private def verifyJaccard(cands: DataFrame, sh: DataFrame, minJaccard: Double): DataFrame = {
+    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
+    val inter = sh.as("sa")
+      .join(cands.select("id_a", "id_b"), col("sa.id") === col("id_a"))
+      .join(sh.as("sb"), col("sb.id") === col("id_b") && col("sa.shingle") === col("sb.shingle"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_inter"))
+    cands.join(inter, Seq("id_a", "id_b"), "left").na.fill(0L, Seq("n_inter"))
+      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
+      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
+      .withColumn("jaccard", jaccardOf)
+      .where(col("jaccard") >= minJaccard)
+      .select(cands.columns.map(col) :+ col("jaccard"): _*)
+      .localCheckpoint(true)
   }
 
   // ---- MinHash + LSH ------------------------------------------------------
@@ -256,100 +386,36 @@ object Dedup {
       .select(col("id"), array((0 until k).map(i => col(s"h$i")): _*).as("sig"))
   }
 
-  /** MinHash LSH candidate pairs: signatures split into `bands` bands of
-    * k/bands rows; docs sharing any band hash become candidates (bucket
-    * join — never all-pairs). Output includes the signature-estimated
-    * Jaccard (fraction of equal minhashes). Any pair with true Jaccard
-    * ≥ (1/bands)^(bands/k) is found with high probability. */
-  def minHashCandidates(
-      df: DataFrame, idCol: String, textCol: String,
-      w: Int = 3, k: Int = 64, bands: Int = 16): DataFrame =
-    minHashCandidatesFromSigs(minHashSignatures(df, idCol, textCol, w, k), k, bands)
+  /** Slim banded rows (id, band, band_hash) of a signature frame: each
+    * doc's LSH bucket memberships under [[minHashBands]]. The at-rest
+    * form is [[nearDupIndex]]; the signature array never rides a band
+    * row. */
+  private[llm] def bandedSignatures(sigs: DataFrame, k: Int, bands: Int): DataFrame =
+    sigs.select(col("id"), posexplode(minHashBands(k, bands)).as(Seq("band", "band_hash")))
 
-  /** Banded signature rows (id, sig, band, band_hash): each doc's LSH
-    * bucket memberships — bands bands of k/bands contiguous signature
-    * rows, each hashed to one 64-bit bucket key.
-    * [[minHashCandidatesFromSigs]] self-joins it in memory (sig rides
-    * along for est_jaccard); the AT-REST form a rolling ingestion
-    * pipeline maintains is the sig-free projection [[nearDupIndex]],
-    * which [[incrementalNearDup]] probes with a new batch. */
-  private[llm] def bandedSignatures(sigs: DataFrame, k: Int, bands: Int): DataFrame = {
-    require(k % bands == 0, s"k=$k not divisible by bands=$bands")
-    val r = k / bands
-    sigs.select(
-      col("id"), col("sig"),
-      posexplode(transform(
-        sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(b, concat_ws(",", slice(col("sig"), b * lit(r) + 1, lit(r))))))
-        .as(Seq("band", "band_hash")))
-  }
-
-  /** Within-bucket pair blowup guard (VERDICT r10 #4): a degenerate
-    * (band, band_hash) bucket of M members — M near-identical docs that
-    * survived upstream exact dedup, e.g. templated boilerplate — makes
-    * the band self-join emit M²/2 candidates inside ONE bucket. Buckets
-    * larger than this are "star-capped": instead of all pairs, each
-    * member pairs with the bucket's min-id representative (M−1 pairs).
-    * The dup CLUSTER stays connected (downstream union-find /
-    * [[dupClusters]] recovers the same component through the rep) and
-    * every emitted pair still passes exact verification; only
-    * pair-level completeness WITHIN the degenerate bucket is traded —
-    * the d2 `maxDf` trade, at the band level. Normal corpora (bucket
-    * sizes ≪ cap) produce byte-identical output. */
-  val DefaultMaxBucket = 1024L
-
-  /** Candidate PAIR SET only — the banded self-join without the
-    * signature attach. d18's band sweep consumes just the pairs, so
-    * the two est_jaccard attach joins would be pure waste ×4 layouts;
-    * [[minHashCandidatesFromSigs]] wraps this with the attach. The
-    * censused band frame feeds three pair branches — persist +
-    * finally-unpersist so it computes once and releases
-    * deterministically; the pair result localCheckpoints (eager,
-    * pair-set-sized) so it stays valid after the unpersist. */
+  /** MinHash candidate PAIR SET of a full-corpus run: the banded rows
+    * through [[bucketPairs]] (eager — the pair set is materialized).
+    * d18's band sweep consumes just the pairs; [[minHashCandidatesFromSigs]]
+    * wraps this with the signature attach. */
   private[graft] def minHashCandidatePairs(
       sigs: DataFrame, k: Int, bands: Int,
-      maxBucket: Long = DefaultMaxBucket): DataFrame = {
-    val banded = bandedSignatures(sigs, k, bands).select("id", "band", "band_hash")
-    // bucket census via ONE window pass (see candidateCensus): same
-    // values as the old groupBy + join-back, one exchange instead of two
-    val byBucket = Window.partitionBy(col("band"), col("band_hash"))
-    val sized = banded
-      .withColumn("m", count(lit(1)).over(byBucket))
-      .withColumn("rep", min(col("id")).over(byBucket))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val small = sized.where(col("m") <= maxBucket)
-      val big = sized.where(col("m") > maxBucket)
-      val allPairs = small.as("a")
-        .join(small.as("b"),
-          col("a.band") === col("b.band") && col("a.band_hash") === col("b.band_hash") &&
-            col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      // star pairs: rep < id by construction (rep is the bucket min)
-      val starPairs = big.where(col("id") =!= col("rep"))
-        .select(col("rep").as("id_a"), col("id").as("id_b"))
-      allPairs.union(starPairs).dropDuplicates("id_a", "id_b")
-        .localCheckpoint(true) // eager: pair-set-sized, valid after unpersist
-    } finally sized.unpersist(blocking = false)
-  }
+      maxBucket: Long = DefaultMaxBucket): DataFrame =
+    bucketPairs(allNew(bandedSignatures(sigs, k, bands)), maxBucket, eager = true)
 
+  /** MinHash LSH candidate pairs with the signature-estimated Jaccard
+    * (fraction of equal minhashes): signatures split into `bands` bands
+    * of k/bands rows; docs sharing any band hash become candidates. Any
+    * pair with true Jaccard ≥ (1/bands)^(bands/k) is found with high
+    * probability. */
   private[graft] def minHashCandidatesFromSigs(
       sigs: DataFrame, k: Int, bands: Int,
-      maxBucket: Long = DefaultMaxBucket): DataFrame = {
-    // Shuffle hygiene (mirrors cosinePairsLsh and the incremental-probe
-    // fix): the band self-join moves SLIM (id, band, band_hash) rows —
-    // the k-long signature arrays attach to the (far smaller) surviving
-    // DEDUPED pair set afterwards, instead of riding every banded row
-    // ×bands through the exchange. The signature frame feeds the banding
-    // and both attach sides (the 64-min signature aggregate is the
-    // expensive stage; re-executing it per consumer was most of d3's
-    // bench time) — persist + finally-unpersist (NOT localCheckpoint,
-    // whose blocks only free on driver GC): the pair set is eagerly
-    // materialized inside [[minHashCandidatePairs]], so every consumer
-    // of the cached frame runs inside the try and the blocks release
-    // deterministically.
-    val sigsM = sigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      maxBucket: Long = DefaultMaxBucket): DataFrame =
+    // the band self-join moves SLIM (id, band, band_hash) rows — the
+    // k-long signature arrays attach to the (far smaller) deduped pair
+    // set afterwards. The signature frame feeds the banding and both
+    // attach sides (the 64-min signature aggregate is the expensive
+    // stage; re-executing it per consumer was most of d3's bench time).
+    cached(sigs) { sigsM =>
       minHashCandidatePairs(sigsM, k, bands, maxBucket)
         .join(sigsM.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
         .join(sigsM.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
@@ -358,45 +424,24 @@ object Dedup {
             .cast("double") / k)
         .select("id_a", "id_b", "est_jaccard")
         .localCheckpoint(true)
-    } finally sigsM.unpersist(blocking = false)
-  }
+    }
 
   /** Full MinHash near-dup pipeline: LSH candidates verified with exact
-    * shingle-set Jaccard (intersection join restricted to candidates). */
+    * shingle-set Jaccard. The shingles are persisted once and SHARED
+    * between the signature aggregation and the verify. */
   def minHashNearDup(
       df: DataFrame, idCol: String, textCol: String,
-      w: Int = 3, k: Int = 64, bands: Int = 16, minJaccard: Double = 0.5): DataFrame = {
-    // same cache discipline as jaccardPairs: shingles persisted — and
-    // SHARED between the signature aggregation and the verify join, so
-    // the explode runs once for the whole pipeline — then released
-    // deterministically once the (small) verified-pair result is
-    // materialized
-    val sh = shingles(df, idCol, textCol, w)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val cands = minHashCandidatesFromSigs(minHashSignaturesFrom(sh, k), k, bands)
-      val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
-      val inter = sh.as("sa")
-        .join(cands.select("id_a", "id_b"), col("sa.id") === col("id_a"))
-        .join(sh.as("sb"), col("sb.id") === col("id_b") && col("sa.shingle") === col("sb.shingle"))
-        .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_inter"))
-      cands.join(inter, Seq("id_a", "id_b"), "left").na.fill(0L, Seq("n_inter"))
-        .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
-        .withColumn("jaccard",
-          col("n_inter").cast("double") / (col("n_a") + col("n_b") - col("n_inter")))
-        .where(col("jaccard") >= minJaccard)
-        .select("id_a", "id_b", "est_jaccard", "jaccard")
-        .localCheckpoint(true)
-    } finally sh.unpersist(blocking = false)
-  }
+      w: Int = 3, k: Int = 64, bands: Int = 16, minJaccard: Double = 0.5): DataFrame =
+    cached(shingles(df, idCol, textCol, w)) { sh =>
+      verifyJaccard(minHashCandidatesFromSigs(minHashSignaturesFrom(sh, k), k, bands),
+        sh, minJaccard)
+    }
 
   /** The persistable near-dup index: SLIM banded rows (id, band,
-    * band_hash) — three longs per (doc, band), NOT the sig-carrying
-    * frame the in-memory self-join uses. The signature array (k longs)
-    * would otherwise ride every index row ×bands at rest and through
-    * every probe-join exchange; the incremental path never needs it
-    * (candidates are verified with exact shingle Jaccard, not
+    * band_hash) — three longs per (doc, band). The signature array (k
+    * longs) would otherwise ride every index row ×bands at rest and
+    * through every probe-join exchange; the incremental path never needs
+    * it (candidates are verified with exact shingle Jaccard, not
     * est_jaccard). Stored bucketed on (band, band_hash) this is what a
     * rolling ingestion pipeline keeps at rest; [[incrementalNearDup]]
     * probes it per batch, and appending the batch's own banded rows
@@ -404,104 +449,17 @@ object Dedup {
   def nearDupIndex(df: DataFrame, idCol: String, textCol: String,
       w: Int = 3, k: Int = 64, bands: Int = 16): DataFrame =
     bandedSignatures(minHashSignatures(df, idCol, textCol, w, k), k, bands)
-      .select("id", "band", "band_hash")
 
-  /** Incremental MinHash-LSH near-dup: probe a persisted [[nearDupIndex]]
-    * with a new batch instead of re-running LSH over the whole corpus.
-    * Candidates = (index ⋈ batch on (band, band_hash)) ∪ (batch ⋈ batch) —
-    * equi joins both, never all-pairs — then verified with exact
-    * shingle-set Jaccard like [[minHashNearDup]]. Returns exactly the
-    * pairs touching the batch that a full-corpus run over corpus∪batch
-    * would return (signatures are per-doc, so banding is
-    * batch-invariant); old-old pairs were already emitted when THEIR
-    * batch arrived.
-    *
-    * `corpus` supplies text only for verification and only candidate ids
-    * are shingled (semi-join pushdown): per batch, work is
-    * O(batch + matched index rows), not O(corpus) — at 100 TB the index
-    * probe is a bucket-pruned join against the at-rest (band, band_hash)
-    * layout and the corpus re-read touches only candidate docs. Ids must
-    * be unique across corpus∪batch. */
-  /** Candidate-pair generation of [[incrementalNearDup]], exposed for
-    * pipelines that filter or route candidates before verification.
-    * `index` and `batchIndex` are both slim [[nearDupIndex]] frames
-    * (same k and bands); output is id pairs only — the joins exchange
-    * three longs per row, and a caller wanting signature-estimated
-    * Jaccard joins a persisted (id, sig) table onto the (small) pair
-    * set afterwards instead of shipping sigs through the band join.
-    * Both joins are (band, band_hash) EQUI joins — never all-pairs —
-    * which PlanSpec locks. */
+  /** Candidate pairs of an incremental probe: `index` and `batchIndex`
+    * are slim (id, band, band_hash) frames of one banding; the pairs
+    * touch the batch (old-old pairs were emitted when THEIR batch
+    * arrived) and come eagerly materialized from [[bucketPairs]]. A
+    * caller wanting signature-estimated Jaccard joins a persisted
+    * (id, sig) table onto the (small) pair set afterwards instead of
+    * shipping sigs through the band join. */
   def incrementalCandidates(index: DataFrame, batchIndex: DataFrame,
-      maxBucket: Long = DefaultMaxBucket): DataFrame = {
-    // the censused probe read-set feeds three pair branches — compute it
-    // ONCE so the at-rest index semi-join doesn't re-execute per branch
-    // (measured 6× the probe-join work without this; the frame is
-    // O(batch + matched rows) by construction, the incremental path's
-    // defining bound). persist + finally-unpersist, with the (small)
-    // pair result eagerly materialized inside the try — a rolling ingest
-    // loop calls this per batch, so GC-freed localCheckpoint blocks
-    // would accumulate.
-    // the window census makes `members` single-consumer, so only the
-    // censused frame needs a cache (it still feeds three pair branches)
-    val sized = candidateCensus(candidateMembers(index, batchIndex))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try
-      candidatePairsFromCensus(sized, maxBucket)
-        .localCheckpoint(true) // eager: pair-set-sized, valid after unpersist
-    finally sized.unpersist(blocking = false)
-  }
-
-  /** The lazy plan of [[incrementalCandidates]] with no caching or eager
-    * materialization — what PlanSpec locks (the public entry returns an
-    * already-executed checkpoint whose plan is an opaque RDD scan). */
-  private[graft] def incrementalCandidatesLazy(index: DataFrame, batchIndex: DataFrame,
       maxBucket: Long = DefaultMaxBucket): DataFrame =
-    candidatePairsFromCensus(candidateCensus(candidateMembers(index, batchIndex)), maxBucket)
-
-  /** Index rows in buckets the batch touches — exactly the probe join's
-    * read set (bucket-pruned at rest), so the census adds no O(corpus)
-    * pass; per-batch work stays O(batch + matched rows) — unioned with
-    * the batch's own rows, each side flagged. */
-  private def candidateMembers(index: DataFrame, batchIndex: DataFrame): DataFrame = {
-    val key = Seq("band", "band_hash")
-    index.join(batchIndex.select(key.map(col): _*).distinct(), key, "left_semi")
-      .select(col("id"), col("band"), col("band_hash"), lit(false).as("is_batch"))
-      .union(batchIndex
-        .select(col("id"), col("band"), col("band_hash"), lit(true).as("is_batch")))
-  }
-
-  /** Bucket census onto the members: adds (m, rep) per row. ONE window
-    * pass over the bucket key instead of groupBy + join-back — same
-    * values, same (band, band_hash)-keyed shuffle, one exchange instead
-    * of two and a single consumer of `members` (guide §2.4; the family
-    * is job-count-bound at bench scale, 5k docs / 145 pairs). A
-    * degenerate bucket lands in one window task exactly as it landed in
-    * one join task before — the star cap downstream is the guard. */
-  private def candidateCensus(members: DataFrame): DataFrame = {
-    val byBucket = Window.partitionBy(col("band"), col("band_hash"))
-    members
-      .withColumn("m", count(lit(1)).over(byBucket))
-      .withColumn("rep", min(col("id")).over(byBucket))
-  }
-
-  private def candidatePairsFromCensus(sized: DataFrame, maxBucket: Long): DataFrame = {
-    val small = sized.where(col("m") <= maxBucket)
-    // pairs must touch the batch (old-old pairs were emitted when THEIR
-    // batch arrived); id ordering dedups the two join directions
-    val smallPairs = small.as("a")
-      .join(small.as("b"),
-        col("a.band") === col("b.band") && col("a.band_hash") === col("b.band_hash") &&
-          col("a.id") < col("b.id") && (col("a.is_batch") || col("b.is_batch")))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-    // oversize buckets (the [[DefaultMaxBucket]] guard): star around the
-    // bucket's min id — O(M) pairs instead of M²/2. Stars INCLUDE the
-    // bucket's old index members so the component stays connected through
-    // the rep even when the bucket crossed the cap mid-history (re-emitted
-    // (rep, old) links are idempotent for downstream clustering).
-    val starPairs = sized.where(col("m") > maxBucket && col("id") =!= col("rep"))
-      .select(col("rep").as("id_a"), col("id").as("id_b"))
-    smallPairs.union(starPairs).dropDuplicates("id_a", "id_b")
-  }
+    bucketPairs(probeMembers(index, batchIndex), maxBucket, eager = true)
 
   /** Bucket-size census of a [[nearDupIndex]]: buckets, max/avg size, and
     * how many exceed the [[DefaultMaxBucket]] star-cap — the loud metric
@@ -516,19 +474,27 @@ object Dedup {
         sum(when(col("m") > maxBucket, 1L).otherwise(0L)).as("n_oversize"),
         sum(when(col("m") > maxBucket, col("m")).otherwise(0L)).as("rows_in_oversize"))
 
+  /** Incremental MinHash-LSH near-dup: probe a persisted [[nearDupIndex]]
+    * with a new batch instead of re-running LSH over the whole corpus.
+    * Candidates = (index ⋈ batch on (band, band_hash)) ∪ (batch ⋈ batch)
+    * through the same [[bucketPairs]] kernel a full run uses, verified
+    * with the same exact Jaccard as [[minHashNearDup]]. Returns exactly
+    * the pairs touching the batch that a full-corpus run over
+    * corpus∪batch would return — cap included (signatures are per-doc,
+    * so banding is batch-invariant, and a full run is the probe of an
+    * empty index); old-old pairs were already emitted when THEIR batch
+    * arrived.
+    *
+    * `corpus` supplies text only for verification and only candidate ids
+    * are shingled (semi-join pushdown): per batch, work is
+    * O(batch + matched index rows), not O(corpus) — at 100 TB the index
+    * probe is a bucket-pruned join against the at-rest (band, band_hash)
+    * layout and the corpus re-read touches only candidate docs. Ids must
+    * be unique across corpus∪batch. */
   def incrementalNearDup(corpus: DataFrame, index: DataFrame, batch: DataFrame,
       idCol: String, textCol: String, w: Int = 3, k: Int = 64, bands: Int = 16,
-      minJaccard: Double = 0.5): DataFrame = {
-    val shB = shingles(batch, idCol, textCol, w)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val bandedB = bandedSignatures(minHashSignaturesFrom(shB, k), k, bands)
-        .select("id", "band", "band_hash")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try incrementalNearDupFrom(corpus, index, shB, bandedB, idCol, textCol, w, minJaccard)
-      finally bandedB.unpersist(blocking = false)
-    } finally shB.unpersist(blocking = false)
-  }
+      minJaccard: Double = 0.5): DataFrame =
+    nearDupProbe(corpus, index, batch, idCol, textCol, w, k, bands, minJaccard)((p, _) => p)
 
   /** One rolling-ingest step: the verified pairs AND the batch's banded
     * index rows, off a SINGLE batch signature pass — the ingest loop
@@ -538,64 +504,29 @@ object Dedup {
     * the internal caches release. */
   def incrementalNearDupRoll(corpus: DataFrame, index: DataFrame, batch: DataFrame,
       idCol: String, textCol: String, w: Int = 3, k: Int = 64, bands: Int = 16,
-      minJaccard: Double = 0.5): (DataFrame, DataFrame) = {
-    val shB = shingles(batch, idCol, textCol, w)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val bandedB = bandedSignatures(minHashSignaturesFrom(shB, k), k, bands)
-        .select("id", "band", "band_hash")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val pairs = incrementalNearDupFrom(
-          corpus, index, shB, bandedB, idCol, textCol, w, minJaccard)
-        (pairs, bandedB.localCheckpoint(true))
-      } finally bandedB.unpersist(blocking = false)
-    } finally shB.unpersist(blocking = false)
-  }
+      minJaccard: Double = 0.5): (DataFrame, DataFrame) =
+    nearDupProbe(corpus, index, batch, idCol, textCol, w, k, bands, minJaccard)(
+      (p, bandedB) => (p, bandedB.localCheckpoint(true)))
 
-  /** [[incrementalNearDup]] core over PRECOMPUTED batch shingles and
-    * banded rows — lets a caller that also rolls the index forward (the
-    * streaming ingest loop) compute the batch's signatures exactly once
-    * for both the probe and the index append. Both inputs should be
-    * persisted by the caller. */
-  private[graft] def incrementalNearDupFrom(
-      corpus: DataFrame, index: DataFrame, shB: DataFrame, bandedB: DataFrame,
-      idCol: String, textCol: String, w: Int,
-      minJaccard: Double): DataFrame = {
-    // already eagerly materialized by incrementalCandidates — its scans
-    // below read the checkpoint blocks, no extra persist layer needed
-    val cands = incrementalCandidates(index, bandedB)
-    locally {
-      // exact-Jaccard verify over ONLY the docs that appear in a
-      // candidate pair: semi-join the corpus down before shingling
-      val candIds = cands.select(col("id_a").as(idCol))
-        .union(cands.select(col("id_b").as(idCol))).distinct()
-      // the candidate+batch shingle frame feeds BOTH sides of the
-      // intersection join and the size census — persist it so the corpus
-      // semi-join + re-shingle executes once, not three times (it is the
-      // only stage that touches corpus text)
-      val shAll = shingles(
-          corpus.join(candIds, Seq(idCol), "left_semi"), idCol, textCol, w)
-        .union(shB)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val sizes = shAll.groupBy("id").agg(count(lit(1)).as("n_sh"))
-        val inter = shAll.as("sa")
-          .join(cands.select("id_a", "id_b"), col("sa.id") === col("id_a"))
-          .join(shAll.as("sb"),
-            col("sb.id") === col("id_b") && col("sa.shingle") === col("sb.shingle"))
-          .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_inter"))
-        cands.join(inter, Seq("id_a", "id_b"), "left").na.fill(0L, Seq("n_inter"))
-          .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
-          .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
-          .withColumn("jaccard",
-            col("n_inter").cast("double") / (col("n_a") + col("n_b") - col("n_inter")))
-          .where(col("jaccard") >= minJaccard)
-          .select("id_a", "id_b", "jaccard")
-          .localCheckpoint(true)
-      } finally shAll.unpersist(blocking = false)
+  /** The body of [[incrementalNearDup]] and [[incrementalNearDupRoll]]:
+    * the batch's shingles and banded rows are persisted once, and
+    * `out(pairs, bandedB)` runs while both are still cached. */
+  private def nearDupProbe[T](corpus: DataFrame, index: DataFrame, batch: DataFrame,
+      idCol: String, textCol: String, w: Int, k: Int, bands: Int, minJaccard: Double)(
+      out: (DataFrame, DataFrame) => T): T =
+    cached(shingles(batch, idCol, textCol, w)) { shB =>
+      cached(bandedSignatures(minHashSignaturesFrom(shB, k), k, bands)) { bandedB =>
+        val cands = incrementalCandidates(index, bandedB)
+        // verify over ONLY the docs in a candidate pair: semi-join the
+        // corpus down before shingling (the only stage that touches
+        // corpus text, so its shingles are persisted inside the verify)
+        val candIds = cands.select(col("id_a").as(idCol))
+          .union(cands.select(col("id_b").as(idCol))).distinct()
+        val shAll = shingles(corpus.join(candIds, Seq(idCol), "left_semi"), idCol, textCol, w)
+          .union(shB)
+        out(cached(shAll)(verifyJaccard(cands, _, minJaccard)), bandedB)
+      }
     }
-  }
 
   // ---- duplicate-cluster resolution ---------------------------------------
 
@@ -790,29 +721,18 @@ object Dedup {
     perDoc.select(col("id"), hash.as("simhash"))
   }
 
-  /** SimHash near-dup pairs: block on four 16-bit bands (any equal band →
-    * candidate; catches all pairs with Hamming ≤ 3 by pigeonhole, most
-    * with ≤ maxHamming), verify with bit_count(xor). */
+  /** SimHash near-dup pairs: block on four 16-bit bands ([[signBands]];
+    * any equal band → candidate, so below the bucket cap every pair with
+    * Hamming ≤ 3 is caught by pigeonhole and most with ≤ maxHamming)
+    * through [[bucketPairs]], verify with bit_count(xor) on the hashes
+    * the kernel carries. */
   def simHashPairs(
-      df: DataFrame, idCol: String, textCol: String, maxHamming: Int = 3): DataFrame = {
-    val sh = simHash64(df, idCol, textCol)
-    val bandArr = array((0 until 4).map { b =>
-      struct(lit(b).as("band"),
-        shiftrightunsigned(col("simhash"), b * 16).bitwiseAND(lit(0xFFFFL)).as("key"))
-    }: _*)
-    val banded = sh.select(col("id"), col("simhash"), explode(bandArr).as("bk"))
-      .select(col("id"), col("simhash"), col("bk.band").as("band"), col("bk.key").as("key"))
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        col("a.simhash").as("sh_a"), col("b.simhash").as("sh_b"))
-      .dropDuplicates("id_a", "id_b")
-      .withColumn("hamming", expr("bit_count(sh_a ^ sh_b)"))
+      df: DataFrame, idCol: String, textCol: String, maxHamming: Int = 3): DataFrame =
+    bucketPairs(allNew(simHash64(df, idCol, textCol).withColumnRenamed("simhash", "sig")
+        .select(col("id"), col("sig"), inline(signBands(64, 4)))))
+      .withColumn("hamming", expr("bit_count(sig_a ^ sig_b)"))
       .where(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
-  }
 
   // ---- embedding cosine near-dup ------------------------------------------
 
@@ -826,9 +746,6 @@ object Dedup {
   def cosine(a: Column, b: Column, dim: Int = 0): Column =
     dot(a, b, dim) / (sqrt(dot(a, a, dim)) * sqrt(dot(b, b, dim)))
 
-  /** Brute-force cosine near-dup pairs — the correctness baseline
-    * (O(n²) cross join; fixture/oracle scale only — use
-    * [[cosinePairsLsh]] at scale). */
   /** Primitive sequential dot — the same left-fold order as the SQL
     * expression/lambda versions, so results are bit-identical. */
   private[llm] def dotArr(a: Array[Double], b: Array[Double]): Double = {
@@ -838,6 +755,9 @@ object Dedup {
     s
   }
 
+  /** Brute-force cosine near-dup pairs — the correctness baseline
+    * (O(n²) pairs; fixture/oracle scale only — use [[cosinePairsLsh]] at
+    * scale). */
   def cosinePairsBrute(
       df: DataFrame, idCol: String, vecCol: String, minCos: Double,
       dim: Int = 0, maxCorpus: Int = 200000): DataFrame = {
@@ -899,28 +819,24 @@ object Dedup {
       }.toDF(idName, vecName, "sig")
   }
 
-  /** Random-hyperplane LSH cosine near-dup: sign-bit signature over
-    * `nPlanes` seeded hyperplanes, banded like SimHash, exact cosine on
-    * candidates. The scale path: bucket join + within-bucket verify.
-    *
-    * Plumbing matters as much as the algorithm here: the band join and
-    * the candidate dedup move ONLY (id, band, key) — the dim-wide vectors
-    * never ride a shuffle. They re-attach to the surviving distinct pairs
-    * by id-join just before the cosine verify (measured 42 s → ~2 s at
-    * 2k×64-dim; at real scale the difference is the whole job). */
   /** Sign-band rows (id, band, band_hash) off a signature frame — the
-    * banding half of [[cosinePairsLsh]], shared with the incremental
-    * index path (same slim three-longs-per-row shape as the MinHash
-    * [[nearDupIndex]]). */
-  private def signBandRows(sigs: DataFrame, nPlanes: Int, nBands: Int): DataFrame = {
-    val r = nPlanes / nBands
-    val bandArr = array((0 until nBands).map { b =>
-      struct(lit(b).as("band"),
-        shiftrightunsigned(col("sig"), b * r).bitwiseAND(lit((1L << r) - 1)).as("key"))
-    }: _*)
-    sigs.select(col("id"), explode(bandArr).as("bk"))
-      .select(col("id"), col("bk.band").as("band"), col("bk.key").as("band_hash"))
-  }
+    * slim three-longs-per-row shape of the MinHash [[nearDupIndex]]. */
+  private def signBandRows(sigs: DataFrame, nPlanes: Int, nBands: Int): DataFrame =
+    sigs.select(col("id"), inline(signBands(nPlanes, nBands)))
+
+  /** THE exact cosine verify: candidate pairs (id_a, id_b) with their
+    * vectors attached by id from `vecs` (id, v), kept at cosine ≥
+    * `minCos`. Vectors never ride the band join or the pair dedup; they
+    * re-attach to the surviving distinct pairs here (measured 42 s →
+    * ~2 s at 2k×64-dim against shipping them through the band join).
+    * Lazy. */
+  private def verifyCosine(cands: DataFrame, vecs: DataFrame, minCos: Double): DataFrame =
+    cands
+      .join(vecs.select(col("id").as("id_a"), col("v").as("va")), Seq("id_a"))
+      .join(vecs.select(col("id").as("id_b"), col("v").as("vb")), Seq("id_b"))
+      .withColumn("cos", cosine(col("va"), col("vb")))
+      .where(col("cos") >= minCos)
+      .select("id_a", "id_b", "cos")
 
   /** The persistable EMBEDDING near-dup index: slim sign-band rows over
     * seeded random-hyperplane signatures — the vector analog of
@@ -937,46 +853,34 @@ object Dedup {
       nPlanes, nBands)
   }
 
+  /** Random-hyperplane LSH cosine near-dup: sign-bit signature over
+    * `nPlanes` seeded hyperplanes, banded like SimHash, candidates from
+    * [[bucketPairs]] (every row new), exact cosine on candidates. The
+    * scale path: bucket join + within-bucket verify, only (id, band,
+    * band_hash) through the band shuffle. */
   def cosinePairsLsh(
       df: DataFrame, idCol: String, vecCol: String, minCos: Double,
       dim: Int, nPlanes: Int = 16, nBands: Int = 4, seed: Long = 42L): DataFrame = {
     require(nPlanes % nBands == 0)
-    val planes = hyperplanes(nPlanes, dim, seed)
-    val sigs = withSignature(df, idCol, vecCol, planes)
-    val banded = signBandRows(sigs, nPlanes, nBands)
-    val candidates = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.band_hash") === col("b.band_hash") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    val vecs = sigs.select(col("id"), col("v"))
-    candidates
-      .join(vecs.select(col("id").as("id_a"), col("v").as("va")), Seq("id_a"))
-      .join(vecs.select(col("id").as("id_b"), col("v").as("vb")), Seq("id_b"))
-      .withColumn("cos", cosine(col("va"), col("vb"), dim))
-      .where(col("cos") >= minCos)
-      .select("id_a", "id_b", "cos")
+    val sigs = withSignature(df, idCol, vecCol, hyperplanes(nPlanes, dim, seed))
+    verifyCosine(bucketPairs(allNew(signBandRows(sigs, nPlanes, nBands))),
+      sigs.select(col("id"), col("v")), minCos)
   }
 
   /** Incremental EMBEDDING near-dup: probe a persisted [[cosineIndex]]
     * with a new batch — (band, band_hash) equi joins via
     * [[incrementalCandidates]], then exact cosine over ONLY candidate
     * vectors (corpus semi-joined down before the vector join). Because
-    * the hyperplanes are seeded and signatures are per-row, the result
-    * is EXACTLY the batch-touching subset of the full-corpus
-    * [[cosinePairsLsh]] run — same recall, same pairs — without
-    * re-signaturing the corpus. Ids must be unique across corpus∪batch. */
+    * the hyperplanes are seeded, signatures are per-row and both paths
+    * share one kernel and one cap, the result is EXACTLY the
+    * batch-touching subset of the full-corpus [[cosinePairsLsh]] run —
+    * same recall, same pairs — without re-signaturing the corpus. Ids
+    * must be unique across corpus∪batch. */
   def incrementalCosineNearDup(corpus: DataFrame, index: DataFrame, batch: DataFrame,
       idCol: String, vecCol: String, minCos: Double, dim: Int,
-      nPlanes: Int = 16, nBands: Int = 4, seed: Long = 42L): DataFrame = {
-    require(nPlanes % nBands == 0)
-    val sigsB = withSignature(batch, idCol, vecCol, hyperplanes(nPlanes, dim, seed))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try incrementalCosineNearDupFrom(
-      corpus, index, sigsB, signBandRows(sigsB, nPlanes, nBands), idCol, vecCol, minCos, dim)
-    finally sigsB.unpersist(blocking = false)
-  }
+      nPlanes: Int = 16, nBands: Int = 4, seed: Long = 42L): DataFrame =
+    cosineProbe(corpus, index, batch, idCol, vecCol, minCos, dim, nPlanes, nBands, seed)(
+      (p, _) => p)
 
   /** One rolling-ingest step for the EMBEDDING index: verified cosine
     * pairs AND the batch's sign-band index rows, off a SINGLE batch
@@ -986,48 +890,30 @@ object Dedup {
     * first). Both frames eagerly materialized. */
   def incrementalCosineNearDupRoll(corpus: DataFrame, index: DataFrame, batch: DataFrame,
       idCol: String, vecCol: String, minCos: Double, dim: Int,
-      nPlanes: Int = 16, nBands: Int = 4, seed: Long = 42L): (DataFrame, DataFrame) = {
-    require(nPlanes % nBands == 0)
-    val sigsB = withSignature(batch, idCol, vecCol, hyperplanes(nPlanes, dim, seed))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val bandedB = signBandRows(sigsB, nPlanes, nBands)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val pairs = incrementalCosineNearDupFrom(
-          corpus, index, sigsB, bandedB, idCol, vecCol, minCos, dim)
-        (pairs, bandedB.localCheckpoint(true))
-      } finally bandedB.unpersist(blocking = false)
-    } finally sigsB.unpersist(blocking = false)
-  }
+      nPlanes: Int = 16, nBands: Int = 4, seed: Long = 42L): (DataFrame, DataFrame) =
+    cosineProbe(corpus, index, batch, idCol, vecCol, minCos, dim, nPlanes, nBands, seed)(
+      (p, bandedB) => (p, bandedB.localCheckpoint(true)))
 
-  /** [[incrementalCosineNearDup]] core over PRECOMPUTED batch signatures
-    * and band rows (both persisted by the caller) — the vector analog of
-    * [[incrementalNearDupFrom]]. */
-  private[graft] def incrementalCosineNearDupFrom(
-      corpus: DataFrame, index: DataFrame, sigsB: DataFrame, bandedB: DataFrame,
-      idCol: String, vecCol: String, minCos: Double, dim: Int): DataFrame = {
-    // already eagerly materialized by incrementalCandidates (see there)
-    val cands = incrementalCandidates(index, bandedB)
-    locally {
-      val candIds = cands.select(col("id_a").as("id"))
-        .union(cands.select(col("id_b").as("id"))).distinct()
-      val corpusVecs = corpus
-        .select(col(idCol).cast("long").as("id"), col(vecCol).cast("array<double>").as("v"))
-        .join(candIds, Seq("id"), "left_semi")
-      // candidate vectors feed both sides of the pair join — persist so
-      // the corpus semi-join runs once, not per side
-      val vecs = corpusVecs.union(sigsB.select(col("id"), col("v")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        cands
-          .join(vecs.select(col("id").as("id_a"), col("v").as("va")), Seq("id_a"))
-          .join(vecs.select(col("id").as("id_b"), col("v").as("vb")), Seq("id_b"))
-          .withColumn("cos", cosine(col("va"), col("vb"), dim))
-          .where(col("cos") >= minCos)
-          .select("id_a", "id_b", "cos")
-          .localCheckpoint(true)
-      } finally vecs.unpersist(blocking = false)
+  /** The body of [[incrementalCosineNearDup]] and
+    * [[incrementalCosineNearDupRoll]] — the vector analog of
+    * [[nearDupProbe]]. */
+  private def cosineProbe[T](corpus: DataFrame, index: DataFrame, batch: DataFrame,
+      idCol: String, vecCol: String, minCos: Double, dim: Int,
+      nPlanes: Int, nBands: Int, seed: Long)(out: (DataFrame, DataFrame) => T): T = {
+    require(nPlanes % nBands == 0)
+    cached(withSignature(batch, idCol, vecCol, hyperplanes(nPlanes, dim, seed))) { sigsB =>
+      cached(signBandRows(sigsB, nPlanes, nBands)) { bandedB =>
+        val cands = incrementalCandidates(index, bandedB)
+        val candIds = cands.select(col("id_a").as("id"))
+          .union(cands.select(col("id_b").as("id"))).distinct()
+        // candidate vectors feed both sides of the pair join — persisted
+        // so the corpus semi-join runs once, not per side
+        val vecs = corpus
+          .select(col(idCol).cast("long").as("id"), col(vecCol).cast("array<double>").as("v"))
+          .join(candIds, Seq("id"), "left_semi")
+          .union(sigsB.select(col("id"), col("v")))
+        out(cached(vecs)(verifyCosine(cands, _, minCos).localCheckpoint(true)), bandedB)
+      }
     }
   }
 

@@ -361,15 +361,9 @@ object Similarity {
     require(k >= 1, s"k must be >= 1, got $k")
     require(nPlanes % nBands == 0)
     val planes = Dedup.hyperplanes(nPlanes, dim, seed)
-    val r = nPlanes / nBands
-    val bandArr = array((0 until nBands).map { b =>
-      struct(lit(b).as("band"),
-        shiftrightunsigned(col("sig"), b * r).bitwiseAND(lit((1L << r) - 1)).as("key"))
-    }: _*)
     def banded(df: DataFrame, id: String, vec: String): DataFrame =
       Dedup.withSignature(df, idCol, vecCol, planes, id, vec)
-        .select(col(id), col(vec), explode(bandArr).as("bk"))
-        .select(col(id), col(vec), col("bk.band").as("band"), col("bk.key").as("key"))
+        .select(col(id), col(vec), inline(Dedup.signBands(nPlanes, nBands)))
     val cb = banded(corpus, "corpus_id", "cv")
     val qb = banded(queries, "query_id", "qv")
     // cosine BEFORE the pair dedup: the band-bucket join is map-side
@@ -377,7 +371,7 @@ object Similarity {
     // carries only (query_id, corpus_id, cos) scalars — never the
     // vectors (duplicate pairs from different bands score identically,
     // so deduping after is equivalent)
-    val cands = cb.join(broadcast(qb), Seq("band", "key"))
+    val cands = cb.join(broadcast(qb), Seq("band", "band_hash"))
       .where(col("query_id") =!= col("corpus_id"))
       .withColumn("cos", cosine(col("qv"), col("cv"), dim))
       .select(col("query_id").cast("long"), col("corpus_id").cast("long"), col("cos"))

@@ -423,8 +423,8 @@ object LlmQueries {
         // constituent 32-level sub-slices match, so the pair collides at
         // 32 too) — so the bucket self-join runs ONCE, at bands = 32,
         // and membership at 4/8/16 is a map-side comparison of the two
-        // docs' per-level band-hash arrays (the identical xxhash64
-        // family bandedSignatures buckets by). The old shape paid 4
+        // docs' per-level band-hash arrays (Dedup.minHashBands, the one
+        // MinHash banding the kernel buckets by). The old shape paid 4
         // independent band shuffles + 8 anti-join count jobs (72 jobs
         // censused); this one pays 1 shuffle + 2 aggregate jobs.
         // Semantics note: below the star-cap (fixture regime, and any
@@ -437,13 +437,8 @@ object LlmQueries {
         try {
           val finest = bandsSeq.max
           val coarser = bandsSeq.filter(_ != finest)
-          def bandHashes(b: Int) = {
-            val r = k / b
-            transform(sequence(lit(0), lit(b - 1)),
-              i => xxhash64(i, concat_ws(",", slice(col("sig"), i * lit(r) + 1, lit(r)))))
-          }
           val withBh = sigs.select(col("id"),
-            struct(coarser.map(b => bandHashes(b).as(s"bh$b")): _*).as("bh"))
+            struct(coarser.map(b => Dedup.minHashBands(k, b).as(s"bh$b")): _*).as("bh"))
           // any-band match per coarser level, from the attached hash arrays
           def anyBand(b: Int) =
             exists(zip_with(col(s"bh_a.bh$b"), col(s"bh_b.bh$b"), (x, y) => x === y),

@@ -20,7 +20,12 @@ import graft.llm.Dedup
   * then; same-batch pairs come from the batch's internal self-join), so
   * the union of per-batch emissions equals the FULL-corpus LSH pair set
   * regardless of batch count or arrival order — stream ≡ batch ≡ the
-  * exhaustive exact-Jaccard oracle (d3's total-recall argument).
+  * exhaustive exact-Jaccard oracle (d3's total-recall argument). The
+  * probe and the full run share [[Dedup.bucketPairs]], so this holds
+  * while every (band, band_hash) bucket stays within
+  * [[Dedup.DefaultMaxBucket]]; a bucket that grows past it mid-stream is
+  * star-capped on both sides, and the stream keeps the pairs it emitted
+  * while the bucket was small (a superset of the full run's).
   *
   * State lives in [[graft.io.Generations]] commits like
   * [[EventStream.runMergeOnce]]; at scale the index is a bucketed table
@@ -60,11 +65,11 @@ object IngestStream {
     *
     * Seeded hyperplanes make the banding batch-invariant, so the union
     * of per-batch emissions equals the full-corpus
-    * [[Dedup.cosinePairsLsh]] pair set regardless of chunking — the
-    * stream ≡ batch equality query st11 pins in-query (DuckDB cannot
-    * replay the seeded planes; the SQL oracle contributes the brute
-    * all-pairs truth). Same batchId-keyed idempotent state layout as the
-    * text loop. */
+    * [[Dedup.cosinePairsLsh]] pair set regardless of chunking (same cap
+    * rule as the text loop) — the stream ≡ batch equality query st11
+    * pins in-query (DuckDB cannot replay the seeded planes; the SQL
+    * oracle contributes the brute all-pairs truth). Same batchId-keyed
+    * idempotent state layout as the text loop. */
   def runEmbedIngestOnce(spark: SparkSession, embPath: String, nChunks: Int = 3,
       minCos: Double = 0.45, dim: Int = 64,
       nPlanes: Int = 16, nBands: Int = 8): DataFrame =

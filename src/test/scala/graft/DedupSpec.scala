@@ -47,7 +47,8 @@ class DedupSpec extends SparkSpec {
     // bands=16, r=4: a J>=0.8 pair is caught w.p. 1-(1-0.8^4)^16 ≈ 0.9998
     assert(truth.nonEmpty && truth.subsetOf(found))
     // est vs exact on the identical pair
-    val est = Dedup.minHashCandidates(docs, "doc_id", "text", w = 3, k = 64, bands = 16)
+    val est = Dedup.minHashCandidatesFromSigs(
+        Dedup.minHashSignatures(docs, "doc_id", "text", w = 3, k = 64), k = 64, bands = 16)
       .where(col("id_a") === 100L && col("id_b") === 101L)
       .collect()(0).getAs[Double]("est_jaccard")
     assert(est === 1.0)
@@ -418,6 +419,41 @@ class DedupSpec extends SparkSpec {
     inc.foreach { case (k, c) => assert(math.abs(c - fullTouchingBatch(k)) < 1e-12) }
     // old-old pairs are NOT re-emitted
     assert(inc.keySet.forall { case (a, b) => a % 2 == 0 || b % 2 == 0 })
+  }
+
+  test("an oversize sign-band bucket is capped alike by the full run and the empty-index probe") {
+    import spark.implicits._
+    // 1,100 positive multiples of one vector: every hyperplane gives them
+    // the same sign, so they share one bucket in every band, past
+    // DefaultMaxBucket, and every pair among them has cosine 1. 200
+    // seeded random vectors keep ordinary buckets in play.
+    val rnd = new scala.util.Random(7)
+    val base = Seq(0.9, -0.4, 0.3, 0.7)
+    val vecs = ((0 until 1100).map(i => (i.toLong, base.map(_ * (1.0 + i)))) ++
+        (0 until 200).map(i => (5000L + i, Seq.fill(4)(rnd.nextGaussian()))))
+      .toDF("vec_id", "embedding")
+    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")) -> r.getAs[Double]("cos")).toMap
+    val full = pairs(Dedup.cosinePairsLsh(vecs, "vec_id", "embedding", minCos = 0.9,
+      dim = 4, nPlanes = 16, nBands = 4))
+    // a full run is the probe of an empty index with the whole corpus as
+    // the batch (the corpus holds only already-indexed rows, so it is
+    // empty too)
+    val none = vecs.limit(0)
+    val emptyIndex = Dedup.cosineIndex(none, "vec_id", "embedding",
+      dim = 4, nPlanes = 16, nBands = 4)
+    val probe = pairs(Dedup.incrementalCosineNearDup(none, emptyIndex, vecs,
+      "vec_id", "embedding", minCos = 0.9, dim = 4, nPlanes = 16, nBands = 4))
+    val missing = full.keySet diff probe.keySet
+    val extra = probe.keySet diff full.keySet
+    assert(missing.size + extra.size === 0,
+      s"${missing.size} missing (e.g. ${missing.take(3)}), ${extra.size} extra (e.g. ${extra.take(3)})")
+    probe.foreach { case (k, c) => assert(math.abs(c - full(k)) < 1e-12) }
+    // the cap binds: the degenerate bucket yields its 1,099 star pairs
+    // through the min-id rep, not C(1100, 2) = 604,450
+    val degen = full.keySet.filter(_._2 < 1100)
+    assert(degen.size === 1099 && degen.forall(_._1 === 0L), s"got ${degen.size}")
+    assert(full.size > degen.size) // ordinary buckets still pair
   }
 
   test("containmentPairs flags a quoted subset that Jaccard misses") {

@@ -140,9 +140,10 @@ class PlanSpec extends SparkSpec {
     val batch = docs.where(pmod(col("doc_id"), lit(3)) === 0)
     val index = Dedup.nearDupIndex(corpus, "doc_id", "text", w = 5, k = 64, bands = 32)
     val batchIdx = Dedup.nearDupIndex(batch, "doc_id", "text", w = 5, k = 64, bands = 32)
-    // the lazy twin of incrementalCandidates: same plan, minus the eager
-    // checkpoint whose executed plan is an opaque RDD scan
-    val p = Dedup.incrementalCandidatesLazy(index, batchIdx)
+    // the lazy kernel over the probe members: incrementalCandidates'
+    // plan, minus the eager checkpoint whose executed plan is an opaque
+    // RDD scan
+    val p = Dedup.bucketPairs(Dedup.probeMembers(index, batchIdx))
       .queryExecution.executedPlan.toString
     // both the probe and the internal join must hash/sort-merge on the
     // band keys; a nested-loop or cartesian here is the quadratic

@@ -10,6 +10,15 @@ import scala.jdk.CollectionConverters._
   * never a timed one. */
 class SessionSpec extends SparkSpec {
 
+  /** (path, text) of every `src/main` source file. */
+  private lazy val mainSources = {
+    val files = Files.walk(Paths.get("src/main"))
+    val sources = try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    assert(sources.nonEmpty, "run from the repo root")
+    sources.map(p => p.toString.replace('\\', '/') -> Files.readString(p))
+  }
+
   test("Session.scala is the only file that builds a session") {
     val needle = "SparkSession" + ".builder" // split so this file does not match itself
     val roots = Seq("src/main", "src/test").map(Paths.get(_))
@@ -28,12 +37,7 @@ class SessionSpec extends SparkSpec {
     val offsetsWindow = "rowsBetween(Window.unboundedPreceding, " + "-1)"
     val pid = "spark_partition" + "_id()"
     val pidSources = Seq(pid, "monotonically_increasing" + "_id()", "getPartition" + "Id")
-    val sources = {
-      val files = Files.walk(Paths.get("src/main"))
-      try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally files.close()
-    }.map(p => p.toString.replace('\\', '/') -> Files.readString(p))
-    assert(sources.nonEmpty, "run from the repo root")
+    val sources = mainSources
     val copies = sources.collect {
       case (f, text) if !f.endsWith("core/Relational.scala") && text.contains(offsetsWindow) &&
           text.contains("broadcast(") && pidSources.exists(text.contains) => f
@@ -46,6 +50,23 @@ class SessionSpec extends SparkSpec {
     val at = layout.indexOf(pid)
     assert(at > layout.indexOf("def partitionBounds") && at == layout.lastIndexOf(pid),
       "spark_partition_id() may appear only in Layout.partitionBounds")
+  }
+
+  test("one banded-LSH kernel: banding, bucket self-join and verify appear once, in Dedup") {
+    val needles = Seq(
+      "slice(col(\"sig\")" -> "MinHash band key",
+      "shiftrightunsigned(col(\"sig\")" -> "sign-bit band key",
+      "band_hash\") === col(" -> "band bucket self-join",
+      "sa.shingle\") === col(\"sb.shingle\")" -> "exact Jaccard verify",
+      "cosine(col(\"va\"), col(\"vb\"))" -> "exact cosine verify")
+    needles.foreach { case (needle, what) =>
+      val hits = mainSources.flatMap { case (f, text) =>
+        Iterator.iterate(text.indexOf(needle))(i => text.indexOf(needle, i + 1))
+          .takeWhile(_ >= 0).map(_ => f)
+      }
+      assert(hits === Seq("src/main/scala/graft/llm/Dedup.scala"),
+        s"$what must be written once, in Dedup's kernel; found in $hits")
+    }
   }
 
   test("the shared spec session carries Session's confs") {
